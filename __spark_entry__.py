@@ -4,6 +4,9 @@
 `queries()` — one callable per implemented operator (SURVEY.md §2 +
 the LLM-pipeline surface); each takes (spark, sf_dir) → DataFrame.
 `oracle_sql()` — DuckDB-runnable ANSI SQL twin per query.
+`bounded_oracle()` — numeric-tolerance twins for the HLL sketch queries.
+All three are views over ``_REGISTRY`` at the end of this file, which
+declares each query once, next to its oracle, in driver order.
 
 Float determinism contract (shared by every query/oracle pair):
 * all arithmetic in float64;
@@ -19,6 +22,7 @@ Float determinism contract (shared by every query/oracle pair):
 
 from __future__ import annotations
 
+import copy
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -9218,553 +9222,390 @@ FROM shr ORDER BY digit
 """
 
 
+def _acf_sql() -> str:
+    return _ACF_SQL_TMPL.format(
+        max_lag=_ACF_MAX_LAG,
+        q_acf=_quantize_sql(
+            "(CAST(n_pairs AS DOUBLE) * CAST(sxy AS DOUBLE)"
+            " - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))"
+            " / sqrt(CAST(n_pairs AS DOUBLE) * CAST(sxx AS DOUBLE)"
+            " - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))"
+            " / sqrt(CAST(n_pairs AS DOUBLE) * CAST(syy AS DOUBLE)"
+            " - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))",
+            6,
+        ),
+    )
+
+
+def _mad_sql() -> str:
+    return _MAD_SQL_TMPL.format(
+        k_num=7,
+        k_den=2,
+        q_score=_quantize_sql(
+            "CAST(2 AS DOUBLE) * CAST(d.dev2 AS DOUBLE)"
+            " / CAST(m.mad4 AS DOUBLE)",
+            6,
+        ),
+    )
+
+
+def _ccf_sql() -> str:
+    return _CCF_SQL_TMPL.format(
+        max_lag=_CCF_MAX_LAG,
+        q_ccf=_quantize_sql(
+            "(CAST(n_pairs AS DOUBLE) * CAST(sxy AS DOUBLE)"
+            " - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))"
+            " / sqrt(CAST(n_pairs AS DOUBLE) * CAST(sxx AS DOUBLE)"
+            " - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))"
+            " / sqrt(CAST(n_pairs AS DOUBLE) * CAST(syy AS DOUBLE)"
+            " - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))",
+            6,
+        ),
+    )
+
+
+# HyperLogLog sketch queries get bounded twins instead of SQL ones:
+# Spark's HLL++ register layout and DuckDB's approx_count_distinct are
+# different sketch implementations whose estimates differ by design,
+# so no value-hash twin can exist. See bounded_oracle() for the spec
+# format; exact twins (profile_events, ndv_rollup-style exact counts)
+# are hash-checked like every other query.
+_PCT_BOUNDS = ", ".join(
+    f"quantile_disc(value, {max(p - 0.02, 0.0)}) AS p{int(p * 100)}_lo, "
+    f"quantile_disc(value, {min(p + 0.02, 1.0)}) AS p{int(p * 100)}_hi"
+    for p in (0.5, 0.95, 0.99)
+)
+_APPROX_PROFILE_BOUNDED = {
+    "sql": f"""
+SELECT event_type, count(*) AS n_rows_exact,
+       count(DISTINCT user_id) AS distinct_exact,
+       {_PCT_BOUNDS}
+FROM events GROUP BY event_type
+""",
+    "keys": ["event_type"],
+    "exact": [("n_rows", "n_rows_exact")],
+    "rel": [("approx_distinct", "distinct_exact", 0.15)],
+    "array_between": [
+        (
+            "value_percentiles",
+            [
+                ("p50_lo", "p50_hi"),
+                ("p95_lo", "p95_hi"),
+                ("p99_lo", "p99_hi"),
+            ],
+        )
+    ],
+}
+_HLL_ROLLUP_BOUNDED = {
+    "sql": """
+SELECT event_type AS "group", count(*) AS n_rows_exact,
+       count(DISTINCT user_id) AS distinct_exact
+FROM events GROUP BY event_type
+UNION ALL
+SELECT '__all__', count(*), count(DISTINCT user_id) FROM events
+""",
+    "keys": ["group"],
+    "exact": [("n_rows", "n_rows_exact")],
+    "rel": [("approx_distinct", "distinct_exact", 0.05)],
+}
+
+#: The query registry: one ``(name, query, oracle)`` row per query, in
+#: driver order. ``oracle`` is the query's DuckDB twin — SQL text, a
+#: zero-argument builder of SQL text (run only by ``oracle_sql()``, so
+#: ``queries()`` stays cheap), or a ``bounded_oracle()`` spec dict.
+#: Approximate ops (MinHash, LSH/IVF/RP/PQ/SQ ANN, backoff LM) have
+#: FULL pipeline twins: portable md5 hashing and deterministic
+#: constants let DuckDB replay the whole candidate generation
+#: bit-identically.
+_REGISTRY = (
+    ("era5_hourly_spatial_mean", q_era5_hourly_spatial_mean, _ERA5_HOURLY_SQL),
+    ("pagerank_trade", q_pagerank, _pagerank_sql),
+    ("era5_daily_rollup", q_era5_daily_rollup, _ERA5_DAILY_SQL),
+    ("nb_language", q_nb_language, _NB_LANGUAGE_SQL),
+    ("era5_serve_filter_daily", q_era5_serve_filter_daily, _ERA5_FILTER_SQL),
+    ("era5_pivot", q_era5_pivot, _ERA5_PIVOT_SQL),
+    ("era5_kpis", q_era5_kpis, _ERA5_KPIS_SQL),
+    ("era5_verification", q_era5_verification, _ERA5_VERIF_SQL),
+    ("bpe_train", q_bpe_train, _bpe_train_sql),
+    ("era5_convert_units", q_era5_convert_units, _ERA5_CONVERT_SQL),
+    ("tpch_q1", q_tpch_q1, _Q1_SQL),
+    ("tpch_q3", q_tpch_q3, _Q3_SQL),
+    ("cdc_apply", q_cdc_apply, _CDC_APPLY_SQL),
+    ("bm25_search", q_bm25_search, _BM25_SQL),
+    ("join_semi", q_join_semi, _SEMI_SQL),
+    ("seasonal_decomp", q_seasonal_decomp, _SEASONAL_DECOMP_SQL),
+    ("scd2_history", q_scd2_history, _SCD2_SQL),
+    ("interval_join", q_interval_join, _INTERVAL_JOIN_SQL),
+    ("knn_sq", q_knn_sq, _knn_sq_sql),
+    ("semantic_dedup", q_semantic_dedup, _semantic_dedup_sql),
+    ("sessionize", q_sessionize, _SESSION_SQL),
+    ("set_intersect", q_set_intersect, _INTERSECT_SQL),
+    ("classifier_quality", q_classifier_quality, _classifier_quality_sql),
+    ("rollup_acctbal", q_rollup, _ROLLUP_SQL),
+    ("top10_orders", q_top10_orders, _TOP10_SQL),
+    ("quantile_sketch", q_quantile_sketch, _quantile_sketch_sql),
+    ("incremental_rollup", q_incremental_rollup, _INCREMENTAL_ROLLUP_SQL),
+    ("dedup_exact_docs", q_dedup_exact_docs, _DEDUP_DOCS_SQL),
+    ("pii_scan", q_pii_scan, _PII_SCAN_SQL),
+    ("pack_firstfit", q_pack_firstfit, _pack_firstfit_sql),
+    ("corpus_profile", q_corpus_profile, _CORPUS_PROFILE_SQL),
+    ("edit_linkage", q_edit_linkage, _EDIT_LINKAGE_SQL),
+    ("dense_ids_orders", q_dense_ids, _DENSE_IDS_SQL),
+    ("lm_backoff_ppl", q_lm_backoff_ppl, _lm_backoff_sql),
+    ("mad_events", q_mad, _mad_sql),
+    ("retention_cohorts", q_retention_cohorts, _RETENTION_SQL),
+    ("multimodal_meta", q_multimodal_meta, _MULTIMODAL_SQL),
+    ("minhash_neardup", q_minhash_neardup, _minhash_neardup_sql),
+    ("acf_events", q_acf, _acf_sql),
+    # --- registry-order note: the driver's correctness gate checks
+    # a PREFIX of this table (50 entries). The first 50 are PINNED
+    # (tests/test_registry.py::test_driver_prefix_is_pinned) — new
+    # queries append AFTER the prefix, never inside it, so gate
+    # visibility can't drift by accident. Rounds 5, 6 and 7 each
+    # DELIBERATELY rotated five slots so never-externally-verified
+    # queries gain CORRECTNESS rows (r5: kmeans_clusters,
+    # semantic_dedup, classifier_quality, pack_firstfit, bpe_train;
+    # r6: cdc_apply, scd2_history, interval_join, hybrid_search,
+    # incremental_rollup; r7: bm25_search, cms_frequencies,
+    # line_dedup, bpe_encode, retention_cohorts; r8:
+    # pagerank_trade, nb_language, knn_sq, edit_linkage,
+    # lm_backoff_ppl; r9: dbscan_embed, quantile_sketch,
+    # dense_ids_orders, holt_forecast, bfs_trade_hops; r10:
+    # ppr_trade, kcore_trade, sssp_trade, hw_forecast,
+    # clustering_coeff; r11: core_numbers_trade, lpa_communities,
+    # acf_events, mad_events, seasonal_decomp — displacing
+    # ppr_trade, kcore_trade, bfs_trade_hops, holt_forecast,
+    # dbscan_embed, each with a same-family prefix sibling:
+    # pagerank_trade, core_numbers_trade itself (full coreness
+    # subsumes k-core), sssp_trade, hw_forecast, lpa_communities).
+    # Displaced queries (r10: hybrid_search,
+    # substring_dedup, epoch_shuffle, sliding_window_rollup,
+    # trending_items — each leaving a same-family sibling in the
+    # prefix: bm25_search covers retrieval, dedup_exact_docs +
+    # minhash_neardup cover dedup, pack_firstfit covers shard
+    # export, stream_daily_rollup covers streaming; r9:
+    # kmeans_clusters, cms_frequencies, line_dedup,
+    # bpe_encode, knn_lsh; r8: era5_weighted_mean,
+    # era5_chain, window_topn, jaccard_pairs, simhash; r7: tpch_q5,
+    # dedup_exact_groups, containment_pairs,
+    # knn_bruteforce, embedding_norms) join the DISPLACED set in
+    # test_registry.py::test_displaced_query_oracle_parity with
+    # full Spark-vs-DuckDB hash parity in pytest; like every query,
+    # their two-engine hashes are recorded in the committed
+    # REGISTRY_VERIFY.json (scripts/registry_verify.py).
+    ("core_numbers_trade", q_core_numbers, _core_numbers_sql),
+    ("lpa_communities", q_lpa, _lpa_sql),
+    ("leakage_split", q_leakage_split, _LEAKAGE_SPLIT_SQL),
+    ("gopher_pipeline", q_gopher_pipeline, _gopher_pipeline_sql),
+    ("sssp_trade", q_sssp, _sssp_sql),
+    ("textrank_keywords", q_textrank, _TEXTRANK_SQL),
+    ("bloom_dedup", q_bloom_dedup, _BLOOM_DEDUP_SQL),
+    ("stream_daily_rollup", q_stream_daily_rollup, _STREAM_SQL),
+    ("hw_forecast", q_hw_forecast, _hw_sql),
+    ("clustering_coeff", q_clustering_coeff, _CLUSTERING_COEFF_SQL),
+    ("asof_attribution", q_asof_attribution, _ASOF_SQL),
+    # --- end of the 50-slot driver-gate prefix ---
+    ("hybrid_search", q_hybrid_search, _HYBRID_SQL),
+    ("substring_dedup", q_substring_dedup, _SUBSTR_DEDUP_SQL),
+    ("epoch_shuffle", q_epoch_shuffle, _EPOCH_SHUFFLE_SQL),
+    ("sliding_window_rollup", q_sliding_window_rollup, _SLIDING_SQL),
+    ("trending_items", q_trending, _TRENDING_SQL),
+    ("minhash_neardup_collapsed", q_minhash_neardup_collapsed,
+     _minhash_collapsed_sql),
+    ("tpch_q4", q_tpch_q4, _Q4_SQL),
+    ("join_broadcast", q_join_broadcast, _BROADCAST_SQL),
+    ("window_running_total", q_window_running_total, _RUNNING_SQL),
+    ("dup_cluster_histogram", q_dup_cluster_histogram, _DUP_HIST_SQL),
+    ("knn_ivf", q_knn_ivf, _knn_ivf_sql),
+    ("era5_distinct_regions", q_era5_distinct_regions, _ERA5_DISTINCT_SQL),
+    ("join_anti", q_join_anti, _ANTI_SQL),
+    ("window_lag", q_window_lag, _LAG_SQL),
+    ("set_except", q_set_except, _EXCEPT_SQL),
+    ("readability", q_readability, _READABILITY_SQL),
+    ("era5_filter_hourly", q_era5_filter_hourly, _ERA5_FILTER_HOURLY_SQL),
+    ("era5_water_balance", q_era5_water_balance, _ERA5_WATER_SQL),
+    ("window_rolling_7d", q_window_rolling_7d, _ROLLING_SQL),
+    ("tpch_q6", q_tpch_q6, _Q6_SQL),
+    ("cube_orders", q_cube_orders, _CUBE_SQL),
+    ("union_all_segments", q_union_all_segments, _UNION_SQL),
+    ("doc_fingerprints", q_doc_fingerprints, _lang_sql),
+    ("multimodal_features", q_multimodal_features, _MULTIMODAL_FEATURES_SQL),
+    ("tpch_q5", q_tpch_q5, _Q5_SQL),
+    ("dedup_exact_groups", q_dedup_exact_groups, _DEDUP_GROUPS_SQL),
+    ("containment_pairs", q_containment, _CONTAINMENT_SQL),
+    ("knn_bruteforce", q_knn_bruteforce, _KNN_SQL),
+    ("embedding_norms", q_embedding_norms, _NORMS_SQL),
+    ("salted_join", q_salted_join, _SALTED_SQL),
+    ("copurchase_pairs", q_copurchase, _COPURCHASE_SQL),
+    ("triangle_participation", q_triangles, _TRIANGLES_SQL),
+    ("association_rules", q_association_rules, _ASSOC_SQL),
+    ("rfm_segments", q_rfm_segments, _RFM_SQL),
+    ("revenue_gini", q_revenue_gini, _GINI_SQL),
+    ("qoq_growth", q_qoq_growth, _QOQ_SQL),
+    ("pareto_contribution", q_pareto, _PARETO_SQL),
+    ("bpe_token_stats", q_bpe_token_stats, _bpe_sql),
+    # embedding_neardup IS oracle-checkable despite LSH: identical
+    # vectors agree on every hyperplane sign, so recall on the
+    # planted exact duplicates is 1.0 by construction, and nothing
+    # else reaches the 0.9 threshold (max natural cosine ≈ 0.51).
+    ("embedding_neardup", q_embedding_neardup, _EMB_NEARDUP_SQL),
+    ("session_window_rollup", q_session_window_rollup, _SESSION_WINDOW_SQL),
+    ("tpch_q10", q_tpch_q10, _Q10_SQL),
+    ("tpch_q14", q_tpch_q14, _Q14_SQL),
+    ("tpch_q15", q_tpch_q15, _Q15_SQL),
+    ("tpch_q18", q_tpch_q18, _Q18_SQL),
+    ("tpch_q19", q_tpch_q19, _Q19_SQL),
+    ("tpch_q7", q_tpch_q7, _Q7_SQL),
+    ("tpch_q22", q_tpch_q22, _Q22_SQL),
+    ("tpch_q8", q_tpch_q8, _Q8_SQL),
+    ("tpch_q9", q_tpch_q9, _Q9_SQL),
+    ("tpch_q11", q_tpch_q11, _Q11_SQL),
+    ("tpch_q12", q_tpch_q12, _Q12_SQL),
+    ("tpch_q13", q_tpch_q13, _Q13_SQL),
+    ("tpch_q17", q_tpch_q17, _Q17_SQL),
+    ("tpch_q21", q_tpch_q21, _Q21_SQL),
+    ("tpch_q2", q_tpch_q2, _Q2_SQL),
+    ("tpch_q16", q_tpch_q16, _Q16_SQL),
+    ("tpch_q20", q_tpch_q20, _Q20_SQL),
+    ("grouping_sets", q_grouping_sets, _GROUPING_SETS_SQL),
+    ("unpivot_summary", q_unpivot_summary, _UNPIVOT_SQL),
+    ("percentiles", q_percentiles, _PERCENTILES_SQL),
+    ("gapfill_locf", q_gapfill_locf, _GAPFILL_SQL),
+    ("range_join_binned", q_range_join_binned, _RANGE_JOIN_SQL),
+    ("point_in_bbox", q_point_in_bbox, _POINT_BBOX_SQL),
+    ("quality_filter", q_quality_filter, _QUALITY_FILTER_SQL),
+    ("robust_outliers", q_robust_outliers, _OUTLIERS_SQL),
+    ("top_tokens", q_top_tokens, _TOP_TOKENS_SQL),
+    ("zipf_slope", q_zipf_slope, _ZIPF_SQL),
+    ("hapax_rate", q_hapax_rate, _HAPAX_SQL),
+    ("dedup_keep_best", q_dedup_keep_best, _KEEP_BEST_SQL),
+    ("json_props", q_json_props, _JSON_PROPS_SQL),
+    ("llm_pipeline", q_llm_pipeline, _llm_pipeline_sql),
+    ("value_histogram", q_value_histogram, _HISTOGRAM_SQL),
+    ("hash_split", q_hash_split, _HASH_SPLIT_SQL),
+    ("ema", q_ema, _EMA_SQL),
+    ("funnel", q_funnel, _FUNNEL_SQL),
+    ("neardup_clusters", q_neardup_clusters, _COMPONENTS_SQL),
+    ("mart_roundtrip", q_mart_roundtrip, _MART_ROUNDTRIP_SQL),
+    ("profile_lineitem", q_profile_lineitem, _profile_sql),
+    # HLL sketches: bounded twins, see bounded_oracle().
+    ("approx_profile_events", q_approx_profile_events,
+     _APPROX_PROFILE_BOUNDED),
+    ("hll_rollup", q_hll_rollup, _HLL_ROLLUP_BOUNDED),
+    ("text_cleaning", q_text_cleaning, _text_cleaning_sql),
+    ("sql_interface", q_sql_interface, _NATION_RANK_SQL),
+    ("tfidf_top_terms", q_tfidf_top_terms, _TFIDF_SQL),
+    ("bm25_indexed", q_bm25_indexed, _BM25_SQL),
+    ("stratified_sample", q_stratified_sample, _stratified_sql),
+    ("group_sample", q_group_sample, _GROUP_SAMPLE_SQL),
+    ("check_constraints", q_check_constraints, _CHECK_CONSTRAINTS_SQL),
+    ("k_anonymity", q_k_anonymity, _K_ANON_SQL),
+    ("referential_check", q_referential_check, _REF_CHECK_SQL),
+    ("event_transitions", q_event_transitions, _EVENT_TRANSITIONS_SQL),
+    ("contamination", q_contamination, _CONTAMINATION_SQL),
+    ("vocab_coverage", q_vocab_coverage, _VOCAB_COVERAGE_SQL),
+    ("rolling_zscore", q_rolling_zscore, _ROLLING_ZSCORE_SQL),
+    ("grouped_trend", q_grouped_trend, _GROUPED_TREND_SQL),
+    ("diurnal_anomaly", q_diurnal_anomaly, _DIURNAL_SQL),
+    ("seasonal_envelope", q_seasonal_envelope, _SEASONAL_SQL),
+    ("ship_sla", q_ship_sla, _SHIP_SLA_SQL),
+    ("correlation_matrix", q_correlation_matrix, _CORRELATION_SQL),
+    ("quantile_bins", q_quantile_bins, _QUANTILE_BINS_SQL),
+    ("lang_confusion", q_lang_confusion, _lang_confusion_sql),
+    ("weighted_sample", q_weighted_sample, _WEIGHTED_SAMPLE_SQL),
+    ("weighted_topk_sample", q_weighted_topk, _WEIGHTED_TOPK_SQL),
+    ("embedding_dim_stats", q_embedding_dim_stats, _EMBEDDING_DIM_STATS_SQL),
+    ("label_centroids", q_label_centroids, _LABEL_CENTROID_SQL),
+    ("cumulative_users", q_cumulative_users, _CUMULATIVE_USERS_SQL),
+    ("debounce", q_debounce, _DEBOUNCE_SQL),
+    ("curation_pipeline", q_curation_pipeline, _curation_sql),
+    ("winsorize", q_winsorize, _WINSORIZE_SQL),
+    ("impute_group_mean", q_impute_group_mean, _IMPUTE_SQL),
+    ("snapshot_diff", q_snapshot_diff, _SNAPSHOT_DIFF_SQL),
+    ("ab_test", q_ab_test, _AB_TEST_SQL),
+    ("token_entropy", q_token_entropy, _TOKEN_ENTROPY_SQL),
+    ("bpe_merge_step", q_bpe_merge_step, _BPE_MERGE_SQL),
+    ("lm_perplexity", q_lm_perplexity, _LM_PERPLEXITY_SQL),
+    ("blocklist_filter", q_blocklist_filter, _BLOCKLIST_SQL),
+    ("minhash_recall_floor", q_minhash_recall_floor, _MINHASH_RECALL_SQL),
+    ("mixture_sample", q_mixture_sample, _MIXTURE_SQL),
+    ("temperature_sample", q_temperature_sample, _TEMPERATURE_SQL),
+    ("preprocess_pipeline", q_preprocess_pipeline, _PREPROCESS_SQL),
+    ("chunk_documents", q_chunk_documents, _CHUNK_DOCS_SQL),
+    ("split_sentences", q_split_sentences, _SPLIT_SENT_SQL),
+    ("quality_floor", q_quality_floor, _QUALITY_FLOOR_SQL),
+    ("bigram_pmi", q_bigram_pmi, _BIGRAM_PMI_SQL),
+    ("corpus_report", q_corpus_report, _CORPUS_REPORT_SQL),
+    ("classifier_score", q_classifier_score, _CLASSIFIER_SCORE_SQL),
+    ("gopher_filter", q_gopher_filter, _gopher_sql),
+    ("shard_manifest", q_shard_manifest, _SHARD_MANIFEST_SQL),
+    ("repetition_filter", q_repetition_filter, _repetition_sql),
+    ("window_ranks", q_window_ranks, _WINDOW_RANKS_SQL),
+    ("key_skew", q_key_skew, _KEY_SKEW_SQL),
+    ("interval_overlap", q_interval_overlap, _INTERVAL_OVERLAP_SQL),
+    ("fuzzy_join", q_fuzzy_join, _FUZZY_JOIN_SQL),
+    ("cusum_changepoint", q_cusum_changepoint, _CUSUM_SQL),
+    ("seasonal_backtest", q_seasonal_backtest, _SEASONAL_BACKTEST_SQL),
+    ("dsir_scores", q_dsir_scores, _dsir_sql),
+    ("text_stats", q_text_stats, _TEXT_STATS_SQL),
+    ("pack_chunks", q_pack_chunks, _PACK_CHUNKS_SQL),
+    ("crosscorpus_dedup", q_crosscorpus_dedup, _CROSSCORPUS_SQL),
+    ("bloom_stats", q_bloom_stats, _BLOOM_STATS_SQL),
+    ("url_canonical", q_url_canonical, _url_canonical_sql),
+    ("domain_cap_sample", q_domain_cap_sample, _domain_cap_sql),
+    ("rp_project", q_rp_project, _rp_project_sql),
+    ("knn_rp", q_knn_rp, _knn_rp_sql),
+    ("pq_codes", q_pq_codes, _pq_codes_sql),
+    ("knn_pq", q_knn_pq, _knn_pq_sql),
+    ("knn_ivfpq", q_knn_ivfpq, _knn_ivfpq_sql),
+    ("sq_codes", q_sq_codes, _sq_codes_sql),
+    ("knn_lsh", q_knn_lsh, _knn_lsh_sql),
+    ("stream_click_attribution", q_stream_click_attribution,
+     _STREAM_CLICK_ATTRIBUTION_SQL),
+    ("line_dedup", q_line_dedup, _LINE_DEDUP_SQL),
+    ("cms_frequencies", q_cms_frequencies, _CMS_SQL),
+    ("bpe_encode", q_bpe_encode, _bpe_encode_sql),
+    # Iterative k-means, replayable since round 4: tol=0.0 pins the
+    # iteration count and quantize=6 rounds each centroid update above
+    # fold-order jitter, so the Lloyd loop unrolls into exact CTEs
+    # (_kmeans_cte_chain).
+    ("kmeans_clusters", q_kmeans_clusters, _kmeans_clusters_sql),
+    ("era5_weighted_mean", q_era5_weighted_mean, _ERA5_WEIGHTED_SQL),
+    ("era5_chain", q_era5_chain, _ERA5_CHAIN_SQL),
+    ("window_topn", q_window_topn, _TOPN_SQL),
+    ("jaccard_pairs", q_jaccard_pairs, _JACCARD_SQL),
+    ("simhash", q_simhash, _simhash_oracle),
+    # round-9 widening: graph-analytics depth + seasonal forecast
+    # (ppr/kcore/sssp/hw/clustering rotated INTO the prefix in r10)
+    ("linkpred_parts", q_linkpred, _LINKPRED_SQL),
+    # round-11 rotation: the five displaced prefix queries stay
+    # registered (oracle parity in test_registry.py) — each left a
+    # same-family sibling in the prefix: pagerank_trade covers
+    # ppr_trade, core_numbers subsumes kcore_trade, sssp_trade covers
+    # bfs_trade_hops, hw_forecast covers holt_forecast,
+    # lpa_communities + semantic_dedup/knn_sq cover dbscan_embed.
+    ("ppr_trade", q_ppr, _ppr_sql),
+    ("kcore_trade", q_kcore, _kcore_sql),
+    ("bfs_trade_hops", q_bfs_hops, _BFS_HOPS_SQL),
+    ("holt_forecast", q_holt_forecast, _holt_sql),
+    ("dbscan_embed", q_dbscan, _dbscan_sql),
+    # round-11 widening: CCF (lead/lag between two aligned series),
+    # global transitivity, Benford first-digit screen
+    ("ccf_events", q_ccf, _ccf_sql),
+    ("transitivity_trade", q_transitivity, _TRANSITIVITY_SQL),
+    ("benford_prices", q_benford, _benford_sql),
+)
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "era5_hourly_spatial_mean": q_era5_hourly_spatial_mean,
-        "pagerank_trade": q_pagerank,
-        "era5_daily_rollup": q_era5_daily_rollup,
-        "nb_language": q_nb_language,
-        "era5_serve_filter_daily": q_era5_serve_filter_daily,
-        "era5_pivot": q_era5_pivot,
-        "era5_kpis": q_era5_kpis,
-        "era5_verification": q_era5_verification,
-        "bpe_train": q_bpe_train,
-        "era5_convert_units": q_era5_convert_units,
-        "tpch_q1": q_tpch_q1,
-        "tpch_q3": q_tpch_q3,
-        "cdc_apply": q_cdc_apply,
-        "bm25_search": q_bm25_search,
-        "join_semi": q_join_semi,
-        "seasonal_decomp": q_seasonal_decomp,
-        "scd2_history": q_scd2_history,
-        "interval_join": q_interval_join,
-        "knn_sq": q_knn_sq,
-        "semantic_dedup": q_semantic_dedup,
-        "sessionize": q_sessionize,
-        "set_intersect": q_set_intersect,
-        "classifier_quality": q_classifier_quality,
-        "rollup_acctbal": q_rollup,
-        "top10_orders": q_top10_orders,
-        "quantile_sketch": q_quantile_sketch,
-        "incremental_rollup": q_incremental_rollup,
-        "dedup_exact_docs": q_dedup_exact_docs,
-        "pii_scan": q_pii_scan,
-        "pack_firstfit": q_pack_firstfit,
-        "corpus_profile": q_corpus_profile,
-        "edit_linkage": q_edit_linkage,
-        "dense_ids_orders": q_dense_ids,
-        "lm_backoff_ppl": q_lm_backoff_ppl,
-        "mad_events": q_mad,
-        "retention_cohorts": q_retention_cohorts,
-        "multimodal_meta": q_multimodal_meta,
-        "minhash_neardup": q_minhash_neardup,
-        "acf_events": q_acf,
-        # --- registry-order note: the driver's correctness gate checks
-        # a PREFIX of this dict (50 entries). The first 50 are PINNED
-        # (tests/test_registry.py::test_driver_prefix_is_pinned) — new
-        # queries append AFTER the prefix, never inside it, so gate
-        # visibility can't drift by accident. Rounds 5, 6 and 7 each
-        # DELIBERATELY rotated five slots so never-externally-verified
-        # queries gain CORRECTNESS rows (r5: kmeans_clusters,
-        # semantic_dedup, classifier_quality, pack_firstfit, bpe_train;
-        # r6: cdc_apply, scd2_history, interval_join, hybrid_search,
-        # incremental_rollup; r7: bm25_search, cms_frequencies,
-        # line_dedup, bpe_encode, retention_cohorts; r8:
-        # pagerank_trade, nb_language, knn_sq, edit_linkage,
-        # lm_backoff_ppl; r9: dbscan_embed, quantile_sketch,
-        # dense_ids_orders, holt_forecast, bfs_trade_hops; r10:
-        # ppr_trade, kcore_trade, sssp_trade, hw_forecast,
-        # clustering_coeff; r11: core_numbers_trade, lpa_communities,
-        # acf_events, mad_events, seasonal_decomp — displacing
-        # ppr_trade, kcore_trade, bfs_trade_hops, holt_forecast,
-        # dbscan_embed, each with a same-family prefix sibling:
-        # pagerank_trade, core_numbers_trade itself (full coreness
-        # subsumes k-core), sssp_trade, hw_forecast, lpa_communities).
-        # Displaced queries (r10: hybrid_search,
-        # substring_dedup, epoch_shuffle, sliding_window_rollup,
-        # trending_items — each leaving a same-family sibling in the
-        # prefix: bm25_search covers retrieval, dedup_exact_docs +
-        # minhash_neardup cover dedup, pack_firstfit covers shard
-        # export, stream_daily_rollup covers streaming; r9:
-        # kmeans_clusters, cms_frequencies, line_dedup,
-        # bpe_encode, knn_lsh; r8: era5_weighted_mean,
-        # era5_chain, window_topn, jaccard_pairs, simhash; r7: tpch_q5,
-        # dedup_exact_groups, containment_pairs,
-        # knn_bruteforce, embedding_norms) join the DISPLACED set in
-        # test_registry.py::test_displaced_query_oracle_parity with
-        # full Spark-vs-DuckDB hash parity in pytest, and their
-        # two-engine hashes are recorded in the committed
-        # DISPLACED_VERIFY.json artifact (scripts/displaced_verify.py).
-        "core_numbers_trade": q_core_numbers,
-        "lpa_communities": q_lpa,
-        "leakage_split": q_leakage_split,
-        "gopher_pipeline": q_gopher_pipeline,
-        "sssp_trade": q_sssp,
-        "textrank_keywords": q_textrank,
-        "bloom_dedup": q_bloom_dedup,
-        "stream_daily_rollup": q_stream_daily_rollup,
-        "hw_forecast": q_hw_forecast,
-        "clustering_coeff": q_clustering_coeff,
-        "asof_attribution": q_asof_attribution,
-        # --- end of the 50-slot driver-gate prefix ---
-        "hybrid_search": q_hybrid_search,
-        "substring_dedup": q_substring_dedup,
-        "epoch_shuffle": q_epoch_shuffle,
-        "sliding_window_rollup": q_sliding_window_rollup,
-        "trending_items": q_trending,
-        "minhash_neardup_collapsed": q_minhash_neardup_collapsed,
-        "tpch_q4": q_tpch_q4,
-        "join_broadcast": q_join_broadcast,
-        "window_running_total": q_window_running_total,
-        "dup_cluster_histogram": q_dup_cluster_histogram,
-        "knn_ivf": q_knn_ivf,
-        "era5_distinct_regions": q_era5_distinct_regions,
-        "join_anti": q_join_anti,
-        "window_lag": q_window_lag,
-        "set_except": q_set_except,
-        "readability": q_readability,
-        "era5_filter_hourly": q_era5_filter_hourly,
-        "era5_water_balance": q_era5_water_balance,
-        "window_rolling_7d": q_window_rolling_7d,
-        "tpch_q6": q_tpch_q6,
-        "cube_orders": q_cube_orders,
-        "union_all_segments": q_union_all_segments,
-        "doc_fingerprints": q_doc_fingerprints,
-        "multimodal_features": q_multimodal_features,
-        "tpch_q5": q_tpch_q5,
-        "dedup_exact_groups": q_dedup_exact_groups,
-        "containment_pairs": q_containment,
-        "knn_bruteforce": q_knn_bruteforce,
-        "embedding_norms": q_embedding_norms,
-        "salted_join": q_salted_join,
-        "copurchase_pairs": q_copurchase,
-        "triangle_participation": q_triangles,
-        "association_rules": q_association_rules,
-        "rfm_segments": q_rfm_segments,
-        "revenue_gini": q_revenue_gini,
-        "qoq_growth": q_qoq_growth,
-        "pareto_contribution": q_pareto,
-        "bpe_token_stats": q_bpe_token_stats,
-        "embedding_neardup": q_embedding_neardup,
-        "session_window_rollup": q_session_window_rollup,
-        "tpch_q10": q_tpch_q10,
-        "tpch_q14": q_tpch_q14,
-        "tpch_q15": q_tpch_q15,
-        "tpch_q18": q_tpch_q18,
-        "tpch_q19": q_tpch_q19,
-        "tpch_q7": q_tpch_q7,
-        "tpch_q22": q_tpch_q22,
-        "tpch_q8": q_tpch_q8,
-        "tpch_q9": q_tpch_q9,
-        "tpch_q11": q_tpch_q11,
-        "tpch_q12": q_tpch_q12,
-        "tpch_q13": q_tpch_q13,
-        "tpch_q17": q_tpch_q17,
-        "tpch_q21": q_tpch_q21,
-        "tpch_q2": q_tpch_q2,
-        "tpch_q16": q_tpch_q16,
-        "tpch_q20": q_tpch_q20,
-        "grouping_sets": q_grouping_sets,
-        "unpivot_summary": q_unpivot_summary,
-        "percentiles": q_percentiles,
-        "gapfill_locf": q_gapfill_locf,
-        "range_join_binned": q_range_join_binned,
-        "point_in_bbox": q_point_in_bbox,
-        "quality_filter": q_quality_filter,
-        "robust_outliers": q_robust_outliers,
-        "top_tokens": q_top_tokens,
-        "zipf_slope": q_zipf_slope,
-        "hapax_rate": q_hapax_rate,
-        "dedup_keep_best": q_dedup_keep_best,
-        "json_props": q_json_props,
-        "llm_pipeline": q_llm_pipeline,
-        "value_histogram": q_value_histogram,
-        "hash_split": q_hash_split,
-        "ema": q_ema,
-        "funnel": q_funnel,
-        "neardup_clusters": q_neardup_clusters,
-        "mart_roundtrip": q_mart_roundtrip,
-        "profile_lineitem": q_profile_lineitem,
-        "approx_profile_events": q_approx_profile_events,
-        "hll_rollup": q_hll_rollup,
-        "text_cleaning": q_text_cleaning,
-        "sql_interface": q_sql_interface,
-        "tfidf_top_terms": q_tfidf_top_terms,
-        "bm25_indexed": q_bm25_indexed,
-        "stratified_sample": q_stratified_sample,
-        "group_sample": q_group_sample,
-        "check_constraints": q_check_constraints,
-        "k_anonymity": q_k_anonymity,
-        "referential_check": q_referential_check,
-        "event_transitions": q_event_transitions,
-        "contamination": q_contamination,
-        "vocab_coverage": q_vocab_coverage,
-        "rolling_zscore": q_rolling_zscore,
-        "grouped_trend": q_grouped_trend,
-        "diurnal_anomaly": q_diurnal_anomaly,
-        "seasonal_envelope": q_seasonal_envelope,
-        "ship_sla": q_ship_sla,
-        "correlation_matrix": q_correlation_matrix,
-        "quantile_bins": q_quantile_bins,
-        "lang_confusion": q_lang_confusion,
-        "weighted_sample": q_weighted_sample,
-        "weighted_topk_sample": q_weighted_topk,
-        "embedding_dim_stats": q_embedding_dim_stats,
-        "label_centroids": q_label_centroids,
-        "cumulative_users": q_cumulative_users,
-        "debounce": q_debounce,
-        "curation_pipeline": q_curation_pipeline,
-        "winsorize": q_winsorize,
-        "impute_group_mean": q_impute_group_mean,
-        "snapshot_diff": q_snapshot_diff,
-        "ab_test": q_ab_test,
-        "token_entropy": q_token_entropy,
-        "bpe_merge_step": q_bpe_merge_step,
-        "lm_perplexity": q_lm_perplexity,
-        "blocklist_filter": q_blocklist_filter,
-        "minhash_recall_floor": q_minhash_recall_floor,
-        "mixture_sample": q_mixture_sample,
-        "temperature_sample": q_temperature_sample,
-        "preprocess_pipeline": q_preprocess_pipeline,
-        "chunk_documents": q_chunk_documents,
-        "split_sentences": q_split_sentences,
-        "quality_floor": q_quality_floor,
-        "bigram_pmi": q_bigram_pmi,
-        "corpus_report": q_corpus_report,
-        "classifier_score": q_classifier_score,
-        "gopher_filter": q_gopher_filter,
-        "shard_manifest": q_shard_manifest,
-        "repetition_filter": q_repetition_filter,
-        "window_ranks": q_window_ranks,
-        "key_skew": q_key_skew,
-        "interval_overlap": q_interval_overlap,
-        "fuzzy_join": q_fuzzy_join,
-        "cusum_changepoint": q_cusum_changepoint,
-        "seasonal_backtest": q_seasonal_backtest,
-        "dsir_scores": q_dsir_scores,
-        "text_stats": q_text_stats,
-        "pack_chunks": q_pack_chunks,
-        "crosscorpus_dedup": q_crosscorpus_dedup,
-        "bloom_stats": q_bloom_stats,
-        "url_canonical": q_url_canonical,
-        "domain_cap_sample": q_domain_cap_sample,
-        "rp_project": q_rp_project,
-        "knn_rp": q_knn_rp,
-        "pq_codes": q_pq_codes,
-        "knn_pq": q_knn_pq,
-        "knn_ivfpq": q_knn_ivfpq,
-        "sq_codes": q_sq_codes,
-        "knn_lsh": q_knn_lsh,
-        "stream_click_attribution": q_stream_click_attribution,
-        "line_dedup": q_line_dedup,
-        "cms_frequencies": q_cms_frequencies,
-        "bpe_encode": q_bpe_encode,
-        "kmeans_clusters": q_kmeans_clusters,
-        "era5_weighted_mean": q_era5_weighted_mean,
-        "era5_chain": q_era5_chain,
-        "window_topn": q_window_topn,
-        "jaccard_pairs": q_jaccard_pairs,
-        "simhash": q_simhash,
-        # round-9 widening: graph-analytics depth + seasonal forecast
-        # (ppr/kcore/sssp/hw/clustering rotated INTO the prefix in r10)
-        "linkpred_parts": q_linkpred,
-        # round-11 rotation: the five displaced prefix queries stay
-        # registered (oracle parity in test_registry.py + the committed
-        # DISPLACED_VERIFY.json) — each left a same-family sibling in
-        # the prefix: pagerank_trade covers ppr_trade, core_numbers
-        # subsumes kcore_trade, sssp_trade covers bfs_trade_hops,
-        # hw_forecast covers holt_forecast, lpa_communities +
-        # semantic_dedup/knn_sq cover dbscan_embed.
-        "ppr_trade": q_ppr,
-        "kcore_trade": q_kcore,
-        "bfs_trade_hops": q_bfs_hops,
-        "holt_forecast": q_holt_forecast,
-        "dbscan_embed": q_dbscan,
-        # round-11 widening: CCF (lead/lag between two aligned series),
-        # global transitivity, Benford first-digit screen
-        "ccf_events": q_ccf,
-        "transitivity_trade": q_transitivity,
-        "benford_prices": q_benford,
-    }
+    return {name: query for name, query, _ in _REGISTRY}
 
 
 def oracle_sql() -> dict[str, str]:
     return {
-        "era5_hourly_spatial_mean": _ERA5_HOURLY_SQL,
-        "era5_weighted_mean": _ERA5_WEIGHTED_SQL,
-        "era5_daily_rollup": _ERA5_DAILY_SQL,
-        "era5_chain": _ERA5_CHAIN_SQL,
-        "era5_serve_filter_daily": _ERA5_FILTER_SQL,
-        "era5_pivot": _ERA5_PIVOT_SQL,
-        "era5_kpis": _ERA5_KPIS_SQL,
-        "era5_verification": _ERA5_VERIF_SQL,
-        "era5_distinct_regions": _ERA5_DISTINCT_SQL,
-        "era5_convert_units": _ERA5_CONVERT_SQL,
-        "tpch_q1": _Q1_SQL,
-        "tpch_q3": _Q3_SQL,
-        "tpch_q4": _Q4_SQL,
-        "tpch_q5": _Q5_SQL,
-        "join_semi": _SEMI_SQL,
-        "join_anti": _ANTI_SQL,
-        "join_broadcast": _BROADCAST_SQL,
-        "window_running_total": _RUNNING_SQL,
-        "window_topn": _TOPN_SQL,
-        "window_lag": _LAG_SQL,
-        "sessionize": _SESSION_SQL,
-        "set_intersect": _INTERSECT_SQL,
-        "set_except": _EXCEPT_SQL,
-        "rollup_acctbal": _ROLLUP_SQL,
-        "top10_orders": _TOP10_SQL,
-        "dedup_exact_groups": _DEDUP_GROUPS_SQL,
-        "dup_cluster_histogram": _DUP_HIST_SQL,
-        "dedup_exact_docs": _DEDUP_DOCS_SQL,
-        "text_stats": _TEXT_STATS_SQL,
-        "readability": _READABILITY_SQL,
-        "corpus_profile": _CORPUS_PROFILE_SQL,
-        "jaccard_pairs": _JACCARD_SQL,
-        "containment_pairs": _CONTAINMENT_SQL,
-        "simhash": _simhash_oracle(),
-        "knn_bruteforce": _KNN_SQL,
-        "embedding_norms": _NORMS_SQL,
-        "multimodal_meta": _MULTIMODAL_SQL,
-        "era5_filter_hourly": _ERA5_FILTER_HOURLY_SQL,
-        "era5_water_balance": _ERA5_WATER_SQL,
-        "window_rolling_7d": _ROLLING_SQL,
-        "tpch_q6": _Q6_SQL,
-        "cube_orders": _CUBE_SQL,
-        "union_all_segments": _UNION_SQL,
-        "doc_fingerprints": _lang_sql(),
-        "stream_daily_rollup": _STREAM_SQL,
-        "sliding_window_rollup": _SLIDING_SQL,
-        "trending_items": _TRENDING_SQL,
-        "multimodal_features": _MULTIMODAL_FEATURES_SQL,
-        "asof_attribution": _ASOF_SQL,
-        "salted_join": _SALTED_SQL,
-        "copurchase_pairs": _COPURCHASE_SQL,
-        "triangle_participation": _TRIANGLES_SQL,
-        "association_rules": _ASSOC_SQL,
-        "rfm_segments": _RFM_SQL,
-        "revenue_gini": _GINI_SQL,
-        "qoq_growth": _QOQ_SQL,
-        "pareto_contribution": _PARETO_SQL,
-        "bpe_token_stats": _bpe_sql(),
-        # embedding_neardup IS oracle-checkable despite LSH: identical
-        # vectors agree on every hyperplane sign, so recall on the
-        # planted exact duplicates is 1.0 by construction, and nothing
-        # else reaches the 0.9 threshold (max natural cosine ≈ 0.51).
-        "embedding_neardup": _EMB_NEARDUP_SQL,
-        "session_window_rollup": _SESSION_WINDOW_SQL,
-        "tpch_q10": _Q10_SQL,
-        "tpch_q14": _Q14_SQL,
-        "tpch_q15": _Q15_SQL,
-        "tpch_q18": _Q18_SQL,
-        "tpch_q19": _Q19_SQL,
-        "tpch_q7": _Q7_SQL,
-        "tpch_q22": _Q22_SQL,
-        "tpch_q8": _Q8_SQL,
-        "tpch_q9": _Q9_SQL,
-        "tpch_q11": _Q11_SQL,
-        "tpch_q12": _Q12_SQL,
-        "tpch_q13": _Q13_SQL,
-        "tpch_q17": _Q17_SQL,
-        "tpch_q21": _Q21_SQL,
-        "tpch_q2": _Q2_SQL,
-        "tpch_q16": _Q16_SQL,
-        "tpch_q20": _Q20_SQL,
-        "grouping_sets": _GROUPING_SETS_SQL,
-        "unpivot_summary": _UNPIVOT_SQL,
-        "percentiles": _PERCENTILES_SQL,
-        "gapfill_locf": _GAPFILL_SQL,
-        "range_join_binned": _RANGE_JOIN_SQL,
-        "point_in_bbox": _POINT_BBOX_SQL,
-        "quality_filter": _QUALITY_FILTER_SQL,
-        "robust_outliers": _OUTLIERS_SQL,
-        "top_tokens": _TOP_TOKENS_SQL,
-        "zipf_slope": _ZIPF_SQL,
-        "hapax_rate": _HAPAX_SQL,
-        "dedup_keep_best": _KEEP_BEST_SQL,
-        "json_props": _JSON_PROPS_SQL,
-        "llm_pipeline": _llm_pipeline_sql(),
-        "value_histogram": _HISTOGRAM_SQL,
-        "hash_split": _HASH_SPLIT_SQL,
-        "epoch_shuffle": _EPOCH_SHUFFLE_SQL,
-        "ema": _EMA_SQL,
-        "retention_cohorts": _RETENTION_SQL,
-        "funnel": _FUNNEL_SQL,
-        "neardup_clusters": _COMPONENTS_SQL,
-        "mart_roundtrip": _MART_ROUNDTRIP_SQL,
-        "profile_lineitem": _profile_sql(),
-        "text_cleaning": _text_cleaning_sql(),
-        "interval_join": _INTERVAL_JOIN_SQL,
-        "sql_interface": _NATION_RANK_SQL,
-        "tfidf_top_terms": _TFIDF_SQL,
-        "bm25_search": _BM25_SQL,
-        "bm25_indexed": _BM25_SQL,
-        "substring_dedup": _SUBSTR_DEDUP_SQL,
-        "stratified_sample": _stratified_sql(),
-        "group_sample": _GROUP_SAMPLE_SQL,
-        "check_constraints": _CHECK_CONSTRAINTS_SQL,
-        "k_anonymity": _K_ANON_SQL,
-        "referential_check": _REF_CHECK_SQL,
-        "event_transitions": _EVENT_TRANSITIONS_SQL,
-        "contamination": _CONTAMINATION_SQL,
-        "vocab_coverage": _VOCAB_COVERAGE_SQL,
-        "rolling_zscore": _ROLLING_ZSCORE_SQL,
-        "grouped_trend": _GROUPED_TREND_SQL,
-        "diurnal_anomaly": _DIURNAL_SQL,
-        "seasonal_envelope": _SEASONAL_SQL,
-        "ship_sla": _SHIP_SLA_SQL,
-        "correlation_matrix": _CORRELATION_SQL,
-        "quantile_bins": _QUANTILE_BINS_SQL,
-        "lang_confusion": _lang_confusion_sql(),
-        "weighted_sample": _WEIGHTED_SAMPLE_SQL,
-        "weighted_topk_sample": _WEIGHTED_TOPK_SQL,
-        "embedding_dim_stats": _EMBEDDING_DIM_STATS_SQL,
-        "label_centroids": _LABEL_CENTROID_SQL,
-        "cdc_apply": _CDC_APPLY_SQL,
-        "scd2_history": _SCD2_SQL,
-        "cumulative_users": _CUMULATIVE_USERS_SQL,
-        "debounce": _DEBOUNCE_SQL,
-        "curation_pipeline": _curation_sql(),
-        "winsorize": _WINSORIZE_SQL,
-        "impute_group_mean": _IMPUTE_SQL,
-        "snapshot_diff": _SNAPSHOT_DIFF_SQL,
-        "ab_test": _AB_TEST_SQL,
-        "token_entropy": _TOKEN_ENTROPY_SQL,
-        "bpe_merge_step": _BPE_MERGE_SQL,
-        "lm_perplexity": _LM_PERPLEXITY_SQL,
-        "line_dedup": _LINE_DEDUP_SQL,
-        "blocklist_filter": _BLOCKLIST_SQL,
-        "pack_chunks": _PACK_CHUNKS_SQL,
-        "minhash_recall_floor": _MINHASH_RECALL_SQL,
-        "mixture_sample": _MIXTURE_SQL,
-        "temperature_sample": _TEMPERATURE_SQL,
-        "preprocess_pipeline": _PREPROCESS_SQL,
-        "chunk_documents": _CHUNK_DOCS_SQL,
-        "split_sentences": _SPLIT_SENT_SQL,
-        "crosscorpus_dedup": _CROSSCORPUS_SQL,
-        "quality_floor": _QUALITY_FLOOR_SQL,
-        "bigram_pmi": _BIGRAM_PMI_SQL,
-        "textrank_keywords": _TEXTRANK_SQL,
-        "corpus_report": _CORPUS_REPORT_SQL,
-        "classifier_score": _CLASSIFIER_SCORE_SQL,
-        "gopher_filter": _gopher_sql(),
-        "shard_manifest": _SHARD_MANIFEST_SQL,
-        "repetition_filter": _repetition_sql(),
-        "window_ranks": _WINDOW_RANKS_SQL,
-        "key_skew": _KEY_SKEW_SQL,
-        "interval_overlap": _INTERVAL_OVERLAP_SQL,
-        "fuzzy_join": _FUZZY_JOIN_SQL,
-        "gopher_pipeline": _gopher_pipeline_sql(),
-        "cusum_changepoint": _CUSUM_SQL,
-        "seasonal_backtest": _SEASONAL_BACKTEST_SQL,
-        "dsir_scores": _dsir_sql(),
-        "bloom_dedup": _BLOOM_DEDUP_SQL,
-        "pii_scan": _PII_SCAN_SQL,
-        "bloom_stats": _BLOOM_STATS_SQL,
-        "cms_frequencies": _CMS_SQL,
-        "leakage_split": _LEAKAGE_SPLIT_SQL,
-        "incremental_rollup": _INCREMENTAL_ROLLUP_SQL,
-        "hybrid_search": _HYBRID_SQL,
-        # Approximate ops with FULL pipeline twins (portable md5
-        # hashing / deterministic constants — DuckDB replays the
-        # whole candidate generation bit-identically):
-        "minhash_neardup": _minhash_neardup_sql(),
-        "minhash_neardup_collapsed": _minhash_collapsed_sql(),
-        "knn_lsh": _knn_lsh_sql(),
-        "knn_ivf": _knn_ivf_sql(),
-        "knn_rp": _knn_rp_sql(),
-        "knn_pq": _knn_pq_sql(),
-        "knn_ivfpq": _knn_ivfpq_sql(),
-        "lm_backoff_ppl": _lm_backoff_sql(),
-        "edit_linkage": _EDIT_LINKAGE_SQL,
-        "pagerank_trade": _pagerank_sql(),
-        "sq_codes": _sq_codes_sql(),
-        "knn_sq": _knn_sq_sql(),
-        "nb_language": _NB_LANGUAGE_SQL,
-        "bfs_trade_hops": _BFS_HOPS_SQL,
-        "stream_click_attribution": _STREAM_CLICK_ATTRIBUTION_SQL,
-        "dense_ids_orders": _DENSE_IDS_SQL,
-        "quantile_sketch": _quantile_sketch_sql(),
-        "holt_forecast": _holt_sql(),
-        "dbscan_embed": _dbscan_sql(),
-        # round-9 widening
-        "ppr_trade": _ppr_sql(),
-        "kcore_trade": _kcore_sql(),
-        "sssp_trade": _sssp_sql(),
-        "clustering_coeff": _CLUSTERING_COEFF_SQL,
-        "hw_forecast": _hw_sql(),
-        "linkpred_parts": _LINKPRED_SQL,
-        "seasonal_decomp": _SEASONAL_DECOMP_SQL,
-        "core_numbers_trade": _core_numbers_sql(),
-        "lpa_communities": _lpa_sql(),
-        "acf_events": _ACF_SQL_TMPL.format(
-            max_lag=_ACF_MAX_LAG,
-            q_acf=_quantize_sql(
-                "(CAST(n_pairs AS DOUBLE) * CAST(sxy AS DOUBLE)"
-                " - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))"
-                " / sqrt(CAST(n_pairs AS DOUBLE) * CAST(sxx AS DOUBLE)"
-                " - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))"
-                " / sqrt(CAST(n_pairs AS DOUBLE) * CAST(syy AS DOUBLE)"
-                " - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))",
-                6,
-            ),
-        ),
-        "mad_events": _MAD_SQL_TMPL.format(
-            k_num=7,
-            k_den=2,
-            q_score=_quantize_sql(
-                "CAST(2 AS DOUBLE) * CAST(d.dev2 AS DOUBLE)"
-                " / CAST(m.mad4 AS DOUBLE)",
-                6,
-            ),
-        ),
-        "ccf_events": _CCF_SQL_TMPL.format(
-            max_lag=_CCF_MAX_LAG,
-            q_ccf=_quantize_sql(
-                "(CAST(n_pairs AS DOUBLE) * CAST(sxy AS DOUBLE)"
-                " - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))"
-                " / sqrt(CAST(n_pairs AS DOUBLE) * CAST(sxx AS DOUBLE)"
-                " - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))"
-                " / sqrt(CAST(n_pairs AS DOUBLE) * CAST(syy AS DOUBLE)"
-                " - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))",
-                6,
-            ),
-        ),
-        "transitivity_trade": _TRANSITIVITY_SQL,
-        "benford_prices": _benford_sql(),
-        "pq_codes": _pq_codes_sql(),
-        "rp_project": _rp_project_sql(),
-        "url_canonical": _url_canonical_sql(),
-        "domain_cap_sample": _domain_cap_sql(),
-        # Iterative k-means, replayable since round 4: tol=0.0 pins
-        # the iteration count and quantize=6 rounds each centroid
-        # update above fold-order jitter, so the Lloyd loop unrolls
-        # into exact CTEs (_kmeans_cte_chain):
-        "kmeans_clusters": _kmeans_clusters_sql(),
-        "semantic_dedup": _semantic_dedup_sql(),
-        "classifier_quality": _classifier_quality_sql(),
-        "pack_firstfit": _pack_firstfit_sql(),
-        "bpe_train": _bpe_train_sql(),
-        "bpe_encode": _bpe_encode_sql(),
-        # ------------------------------------------------------------------
-        # Deliberately rows-only — non-SQL-expressible for a stated
-        # reason (the driver records a weaker rows-only check):
-        # * approx_profile_events / hll_rollup: HyperLogLog sketches.
-        #   Spark's HLL++ register layout and DuckDB's approx_count_
-        #   distinct are different sketch implementations; their
-        #   estimates differ by design, so no value-hash twin can
-        #   exist. They are NOT unchecked, though: ``bounded_oracle()``
-        #   gives each an exact-computation DuckDB twin with numeric
-        #   tolerances (counts exact, sketch estimates within the
-        #   published error bound, percentile values inside a ±2% rank
-        #   window) which scripts/selfcheck.py enforces as PASS(bound).
-        #   Exact twins (profile_events, ndv_rollup-style exact
-        #   counts) are oracle-checked above.
-        # (bpe_train / bpe_encode graduated to full hash oracles in
-        # rounds 4-5 — the merge loop unrolls into CTEs and the encode
-        # loop is a recursive CTE — so the sketches are the only
-        # remaining rows-only entries.)
+        name: oracle() if callable(oracle) else oracle
+        for name, _, oracle in _REGISTRY
+        if not isinstance(oracle, dict)
     }
 
 
@@ -9781,44 +9622,10 @@ def bounded_oracle() -> dict[str, dict]:
     HLL++ rsd=0.05 -> 15%; Datasketches lg_k=12 (rsd ~1.6%) -> 5%;
     percentile_approx accuracy=10000 -> well inside a +/-2% rank
     window (bounds via quantile_disc so both sides are data values).
+    scripts/selfcheck.py enforces them as PASS(bound).
     """
-    pct_bounds = ", ".join(
-        f"quantile_disc(value, {max(p - 0.02, 0.0)}) AS p{int(p * 100)}_lo, "
-        f"quantile_disc(value, {min(p + 0.02, 1.0)}) AS p{int(p * 100)}_hi"
-        for p in (0.5, 0.95, 0.99)
-    )
     return {
-        "approx_profile_events": {
-            "sql": f"""
-SELECT event_type, count(*) AS n_rows_exact,
-       count(DISTINCT user_id) AS distinct_exact,
-       {pct_bounds}
-FROM events GROUP BY event_type
-""",
-            "keys": ["event_type"],
-            "exact": [("n_rows", "n_rows_exact")],
-            "rel": [("approx_distinct", "distinct_exact", 0.15)],
-            "array_between": [
-                (
-                    "value_percentiles",
-                    [
-                        ("p50_lo", "p50_hi"),
-                        ("p95_lo", "p95_hi"),
-                        ("p99_lo", "p99_hi"),
-                    ],
-                )
-            ],
-        },
-        "hll_rollup": {
-            "sql": """
-SELECT event_type AS "group", count(*) AS n_rows_exact,
-       count(DISTINCT user_id) AS distinct_exact
-FROM events GROUP BY event_type
-UNION ALL
-SELECT '__all__', count(*), count(DISTINCT user_id) FROM events
-""",
-            "keys": ["group"],
-            "exact": [("n_rows", "n_rows_exact")],
-            "rel": [("approx_distinct", "distinct_exact", 0.05)],
-        },
+        name: copy.deepcopy(oracle)
+        for name, _, oracle in _REGISTRY
+        if isinstance(oracle, dict)
     }

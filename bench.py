@@ -17,9 +17,11 @@ import os
 import sys
 import time
 
-import pandas as pd
+sys.path.insert(
+    0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "scripts")
+)
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+from selfcheck import reclaim, session, warmup  # noqa: E402
 
 #: Settled representative set (keep stable across rounds so BENCH_r{N}
 #: files compare): relational (Q1 scan-agg, Q3/Q10 joins, Q18 having),
@@ -50,32 +52,6 @@ HEADLINE = [
 #: numbers unusable (round-7's committed BENCH was ~1.9x inflated by a
 #: background load spike; untouched queries "regressed" uniformly).
 LOAD_WARN_THRESHOLD = 4.0
-
-
-def _reclaim(spark) -> None:
-    """Drop blocks left behind by the previous query's pins.
-
-    Same discipline as ``scripts/selfcheck.py:reclaim`` (round 10):
-    operators pin reused/iterative frames with localCheckpoint or
-    persist, and those blocks free only when the ContextCleaner sees
-    their RDDs garbage-collected on the driver. A 46-query bench in ONE
-    session otherwise accumulates every query's pinned blocks — the
-    committed r10 `knn_pq` row read 34.2 s purely from this pressure
-    (fresh-session re-measure: 4.7 s). One clearCache + Python GC + one
-    JVM GC between queries models a long-lived cluster session's own
-    reclaim cadence, which is the steady state the bench estimates.
-    """
-    import gc
-
-    try:
-        spark.catalog.clearCache()
-    except Exception:
-        pass
-    gc.collect()
-    try:
-        spark.sparkContext._jvm.System.gc()
-    except Exception:
-        pass
 
 
 def _cpu_snap() -> tuple[int, int]:
@@ -232,7 +208,6 @@ def _wait_for_quiet_host(max_wait_sec: float, poll_sec: float = 20.0) -> dict:
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     try:
         sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
     except ValueError:
@@ -244,100 +219,20 @@ def main() -> int:
     load_before = _host_load()
     cpu_calib = _cpu_calibration()
 
-    from big_data_in_agriculture_spark.session import get_spark
-
-    # Size shuffle partitions to the DATA, not the machine: ~8 MB of
-    # compressed parquet (~64 MB in-memory) per reduce task — the same
-    # rule a 100 TB deployment applies, which at bench scale stops
-    # paying launch overhead for reduce tasks with ~1 MB of input.
-    # Floor keeps local[cpus] parallel on tiny inputs; AQE still
-    # coalesces below the floor when a stage is smaller than that.
-    import glob as _glob
-
-    total_bytes = sum(
-        os.path.getsize(f) for f in _glob.glob(os.path.join(sf_dir, "*.parquet"))
-    )
-    shuffle_parts = int(max(8, min(2048, total_bytes // (8 << 20))))
-
-    # Size the driver heap like every other harness in the repo
-    # (selfcheck/registry_verify 6g, scale_probe 8g): in local mode the
-    # driver JVM IS the engine, and the PySpark default is 1 GiB. A
-    # 50-query session in 1 GiB degrades over time — the r12 re-anchor
-    # run (quiet host, external busy-cores ~0 throughout) still showed
-    # the session TAIL 20-60% slower than r11's tail (knn_sq 0.76→2.06 s,
-    # dbscan 5.1→7.6 s) purely from heap churn/GC pressure, exactly the
-    # within-session artifact class r10 diagnosed for knn_pq. 6 GiB is
-    # a measurement-environment fix, not a tuning win: every timed
-    # query still computes from parquet, and a real deployment never
-    # runs 32 cores against a 1 GiB executor heap.
-    spark = get_spark(
-        "bench",
-        master=f"local[{cpus}]",
-        shuffle_partitions=shuffle_parts,
-        extra_conf={"spark.driver.memory": "6g"},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session("bench", sf_dir)
+    cpus = spark.sparkContext.defaultParallelism
 
     import __spark_entry__ as entrymod
 
     qs = entrymod.queries()
+    warmup(spark, sf_dir)
 
-    # Warmup: spin executors + codegen on a small scan outside timing,
-    # and start the Python UDF workers (the Arrow-kernel queries —
-    # minhash, LSH — otherwise bill ~1.5 s of one-time worker spinup
-    # to whichever of them runs first). The second warmup exercises the
-    # ARRAY-returning Arrow path + generate (posexplode) + a local
-    # checkpoint — each loads its own JVM classes on first use
-    # (measured ~2 s billed to the first minhash-shaped query
-    # otherwise; per-query timings should reflect steady-state work,
-    # which is what a long-lived cluster session runs).
-    qs["tpch_q1"](spark, sf_dir).count()
-    from pyspark.sql.functions import col, pandas_udf, posexplode
-
-    @pandas_udf("long")
-    def _warm(s: pd.Series) -> pd.Series:
-        return s
-
-    spark.range(1000).select(_warm(col("id"))).count()
-
-    @pandas_udf("array<long>")
-    def _warm_arr(s: pd.Series) -> pd.Series:
-        return pd.Series([[int(x), int(x) + 1] for x in s])
-
-    (
-        spark.range(1000)
-        .select(posexplode(_warm_arr(col("id"))))
-        .localCheckpoint(eager=False)
-        .count()
-    )
-    # Third warmup: a 200-doc corpus through the inverted-index pair
-    # expansion — the interpreted array-combinator codegen (transform/
-    # slice/flatten over collected structs) JITs on first execution
-    # (~2-4x measured on the first doc-shaped query in a fresh JVM).
-    # Steady-state per-query cost is what extrapolates to a long-lived
-    # cluster session, so the one-time JIT belongs to warmup.
-    from big_data_in_agriculture_spark.operators.llm import jaccard_pairs
-    from pyspark.sql.functions import concat_ws, lit, sequence, transform
-
-    tiny = spark.range(200).select(
-        col("id").alias("doc_id"),
-        concat_ws(
-            " ",
-            transform(
-                sequence(lit(0), lit(20)),
-                lambda i: ((col("id") % 50) * 31 + i).cast("string"),
-            ),
-        ).alias("text"),
-    )
-    jaccard_pairs(tiny, threshold=0.5).count()
-
-    # Best of 2 executions per query: single-shot timings at this SF
+    # Best of 3 executions per query: single-shot timings at this SF
     # carry ±20% scheduler/GC noise that would read as cross-round
-    # regressions; the min of two runs is the standard steady-state
-    # estimator (each run still builds the full plan and materializes
-    # every output column — nothing is cached between runs).
+    # regressions; the min is the standard steady-state estimator
+    # (each run still builds the full plan and materializes every
+    # output column — nothing is cached between runs).
     runs_per_query = 3
-    timings: dict[str, float] = {}
     # Per-query contention stamps (round 11): the r10 headline drift
     # (+25-30% on 0.3-0.6 s queries) was unattributable after the fact
     # because load was stamped only before/after the whole run. Stamp
@@ -349,24 +244,32 @@ def main() -> int:
     # the headline section and shipped an environmental 0.843 geomean).
     busy_stamps: dict[str, float] = {}
     gate_waits: dict[str, float] = {}
-    for name in HEADLINE:
-        _reclaim(spark)
+
+    def quiet(name: str) -> None:
+        """Reclaim the previous query's pins and wait out external load,
+        both outside any timed window; stamp the load for ``name``."""
+        reclaim(spark)
         busy, waited = _wait_for_quiet_query()
         stamps[name] = round(os.getloadavg()[0], 2)
         busy_stamps[name] = round(busy, 2)
         if waited:
             gate_waits[name] = round(waited, 1)
+
+    def best_of_runs(name: str) -> float:
+        quiet(name)
         best = float("inf")
         for _ in range(runs_per_query):
             t0 = time.perf_counter()
-            df = qs[name](spark, sf_dir)
             # noop sink: consumes EVERY output column, so nothing
             # prunes. (count() would let Catalyst drop unreferenced
             # projections and even whole window operators — several
             # queries would measure a bare parquet scan.)
+            df = qs[name](spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
             best = min(best, time.perf_counter() - t0)
-        timings[name] = round(best, 3)
+        return round(best, 3)
+
+    timings = {name: best_of_runs(name) for name in HEADLINE}
 
     # Extended tier (separate section — HEADLINE keys stay stable for
     # cross-round comparison): streaming and heavy-text operators,
@@ -416,26 +319,9 @@ def main() -> int:
         "mad_events",
         "seasonal_decomp",
     ):
-        if name not in qs:
-            continue
-        _reclaim(spark)
-        busy, waited = _wait_for_quiet_query()
-        stamps[name] = round(os.getloadavg()[0], 2)
-        busy_stamps[name] = round(busy, 2)
-        if waited:
-            gate_waits[name] = round(waited, 1)
-        best = float("inf")
-        for _ in range(runs_per_query):
-            t0 = time.perf_counter()
-            qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        extended[name] = round(best, 3)
-    _reclaim(spark)
-    busy, waited = _wait_for_quiet_query()
-    stamps["stream_daily_rollup"] = round(os.getloadavg()[0], 2)
-    busy_stamps["stream_daily_rollup"] = round(busy, 2)
-    if waited:
-        gate_waits["stream_daily_rollup"] = round(waited, 1)
+        if name in qs:
+            extended[name] = best_of_runs(name)
+    quiet("stream_daily_rollup")
     extended["stream_daily_rollup"] = round(
         min(_time_stream(spark, sf_dir), _time_stream(spark, sf_dir)), 3
     )

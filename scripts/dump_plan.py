@@ -1,49 +1,31 @@
-"""Dump .explain("formatted") for named queries to plans/<dir>/<query>_<tag>.txt.
+"""Dump .explain("formatted") for named queries to <outdir>/<query>_<tag>.txt.
 
 Usage: python scripts/dump_plan.py <outdir> <tag> query [query ...]
 """
 
-import glob
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from selfcheck import session
 
 
 def main() -> int:
     outdir, tag, names = sys.argv[1], sys.argv[2], sys.argv[3:]
     os.makedirs(outdir, exist_ok=True)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    total_bytes = sum(
-        os.path.getsize(f) for f in glob.glob(os.path.join(sf_dir, "*.parquet"))
-    )
-    shuffle_parts = int(max(8, min(2048, total_bytes // (8 << 20))))
-
-    from big_data_in_agriculture_spark.session import get_spark
-
-    spark = get_spark(
-        "plans",
-        master=f"local[{cpus}]",
-        shuffle_partitions=shuffle_parts,
-        extra_conf={"spark.driver.memory": "6g"},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session("plans", sf_dir)
 
     import __spark_entry__ as entrymod
+    from big_data_in_agriculture_spark.plans.explain import formatted_plan
 
     qs = entrymod.queries()
     for name in names:
-        df = qs[name](spark, sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        plan = formatted_plan(qs[name](spark, sf_dir))
         path = os.path.join(outdir, f"{name}_{tag}.txt")
         with open(path, "w") as fh:
             fh.write(plan)
-        n_ex = plan.count("Exchange")
         print(
-            f"{name}: {path} ({n_ex} Exchange, "
+            f"{name}: {path} ({plan.count('Exchange')} Exchange, "
             f"{plan.count('SortMergeJoin')} SMJ, "
             f"{plan.count('BroadcastHashJoin')} BHJ)",
             file=sys.stderr,

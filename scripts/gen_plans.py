@@ -1,14 +1,9 @@
 """Regenerate PLANS.md from the live engine (plan-shape evidence)."""
-import sys; import os
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-from big_data_in_agriculture_spark.session import get_spark
-from big_data_in_agriculture_spark.plans import explain
-import __spark_entry__ as e
+import os
 
-spark = get_spark("plans", master="local[8]", shuffle_partitions=8)
-spark.sparkContext.setLogLevel("ERROR")
+from selfcheck import REPO, session
+
 SF = "/root/testdata/sf0.01"
-qs = e.queries()
 
 PICKS = [
     ("tpch_q5", "Star join: every dim broadcasts; at sf0.01 even orders fits under the 64 MB broadcast threshold, so no data-data shuffle appears at all — past the threshold the orders⋈lineitem join becomes sort-merge with AQE skew-split armed. Filters reach PushedFilters; scans prune to referenced columns."),
@@ -56,18 +51,29 @@ Geometric decay at ~the damping factor: pick iterations by the rank granularity 
     ("hw_forecast", "Additive Holt-Winters (round-9 op): ONE key-shuffle into collect_list, then the entire (l, b, s[7]) recurrence plus the 7-step forecast is a single codegen'd projection over the per-key array — no Python, no second exchange, series length bounds per-key memory (SCALE.md holt_10y_hourly: 88k-observation keys fold in-task)."),
 ]
 
-out = ["# PLANS — formatted physical plans of representative queries",
-       "",
-       "Generated from the live engine at sf0.01 (`python scripts/gen_plans.py`,",
-       "plans identical in shape at any SF — only statistics change).",
-       "Each plan is the evidence for a scale claim in SCALE.md.",
-       ""]
-for name, note in PICKS:
-    plan = explain.formatted_plan(qs[name](spark, SF))
-    # keep the tree part, trim the verbose detail section to first 40 lines
-    lines = plan.splitlines()
-    cut = next((i for i, l in enumerate(lines) if l.startswith("(1)")), len(lines))
-    tree = "\n".join(lines[:cut]).rstrip()
-    out += [f"## {name}", "", note, "", "```", tree, "```", ""]
-open("/root/repo/PLANS.md", "w").write("\n".join(out))
-print("wrote PLANS.md", len("\n".join(out)), "chars")
+def main() -> None:
+    import __spark_entry__ as e
+    from big_data_in_agriculture_spark.plans import explain
+
+    spark = session("plans", SF)
+    qs = e.queries()
+    out = ["# PLANS — formatted physical plans of representative queries",
+           "",
+           "Generated from the live engine at sf0.01 (`python scripts/gen_plans.py`,",
+           "plans identical in shape at any SF — only statistics change).",
+           "Each plan is the evidence for a scale claim in SCALE.md.",
+           ""]
+    for name, note in PICKS:
+        plan = explain.formatted_plan(qs[name](spark, SF))
+        # keep the tree part, trim the verbose detail section to first 40 lines
+        lines = plan.splitlines()
+        cut = next((i for i, l in enumerate(lines) if l.startswith("(1)")), len(lines))
+        tree = "\n".join(lines[:cut]).rstrip()
+        out += [f"## {name}", "", note, "", "```", tree, "```", ""]
+    with open(os.path.join(REPO, "PLANS.md"), "w") as fh:
+        fh.write("\n".join(out))
+    print("wrote PLANS.md", len("\n".join(out)), "chars")
+
+
+if __name__ == "__main__":
+    main()

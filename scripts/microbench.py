@@ -1,32 +1,17 @@
 """Focused per-query micro-bench: same methodology as bench.py (noop
-sink, min of N runs, per-query reclaim, 6g heap, shuffle partitions
-sized from the sf dir) but only for the named queries — the isolation
-tool behind OPTIMIZATION_r12.md's before/after rows.
+sink, min of N runs, per-query reclaim, the harness session and
+warmup from selfcheck.py) but only for the named queries — the
+isolation tool behind OPTIMIZATION_r12.md's before/after rows.
 
 Usage: python scripts/microbench.py [--runs N] query [query ...]
 """
 
-import glob
 import json
 import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-
-def reclaim(spark) -> None:
-    import gc
-
-    try:
-        spark.catalog.clearCache()
-    except Exception:
-        pass
-    gc.collect()
-    try:
-        spark.sparkContext._jvm.System.gc()
-    except Exception:
-        pass
+from selfcheck import reclaim, session, warmup
 
 
 def main() -> int:
@@ -36,65 +21,12 @@ def main() -> int:
         runs = int(args[1])
         args = args[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    total_bytes = sum(
-        os.path.getsize(f) for f in glob.glob(os.path.join(sf_dir, "*.parquet"))
-    )
-    shuffle_parts = int(max(8, min(2048, total_bytes // (8 << 20))))
-
-    from big_data_in_agriculture_spark.session import get_spark
-
-    spark = get_spark(
-        "microbench",
-        master=f"local[{cpus}]",
-        shuffle_partitions=shuffle_parts,
-        extra_conf={"spark.driver.memory": "6g"},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session("microbench", sf_dir)
+    warmup(spark, sf_dir)
 
     import __spark_entry__ as entrymod
 
     qs = entrymod.queries()
-    # same warmups as bench.py
-    qs["tpch_q1"](spark, sf_dir).count()
-    import pandas as pd
-    from pyspark.sql.functions import col, pandas_udf, posexplode
-
-    @pandas_udf("long")
-    def _warm(s: pd.Series) -> pd.Series:
-        return s
-
-    spark.range(1000).select(_warm(col("id"))).count()
-
-    @pandas_udf("array<long>")
-    def _warm_arr(s: pd.Series) -> pd.Series:
-        return pd.Series([[int(x), int(x) + 1] for x in s])
-
-    (
-        spark.range(1000)
-        .select(posexplode(_warm_arr(col("id"))))
-        .localCheckpoint(eager=False)
-        .count()
-    )
-    # 4th warmup (same as bench.py): the interpreted array-combinator
-    # codegen JITs on first execution — without it the first doc-shaped
-    # query in the session is 2-4x slow and the min is polluted.
-    from pyspark.sql.functions import concat_ws, lit, sequence, transform
-
-    from big_data_in_agriculture_spark.operators.llm import jaccard_pairs
-
-    tiny = spark.range(200).select(
-        col("id").alias("doc_id"),
-        concat_ws(
-            " ",
-            transform(
-                sequence(lit(0), lit(20)),
-                lambda i: ((col("id") % 50) * 31 + i).cast("string"),
-            ),
-        ).alias("text"),
-    )
-    jaccard_pairs(tiny, threshold=0.5).count()
-
     out: dict[str, list[float]] = {}
     for name in args:
         ts = []

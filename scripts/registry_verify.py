@@ -1,18 +1,15 @@
 """Snapshot two-engine hashes for EVERY registry query.
 
-``DISPLACED_VERIFY.json`` gave the prefix-displaced queries externally
-diffable verification; this generalizes it to the whole registry. For
-each ``queries()`` entry the artifact records, side by side, the Spark
-result hash and the DuckDB oracle hash (same canonicalization as the
-driver gate: row count, sorted column names, order-insensitive value
-hash). Queries with a ``bounded_oracle()`` spec instead record the
-Spark hash plus the bound-check outcome; the few genuinely
-oracle-free queries record the Spark hash and row count alone, and
-are labeled as such. The committed ``REGISTRY_VERIFY.json`` lets an
-external auditor (a) see that two independently computed hashes agree
-for every oracle-backed query — not just the driver's 50-slot prefix
-— and (b) re-run this script against the same sf dir and diff the
-file.
+For each ``queries()`` entry the artifact records, side by side, the
+Spark result hash and the DuckDB oracle hash (same canonicalization as
+the driver gate: row count, sorted column names, order-insensitive
+value hash). Queries with a ``bounded_oracle()`` spec instead record
+the Spark hash plus the bound-check outcome; a genuinely oracle-free
+query would record the Spark hash and row count alone, labeled as
+such. The committed ``REGISTRY_VERIFY.json`` lets an external auditor
+(a) see that two independently computed hashes agree for every
+oracle-backed query — not just the driver's 50-slot prefix — and (b)
+re-run this script against the same sf dir and diff the file.
 
 Usage:
   python scripts/registry_verify.py [sf_dir]            # full rebuild
@@ -26,10 +23,11 @@ driver's correctness scale).
 
 from __future__ import annotations
 
-import importlib.util
 import json
 import os
 import sys
+
+from selfcheck import REPO, session, sweep
 
 
 def main() -> int:
@@ -39,40 +37,11 @@ def main() -> int:
         else "/root/testdata/sf0.01"
     )
     only = set(sys.argv[2:])
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, repo)
-    out_path = os.path.join(repo, "REGISTRY_VERIFY.json")
-
-    import duckdb
+    out_path = os.path.join(REPO, "REGISTRY_VERIFY.json")
 
     import __spark_entry__ as entry
-    from big_data_in_agriculture_spark.session import get_spark
-
-    spec = importlib.util.spec_from_file_location(
-        "_selfcheck", os.path.join(repo, "scripts", "selfcheck.py")
-    )
-    sc = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(sc)
-
-    spark = get_spark(
-        "registry-verify", shuffle_partitions=8,
-        extra_conf={"spark.driver.memory": "6g"},  # selfcheck.py note
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    con = duckdb.connect()
-    for name in (
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ):
-        con.execute(
-            f"CREATE VIEW {name} AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/{name}.parquet')"
-        )
 
     qs = entry.queries()
-    oracles = entry.oracle_sql()
-    bounded = getattr(entry, "bounded_oracle", dict)()
-
     prior: dict[str, dict] = {}
     if only:
         if not os.path.exists(out_path):
@@ -94,71 +63,14 @@ def main() -> int:
 
     out: dict[str, dict] = dict(prior)
     ok = True
-    for name, fn in qs.items():
-        if only and name not in only:
-            continue
-        sc.reclaim(spark)  # free the previous query's pinned blocks
-        try:
-            sdf = fn(spark, sf_dir).toPandas()
-        except Exception as exc:  # noqa: BLE001 — recorded, run continues
-            out[name] = {"kind": "error", "err": f"spark raised: {exc}"}
-            print(f"FAIL  {name}: spark raised: {exc}")
-            ok = False
-            continue
-        sn, scols, shash = sc.canon(sdf)
-        if name in oracles:
-            try:
-                odf = con.execute(oracles[name]).fetchdf()
-            except Exception as exc:  # noqa: BLE001
-                out[name] = {"kind": "error", "err": f"oracle raised: {exc}"}
-                print(f"FAIL  {name}: oracle raised: {exc}")
-                ok = False
-                continue
-            on, ocols, ohash = sc.canon(odf)
-            match = (sn == on) and (scols == ocols) and (shash == ohash)
-            ok = ok and match
-            out[name] = {
-                "kind": "oracle",
-                "spark_rows": sn,
-                "oracle_rows": on,
-                "spark_hash": shash,
-                "oracle_hash": ohash,
-                "hash_match": match,
-            }
-            print(f"{'PASS' if match else 'FAIL'}  {name}: {sn} rows {shash}")
-        elif name in bounded:
-            bspec = bounded[name]
-            try:
-                odf = con.execute(bspec["sql"]).fetchdf()
-                errs = sc.check_bounded(sdf, odf, bspec)
-            except Exception as exc:  # noqa: BLE001
-                out[name] = {"kind": "error", "err": f"bound check raised: {exc}"}
-                print(f"FAIL(bound)  {name}: {exc}")
-                ok = False
-                continue
-            ok = ok and not errs
-            out[name] = {
-                "kind": "bounded",
-                "spark_rows": sn,
-                "spark_hash": shash,
-                "bounded_pass": not errs,
-                "errs": errs,
-            }
-            print(
-                f"{'PASS(bound)' if not errs else 'FAIL(bound)'}  "
-                f"{name}: {sn} rows"
-            )
-        else:
-            out[name] = {
-                "kind": "rows-only",
-                "spark_rows": sn,
-                "spark_hash": shash,
-            }
-            print(f"rows-only  {name}: {sn} rows {shash}")
+    for name, record, problem in sweep(
+        session("registry-verify", sf_dir), sf_dir, only
+    ):
+        out[name] = record
+        ok = ok and problem is None
 
     if not only:
-        stale = set(out) - set(qs)
-        for name in stale:
+        for name in set(out) - set(qs):
             del out[name]
 
     payload = {"sf_dir": sf_dir, "queries": out}

@@ -5,9 +5,10 @@ The driver does not call ``session.get_spark`` — it hands every
 This sweep rebuilds that worst case on purpose:
 
 * a bare ``SparkSession.builder`` session — none of session.py's confs;
-* an adversarial non-UTC session timezone (America/New_York), so any
-  query that forgets to self-pin UTC before calendar math on
-  TimestampType fails loudly here instead of in CORRECTNESS_r{N};
+* an adversarial non-UTC session timezone (America/New_York), reset
+  before EVERY query, so any query that forgets to self-pin UTC
+  before calendar math on TimestampType — or relies on a
+  predecessor's pin — fails loudly here instead of in CORRECTNESS_r{N};
 * no pre-set nanos conf — the events reader must set it at runtime.
 
 Usage: python scripts/vanilla_check.py [sf_dir] [query ...]
@@ -16,101 +17,33 @@ Usage: python scripts/vanilla_check.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import sys
-import time
-import traceback
 
-import duckdb
+from selfcheck import gate, reclaim
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/scripts")
+TZ = "America/New_York"
 
-from selfcheck import canon, check_bounded, reclaim  # noqa: E402
+
+def _reset(spark) -> None:
+    reclaim(spark)
+    spark.conf.set("spark.sql.session.timeZone", TZ)
 
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
 
     from pyspark.sql import SparkSession
 
     spark = (
         SparkSession.builder.master("local[8]")
         .appName("vanilla-check")
-        .config("spark.sql.session.timeZone", "America/New_York")
+        .config("spark.sql.session.timeZone", TZ)
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
-
-    import __spark_entry__ as entrymod
-
-    con = duckdb.connect()
-    for name in [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]:
-        con.execute(
-            f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{sf_dir}/{name}.parquet')"
-        )
-
-    qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
-    bounded = getattr(entrymod, 'bounded_oracle', dict)()
-    n_pass = n_fail = n_rowsonly = 0
-    for name, fn in qs.items():
-        if only and name not in only:
-            continue
-        reclaim(spark)  # free the previous query's pinned blocks
-        # adversarial: reset the TZ before EVERY query — a query that
-        # relies on a predecessor's UTC pin is still broken
-        spark.conf.set("spark.sql.session.timeZone", "America/New_York")
-        t0 = time.time()
-        try:
-            sdf = fn(spark, sf_dir).toPandas()
-        except Exception:
-            print(f"FAIL  {name}: spark raised")
-            traceback.print_exc()
-            n_fail += 1
-            continue
-        el = time.time() - t0
-        if name not in oracles:
-            spec = bounded.get(name)
-            if spec is None:
-                print(f"rows-only  {name}: {len(sdf)} rows  ({el:.1f}s)")
-                n_rowsonly += 1
-                continue
-            try:
-                odf = con.execute(spec["sql"]).fetchdf()
-                errs = check_bounded(sdf, odf, spec)
-            except Exception:
-                print(f"FAIL(bound)  {name}: bounded oracle raised")
-                traceback.print_exc()
-                n_fail += 1
-                continue
-            if errs:
-                print(f"FAIL(bound)  {name}: " + "; ".join(errs))
-                n_fail += 1
-            else:
-                print(f"PASS(bound)  {name}: {len(sdf)} rows  ({el:.1f}s)")
-                n_pass += 1
-            continue
-        try:
-            odf = con.execute(oracles[name]).fetchdf()
-        except Exception:
-            print(f"FAIL  {name}: oracle raised")
-            traceback.print_exc()
-            n_fail += 1
-            continue
-        sn, scols, shash = canon(sdf)
-        on, ocols, ohash = canon(odf)
-        if (sn, scols, shash) == (on, ocols, ohash):
-            print(f"PASS  {name}: {sn} rows  ({el:.1f}s)")
-            n_pass += 1
-        else:
-            print(f"FAIL  {name}: spark=({sn},{shash}) oracle=({on},{ohash})")
-            n_fail += 1
-    print(f"\n{n_pass} pass, {n_fail} fail, {n_rowsonly} rows-only  [vanilla TZ=America/New_York]")
-    return 1 if n_fail else 0
+    return gate(
+        spark, sf_dir, set(sys.argv[2:]), _reset, f"  [vanilla TZ={TZ}]"
+    )
 
 
 if __name__ == "__main__":

@@ -49,3 +49,21 @@ def spark():
     s = get_spark("tests", master="local[4]", shuffle_partitions=4)
     s.sparkContext.setLogLevel("ERROR")
     yield s
+
+
+def pytest_terminal_summary(terminalreporter):
+    """Print each skip reason once, with its count, so coverage lost to
+    an absent input (e.g. the reference bytes) reads as lost, not green."""
+    from collections import Counter
+
+    reasons = Counter()
+    for rep in terminalreporter.stats.get("skipped", []):
+        longrepr = rep.longrepr
+        reason = longrepr[2] if isinstance(longrepr, tuple) else str(longrepr)
+        reasons[reason.removeprefix("Skipped: ")] += 1
+    if not reasons:
+        return
+    total = sum(reasons.values())
+    terminalreporter.write_sep("-", f"{total} skipped, by reason")
+    for reason, n in reasons.most_common():
+        terminalreporter.write_line(f"{n:4d}  {reason}")

@@ -9,11 +9,12 @@ evidence, not just per-operator units.
 
 from __future__ import annotations
 
+import os
 import sys
 
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from big_data_in_agriculture_spark.operators import llm
 from big_data_in_agriculture_spark.sources import shards as SH

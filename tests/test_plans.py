@@ -7,11 +7,12 @@ candidate generation via equi-joins (never cartesian).
 
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from big_data_in_agriculture_spark.plans import explain
 

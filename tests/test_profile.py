@@ -22,11 +22,12 @@ def test_profile_table_exact(spark):
 
 
 def test_approx_profile_within_bounds(spark):
+    import os
     import sys
 
     from pyspark.sql import functions as F
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as em
 
     # _t handles the TIMESTAMP(NANOS) ts column

@@ -9,20 +9,29 @@ The external driver's correctness gate checks a PREFIX of ``queries()``
 2. The 46 queries the round-3/5/6/7/8/9/10/11 reorderings displaced out
    of the prefix keep full oracle parity here in pytest, so a
    regression in them cannot hide behind the driver's prefix
-   truncation — and scripts/displaced_verify.py snapshots their
-   two-engine hashes into the committed DISPLACED_VERIFY.json for
-   external visibility.
+   truncation. Their two-engine hashes, like every query's, are also
+   recorded in the committed REGISTRY_VERIFY.json
+   (scripts/registry_verify.py) for external visibility.
 """
 
 from __future__ import annotations
 
+import importlib.util
+import json
 import os
 
 import pytest
 
 import __spark_entry__ as entrymod
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = "/root/testdata/sf0.001"
+
+_spec = importlib.util.spec_from_file_location(
+    "_selfcheck", os.path.join(REPO, "scripts", "selfcheck.py")
+)
+selfcheck = importlib.util.module_from_spec(_spec)
+_spec.loader.exec_module(selfcheck)
 
 #: The driver-gate prefix as of round 11. Rounds 3-4 pinned the
 #: CORRECTNESS_r03 keys; rounds 5, 6 and 7 each DELIBERATELY rotated
@@ -100,8 +109,7 @@ DRIVER_PREFIX_50 = [
 #: swapped in for same-family siblings text_stats / pack_chunks /
 #: crosscorpus_dedup, so genuinely NEW code gets the external gate);
 #: oracle-verified below so they keep an in-repo check despite driver
-#: invisibility, and scripts/displaced_verify.py records their
-#: two-engine hashes in the committed DISPLACED_VERIFY.json artifact.
+#: invisibility.
 DISPLACED = [
     "text_stats",
     "pack_chunks",
@@ -183,11 +191,18 @@ def test_driver_prefix_is_pinned():
 def test_registry_counts_match_docs():
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
+    bounded = entrymod.bounded_oracle()
     assert len(qs) == REGISTERED_QUERIES
     missing = sorted(set(qs) - set(oracles))
     assert len(missing) == ROWS_ONLY, missing
     # every oracle key corresponds to a registered query
     assert not set(oracles) - set(qs)
+    # the two oracle views partition the registry ...
+    assert not set(oracles) & set(bounded)
+    assert set(oracles) | set(bounded) == set(qs)
+    # ... and both follow its (driver) order
+    assert list(oracles) == [n for n in qs if n in oracles]
+    assert list(bounded) == [n for n in qs if n in bounded]
 
 
 def test_displaced_queries_stay_registered_with_oracles():
@@ -200,47 +215,18 @@ def test_displaced_queries_stay_registered_with_oracles():
 
 @pytest.fixture(scope="module")
 def _duck():
-    import duckdb
-
     if not os.path.isdir(SF_DIR):
         pytest.skip("driver testdata not present")
-    con = duckdb.connect()
-    for name in (
-        "region",
-        "nation",
-        "customer",
-        "supplier",
-        "part",
-        "orders",
-        "lineitem",
-        "events",
-        "documents",
-        "embeddings",
-    ):
-        con.execute(
-            f"CREATE VIEW {name} AS SELECT * FROM "
-            f"read_parquet('{SF_DIR}/{name}.parquet')"
-        )
-    return con
+    return selfcheck.duck(SF_DIR)
 
 
 @pytest.mark.parametrize("name", DISPLACED)
 def test_displaced_query_oracle_parity(spark, _duck, name):
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "_selfcheck", "/root/repo/scripts/selfcheck.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-
     sdf = entrymod.queries()[name](spark, SF_DIR).toPandas()
-    odf = _duck.execute(entrymod.oracle_sql()[name]).fetchdf()
-    sn, scols, shash = mod.canon(sdf)
-    on, ocols, ohash = mod.canon(odf)
-    assert scols == ocols
-    assert sn == on
-    assert shash == ohash
+    record, problem = selfcheck.two_engine(
+        _duck, sdf, entrymod.oracle_sql()[name]
+    )
+    assert problem is None, (record, problem)
 
 
 def test_bounded_oracle_covers_exactly_the_rows_only_set():
@@ -261,9 +247,7 @@ def test_registry_verify_covers_every_query():
     that makes queries outside the driver's 50-slot prefix externally
     diffable — and every row must be green. Registering a query
     without regenerating the snapshot fails here."""
-    import json
-
-    with open("/root/repo/REGISTRY_VERIFY.json") as f:
+    with open(os.path.join(REPO, "REGISTRY_VERIFY.json")) as f:
         payload = json.load(f)
     rows = payload["queries"]
     qs = entrymod.queries()

@@ -30,9 +30,10 @@ def test_stream_rollup_matches_batch(spark, landing, tmp_path):
     got = spark.read.parquet(sink)
 
     # batch twin over the same file (nanos handled by the entry reader)
+    import os
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as em
     from pyspark.sql import functions as F
 

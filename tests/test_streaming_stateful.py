@@ -14,9 +14,10 @@ SF_DIR = "/root/testdata/sf0.001"
 
 
 def _events(spark):
+    import os
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as em
 
     return em._t(spark, SF_DIR, "events")
@@ -513,7 +514,7 @@ def test_drift_monitor_alarms_on_fully_quiet_key(spark, tmp_path):
     chk = str(tmp_path / "chk")
     sink = str(tmp_path / "sink")
 
-    def run():
+    def run(n_rows):
         stream = sev.read_events_stream(
             spark, str(landing), nanos_ts=False, max_files_per_trigger=1
         )
@@ -530,13 +531,25 @@ def test_drift_monitor_alarms_on_fully_quiet_key(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        # The quiet key's re-armed processing-time timer keeps firing
+        # no-data batches, so this availableNow query never terminates
+        # by itself (nor does processAllAvailable return): wait until
+        # the newly landed rows have been processed, then stop it, so
+        # the next run is the only live query on the checkpoint.
+        deadline = time.monotonic() + 120
+        try:
+            while sum(p["numInputRows"] for p in q.recentProgress) < n_rows:
+                if time.monotonic() > deadline:
+                    raise TimeoutError(f"{n_rows} rows not processed")
+                time.sleep(0.1)
+        finally:
+            q.stop()
 
     land("b0.parquet", [("alive", 4), ("ghost", 4)], 0)
-    run()  # both keys establish reference rate 4/batch
+    run(8)  # both keys establish reference rate 4/batch
     time.sleep(1.0)  # let ghost's 500ms quiet timer expire
     land("b1.parquet", [("alive", 4)], 100)
-    run()  # alive updates normally; ghost ticks via timeout
+    run(4)  # alive updates normally; ghost ticks via timeout
 
     rows = spark.read.parquet(sink).collect()
     ghost_rows = sorted(
