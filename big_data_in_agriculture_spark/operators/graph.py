@@ -49,6 +49,7 @@ from __future__ import annotations
 import os
 import sys
 import time
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -74,18 +75,19 @@ def _trace(op: str, rnd: int, changed: int, t0: float) -> None:
 MASS = 1_000_000_000_000
 
 
-#: Node-count floor for the narrow (frontier-restricted) round shape in
-#: core_numbers / label_propagation. A narrow round's cost is dominated
-#: by FIXED plumbing — ~6 broadcast-hash joins + 3 delta-sized pins per
-#: round — independent of how little work it saves; a full-recompute
-#: round on a small graph is one cheap node-keyed shuffle. Measured on
-#: the sf0.1 gate graph (1880 nodes): narrow tail rounds 1.6-3.1 s vs
-#: wide rounds 1.0-1.3 s — the restriction was a net LOSS below ~1e5
-#: nodes. At the 5M-edge SCALE.md geometry (1M nodes) the narrow tail
-#: is what beats the 141 s full form, so the floor changes nothing
-#: there. Pure cost-model refinement: wide and narrow rounds compute
-#: bit-identical states (documented invariant), so the switch never
-#: affects results at any size.
+#: Node-count floor for the narrow (frontier-restricted) round shape of
+#: _adaptive_fixpoint (core_numbers, label_propagation), read at call
+#: time. A narrow round's cost is dominated by FIXED plumbing — ~6
+#: broadcast-hash joins + 3 delta-sized pins per round — independent of
+#: how little work it saves; a full-recompute round on a small graph is
+#: one cheap node-keyed shuffle. Measured on the sf0.1 gate graph (1880
+#: nodes): narrow tail rounds 1.6-3.1 s vs wide rounds 1.0-1.3 s — the
+#: restriction was a net LOSS below ~1e5 nodes. At the 5M-edge SCALE.md
+#: geometry (1M nodes) the narrow tail is what beats the 141 s full
+#: form, so the floor changes nothing there. Pure cost-model
+#: refinement: wide and narrow rounds compute bit-identical states
+#: (documented invariant), so the switch never affects results at any
+#: size.
 _NARROW_MIN_NODES = 100_000
 
 
@@ -303,8 +305,10 @@ def personalized_pagerank(
 
     Scale shape identical to pagerank: per round one edge equi-join +
     one node-keyed sum + a 1-row dangling broadcast; rank rows carry
-    (od, is_src) so no per-round membership join; stats-free pins keep
-    the iteration safe at any round count.
+    (od, is_src) so no per-round membership join. Each round's ranks
+    are pinned with ``pin_iter`` (_util.py): real statistics, so the
+    planner can still broadcast inside a round, reset stats-free every
+    8th round, which keeps the iteration safe at any round count.
     """
     if not 0 <= damping_pct <= 100:
         raise ValueError(f"damping_pct must be 0..100, got {damping_pct}")
@@ -384,6 +388,22 @@ def personalized_pagerank(
     return ranks.select("node", "rank_e12")
 
 
+def _undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Symmetrized ``(u, v)`` edge frame, self-loops dropped and
+    duplicates removed, pinned lazily: both directions of every edge,
+    so a node's distinct neighbors are the ``v`` of its ``u`` rows."""
+    return (
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        .filter(F.col("u") != F.col("v"))
+        .unionByName(
+            edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
+            .filter(F.col("u") != F.col("v"))
+        )
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
+
+
 def kcore(
     edges: DataFrame,
     k: int,
@@ -401,7 +421,8 @@ def kcore(
     peeling: drop nodes with current degree < k, recompute degrees on
     the survivors, repeat to fixpoint. Each round is one degree
     aggregate + one semi-join of the edge list against the surviving
-    node set — edge-keyed shuffles, node-sized state, stats-free pins.
+    node set — edge-keyed shuffles, node-sized state, one ``pin_iter``
+    pin per round (real statistics, reset every 8th round).
 
     Two modes, one code path:
 
@@ -420,16 +441,7 @@ def kcore(
         raise ValueError(f"k must be >= 1, got {k}")
     if rounds is not None and rounds < 0:
         raise ValueError(f"rounds must be >= 0, got {rounds}")
-    und = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .unionByName(
-            edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
-            .filter(F.col("u") != F.col("v"))
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    und = _undirected(edges, src, dst)
     alive_edges = und
     n_iter = max_iter if rounds is None else rounds
     converged = rounds is not None
@@ -473,6 +485,218 @@ def kcore(
         alive_edges.groupBy(F.col("u").alias("node"))
         .agg(F.count(F.lit(1)).alias("core_degree"))
     )
+
+
+def _fold(base: DataFrame, overlay: DataFrame) -> DataFrame:
+    """current(n) = coalesce(overlay, base) as one full value table."""
+    return base.join(
+        overlay.select("node", F.col("val").alias("_ov")), "node", "left"
+    ).select("node", F.coalesce("_ov", "val").alias("val"))
+
+
+def _adaptive_fixpoint(
+    op: str,
+    und: DataFrame,
+    init: DataFrame,
+    update: Callable[[DataFrame], DataFrame],
+    closed: bool,
+    rounds: int | None,
+    max_iter: int,
+    stalled: str,
+) -> DataFrame:
+    """Synchronous per-node fixpoint shared by :func:`core_numbers` and
+    :func:`label_propagation`: ``(node, val)`` after at most ``rounds``
+    updates, or at the verified fixpoint when ``rounds`` is None
+    (raising ``RuntimeError(stalled)`` after ``max_iter`` rounds).
+
+    ``und`` is the pinned :func:`_undirected` edge frame, ``init`` the
+    pinned ``(node, val)`` start state (one row per node of ``und``).
+    ``update`` maps ``(u, val)`` input pairs — ``val`` being one input
+    value of node ``u`` — to one ``(node, val)`` row per ``u``; it must
+    be a pure function of those inputs. Inputs are the values of ``u``'s
+    neighbors, plus ``u``'s own value when ``closed`` (a self-vote).
+
+    Both modes stop EARLY the first round whose delta is empty: the
+    update is a pure synchronous function of the value table, so an
+    empty delta means state_{t+1} == state_t and every remaining round
+    recomputes the identity — skipping them is bit-identical (the
+    oracle's extra unrolled CTEs are identities for the same reason).
+    The per-round churn count is that check, at no extra action.
+
+    At 100 TB: a node's value can move only if one of its inputs
+    changed last round — a neighbor's value, or (``closed``) its own —
+    so recomputing only those nodes leaves every per-round state
+    bit-identical to the full-recompute form (the fixed-rounds/SQL-
+    unroll contract is unchanged). The restriction is ADAPTIVE: while
+    the churn frontier is wide (> ~5% of nodes), or the graph is below
+    ``_NARROW_MIN_NODES``, a round does the plain full recompute — the
+    frontier plumbing costs more than it saves when most neighborhoods
+    are touched (on Poisson-ish degree d a frontier of fraction f
+    reaches ~1-(1-f)^d of them) — and once the frontier is narrow a
+    round recomputes only the affected nodes, so the settle tail costs
+    the frontier's edges, not |E|. The switch reads the churn count of
+    the previous round's already-pinned delta.
+
+    Value state is BASE + OVERLAY: ``base`` is the full pinned value
+    table as of the last wide round; ``overlay`` holds only the values
+    changed since (None = empty), current(n) = coalesce(overlay, base).
+    Wide rounds fold the overlay into base and pin the full recompute
+    (one node-sized pin); NARROW rounds never materialize a node-sized
+    frame — their pins are delta-sized, which is what makes a 30-round
+    sub-1% churn tail cost ~|changed-neighborhood| per round instead of
+    |V| (measured: the eager full-table pin alone was ~2 s/round at 1M
+    nodes — more than the tail's actual compute).
+    """
+    n_iter = max_iter if rounds is None else rounds
+    converged = rounds is not None
+    n_nodes = init.count()
+    base = init
+    overlay = None
+    # round 1 is always full: initialization counts as a change
+    changed = init.select("node")
+    changed_cnt = n_nodes
+    for _rnd in range(n_iter):
+        _t0 = time.perf_counter()
+        if changed_cnt * 20 > n_nodes or n_nodes < _NARROW_MIN_NODES:
+            # wide frontier — or a graph small enough that a full round
+            # is cheaper than the narrow path's fixed plumbing: plain
+            # full recompute (one edge join, one update pass). Fold any
+            # overlay in first so the join sees current values.
+            if overlay is not None:
+                base = pin_iter(_fold(base, overlay), _rnd, eager=False)
+                overlay = None
+            nbr = und.join(base, und.v == base.node).select(
+                und.u.alias("u"), "val"
+            )
+            if closed:
+                nbr = nbr.unionByName(
+                    base.select(F.col("node").alias("u"), "val")
+                )
+            # full recompute covers every node (the node set IS derived
+            # from und), so it becomes the new base directly
+            new_base = pin_iter(update(nbr), _rnd, eager=False)
+            # delta = nodes whose value moved; both sides pinned
+            delta = pin_iter(
+                new_base.join(
+                    base.select("node", F.col("val").alias("_old")), "node"
+                )
+                .filter(F.col("val") != F.col("_old"))
+                .select("node", "val"),
+                _rnd,
+                eager=False,
+            )
+            base = new_base
+        else:
+            # narrow frontier: recompute only nodes with a changed
+            # input. Every frontier-derived frame is EXPLICITLY
+            # broadcast (guarded by an absolute cap — at billion-node
+            # scale a 5% frontier is not driver-collectable, and there
+            # the planner's own sort-merge choice is correct anyway):
+            # derived distinct/join outputs have no usable size stats,
+            # and without the hint Catalyst sort-merges und⋈affected
+            # and SHUFFLES the node-sized base every round (measured:
+            # the tail rounds cost nearly as much as full rounds).
+            # With the hints, und and base are only ever SCANNED
+            # map-side behind broadcast-hash joins — no round touches
+            # a shuffle bigger than the frontier's neighborhood.
+            bc = (
+                F.broadcast
+                if changed_cnt <= 2_000_000
+                else (lambda df: df)
+            )
+            affected = und.join(
+                bc(changed.select(F.col("node").alias("_chg"))),
+                und.v == F.col("_chg"),
+            ).select("u")
+            if closed:
+                affected = affected.unionByName(
+                    changed.select(F.col("node").alias("u"))
+                )
+            affected = affected.distinct()
+            pairs = und.join(bc(affected), "u")
+            if closed:
+                # the self loop as one more (u, v) pair, so ONE value
+                # lookup serves both input sources
+                pairs = pairs.unionByName(
+                    affected.select("u", F.col("u").alias("v"))
+                )
+            # restrict base to the needed input values via a broadcast
+            # semi-join BEFORE the value join, so base is map-scanned,
+            # never shuffled
+            vset = pairs.select("v").distinct()
+            base_vals = base.join(
+                bc(vset), base.node == F.col("v")
+            ).select(F.col("node").alias("_vn"), F.col("val").alias("_v0"))
+            nbr0 = pairs.join(
+                bc(base_vals), pairs.v == F.col("_vn")
+            ).select(F.col("u"), F.col("v"), F.col("_v0"))
+            if overlay is not None:
+                nbr = nbr0.join(
+                    bc(
+                        overlay.select(
+                            F.col("node").alias("_on"),
+                            F.col("val").alias("_ovv"),
+                        )
+                    ),
+                    nbr0.v == F.col("_on"),
+                    "left",
+                ).select("u", F.coalesce("_ovv", "_v0").alias("val"))
+            else:
+                nbr = nbr0.select("u", F.col("_v0").alias("val"))
+            # pin the (frontier-sized) recompute ONCE: it feeds both
+            # the delta filter and the overlay merge, and an unpinned
+            # broadcast would re-execute the whole restricted pipeline
+            # per consumer
+            # coalesce(8): frontier-sized frames pinned at the parent
+            # partition count spawn ~shuffle_partitions near-empty
+            # tasks in EVERY downstream job — at a sub-1% frontier the
+            # task-launch overhead dominated the actual work (traced)
+            recomputed = pin_iter(
+                update(nbr).coalesce(8), _rnd, eager=False
+            )
+            # stream base, broadcast the (small) recomputed values
+            cur = base.join(
+                bc(recomputed.select("node", F.col("val").alias("_new"))),
+                "node",
+            )
+            if overlay is not None:
+                cur = cur.join(
+                    bc(overlay.select("node", F.col("val").alias("_o2"))),
+                    "node",
+                    "left",
+                )
+                old = F.coalesce("_o2", "val")
+            else:
+                old = F.col("val")
+            delta = pin_iter(
+                cur.filter(F.col("_new") != old)
+                .select("node", F.col("_new").alias("val"))
+                .coalesce(8),
+                _rnd,
+                eager=False,
+            )
+            overlay = pin_iter(
+                (
+                    delta
+                    if overlay is None
+                    else delta.unionByName(
+                        overlay.join(
+                            delta.select("node"), "node", "left_anti"
+                        )
+                    )
+                ).coalesce(8),
+                _rnd,
+                eager=False,
+            )
+        changed = delta.select("node")
+        changed_cnt = delta.count()
+        _trace(op, _rnd, changed_cnt, _t0)
+        if changed_cnt == 0:
+            converged = True
+            break
+    if not converged:
+        raise RuntimeError(stalled)
+    return base if overlay is None else _fold(base, overlay)
 
 
 def core_numbers(
@@ -542,211 +766,31 @@ def core_numbers(
     """
     if rounds is not None and rounds < 0:
         raise ValueError(f"rounds must be >= 0, got {rounds}")
-    und = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .unionByName(
-            edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
-            .filter(F.col("u") != F.col("v"))
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    c = (
+    und = _undirected(edges, src, dst)
+    deg = (
         und.groupBy(F.col("u").alias("node"))
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
+        .agg(F.count(F.lit(1)).cast("long").alias("val"))
         .localCheckpoint(eager=False)
     )
-    n_iter = max_iter if rounds is None else rounds
-    converged = rounds is not None
-    w = Window.partitionBy("u").orderBy(F.col("cv").desc())
-    # churn frontier: nodes whose value changed last round. Round 1 is
-    # always full (initialization counts as a change). A delta round
-    # pays off only once the frontier's NEIGHBORHOOD is a small slice
-    # of the graph; on Poisson-ish degree d a frontier of fraction f
-    # touches ~1-(1-f)^d of neighborhoods, so the cutover is
-    # deliberately low: frontier < 5% of nodes.
-    n_nodes = c.count()
-    # Value state is BASE + OVERLAY: ``base`` is the full pinned
-    # (node, c) table as of the last wide round; ``overlay`` holds
-    # only the values that changed since (None = empty). current(n) =
-    # coalesce(overlay, base). Wide rounds fold the overlay into base
-    # and pin the full recompute (one node-sized pin, the r10 cost);
-    # NARROW rounds never materialize a node-sized frame at all —
-    # their pins are delta-sized, which is what makes a 30-round
-    # sub-1% churn tail cost ~|changed-neighborhood| per round
-    # instead of |V| (measured: the eager full-table pin alone was
-    # ~2 s/round at 1M nodes — more than the tail's actual compute).
-    base = c
-    overlay = None
-    changed = c.select("node")
-    changed_cnt = n_nodes
-    for _rnd in range(n_iter):
-        _t0 = time.perf_counter()
-        if changed_cnt * 20 > n_nodes or n_nodes < _NARROW_MIN_NODES:
-            # wide frontier — or a graph small enough that a full
-            # round is cheaper than the narrow path's fixed plumbing
-            # (_NARROW_MIN_NODES): plain full recompute (one edge
-            # join, one window pass). Fold any overlay in first so
-            # the join sees current values.
-            if overlay is not None:
-                base = pin_iter(
-                    base.join(
-                        overlay.select("node", F.col("c").alias("_ov")),
-                        "node",
-                        "left",
-                    ).select("node", F.coalesce("_ov", "c").alias("c")),
-                    _rnd,
-                    eager=False,
-                )
-                overlay = None
-            nbr = und.join(base, und.v == base.node).select(
-                und.u.alias("u"), F.col("c").alias("cv")
-            )
-            # full recompute covers every node (the node set IS
-            # derived from und), so it becomes the new base directly
-            new_base = pin_iter(
-                nbr.withColumn("rn", F.row_number().over(w).cast("long"))
-                .groupBy(F.col("u").alias("node"))
-                .agg(F.max(F.least("rn", "cv")).alias("c")),
-                _rnd,
-                eager=False,
-            )
-            # delta = nodes whose value moved (monotone non-increasing,
-            # so != means strictly decreased); both sides pinned
-            delta = pin_iter(
-                new_base.join(
-                    base.select("node", F.col("c").alias("_old")), "node"
-                )
-                .filter(F.col("c") != F.col("_old"))
-                .select("node", "c"),
-                _rnd,
-                eager=False,
-            )
-            base = new_base
-        else:
-            # narrow frontier: recompute only nodes with >= 1 changed
-            # neighbor. Every frontier-derived frame is EXPLICITLY
-            # broadcast (guarded by an absolute cap — at billion-node
-            # scale a 5% frontier is not driver-collectable, and there
-            # the planner's own sort-merge choice is correct anyway):
-            # derived distinct/join outputs have no usable size stats,
-            # and without the hint Catalyst sort-merges und⋈affected
-            # and SHUFFLES the node-sized base every round (measured:
-            # the tail rounds cost nearly as much as full rounds).
-            # With the hints, und and base are only ever SCANNED
-            # map-side behind broadcast-hash joins — no round touches
-            # a shuffle bigger than the frontier's neighborhood.
-            bc = (
-                F.broadcast
-                if changed_cnt <= 2_000_000
-                else (lambda df: df)
-            )
-            affected = (
-                und.join(
-                    bc(changed.select(F.col("node").alias("_chg"))),
-                    und.v == F.col("_chg"),
-                )
-                .select("u")
-                .distinct()
-            )
-            und_aff = und.join(bc(affected), "u")
-            # restrict base to the needed neighbor values via a
-            # broadcast semi-join BEFORE the value join, so base is
-            # map-scanned, never shuffled
-            vset = und_aff.select("v").distinct()
-            base_vals = base.join(
-                bc(vset), base.node == F.col("v")
-            ).select(F.col("node").alias("_vn"), F.col("c").alias("_cv0"))
-            nbr0 = und_aff.join(
-                bc(base_vals), und_aff.v == F.col("_vn")
-            ).select(F.col("u"), F.col("v"), F.col("_cv0"))
-            if overlay is not None:
-                nbr = nbr0.join(
-                    bc(
-                        overlay.select(
-                            F.col("node").alias("_on"),
-                            F.col("c").alias("_ovv"),
-                        )
-                    ),
-                    nbr0.v == F.col("_on"),
-                    "left",
-                ).select("u", F.coalesce("_ovv", "_cv0").alias("cv"))
-            else:
-                nbr = nbr0.select("u", F.col("_cv0").alias("cv"))
-            # pin the (frontier-sized) recompute ONCE: it feeds both
-            # the delta filter and the overlay merge, and an unpinned
-            # broadcast would re-execute the whole restricted pipeline
-            # per consumer
-            # coalesce(8): frontier-sized frames pinned at the parent
-            # partition count spawn ~shuffle_partitions near-empty
-            # tasks in EVERY downstream job — at a sub-1% frontier the
-            # task-launch overhead dominated the actual work (traced)
-            recomputed = pin_iter(
-                nbr.withColumn("rn", F.row_number().over(w).cast("long"))
-                .groupBy(F.col("u").alias("node"))
-                .agg(F.max(F.least("rn", "cv")).alias("c"))
-                .coalesce(8),
-                _rnd,
-                eager=False,
-            )
-            # stream base, broadcast the (small) recomputed values
-            cur = base.join(
-                bc(recomputed.select("node", F.col("c").alias("_new"))),
-                "node",
-            )
-            if overlay is not None:
-                cur = cur.join(
-                    bc(overlay.select("node", F.col("c").alias("_o2"))),
-                    "node",
-                    "left",
-                )
-                old = F.coalesce("_o2", "c")
-            else:
-                old = F.col("c")
-            delta = pin_iter(
-                cur.filter(F.col("_new") != old)
-                .select("node", F.col("_new").alias("c"))
-                .coalesce(8),
-                _rnd,
-                eager=False,
-            )
-            overlay = pin_iter(
-                (
-                    delta
-                    if overlay is None
-                    else delta.unionByName(
-                        overlay.join(
-                            delta.select("node"), "node", "left_anti"
-                        )
-                    )
-                ).coalesce(8),
-                _rnd,
-                eager=False,
-            )
-        changed = delta.select("node")
-        changed_cnt = delta.count()
-        _trace("core_numbers", _rnd, changed_cnt, _t0)
-        if changed_cnt == 0:
-            # fixpoint — in BOTH modes. The update is a pure
-            # synchronous function of the value table, so an empty
-            # delta means state_{t+1} == state_t and every remaining
-            # fixed round recomputes the identity; skipping them is
-            # bit-identical to running them (the oracle's extra
-            # unrolled CTEs are identities for the same reason).
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
+
+    def h_index(nbr: DataFrame) -> DataFrame:
+        w = Window.partitionBy("u").orderBy(F.col("val").desc())
+        return (
+            nbr.withColumn("rn", F.row_number().over(w).cast("long"))
+            .groupBy(F.col("u").alias("node"))
+            .agg(F.max(F.least("rn", "val")).alias("val"))
+        )
+
+    core = _adaptive_fixpoint(
+        "core_numbers", und, deg, h_index, closed=False,
+        rounds=rounds, max_iter=max_iter,
+        stalled=(
             f"core_numbers did not converge in {max_iter} h-index "
             "rounds; raise max_iter (convergence is guaranteed — the "
             "sequence is monotone non-increasing over LONG values)"
-        )
-    if overlay is not None:
-        base = base.join(
-            overlay.select("node", F.col("c").alias("_ov")), "node", "left"
-        ).select("node", F.coalesce("_ov", "c").alias("c"))
-    return base.select("node", F.col("c").alias("core"))
+        ),
+    )
+    return core.select("node", F.col("val").alias("core"))
 
 
 def label_propagation(
@@ -794,16 +838,11 @@ def label_propagation(
 
     At 100 TB: a node's vote can move only if its CLOSED neighborhood
     changed — a neighbor's label last round, or its own (the
-    self-vote makes own-label part of the electorate) — and skipping
-    unaffected nodes leaves every per-round state bit-identical to
-    the full form (fixed-rounds/SQL-unroll contract unchanged). Like
-    :func:`core_numbers`, the restriction is ADAPTIVE: wide churn
-    frontier (> ~5% of nodes) → plain full re-vote (the delta
-    plumbing costs more than it saves when most neighborhoods are
-    touched); narrow frontier → re-vote only affected nodes, so the
-    settle tail costs the churn frontier's edges, not |E|. The switch
-    reads one count on the already-pinned delta per round. All counts
-    and labels are integers: no quantization contract.
+    self-vote makes own-label part of the electorate) — so the
+    adaptive frontier restriction of the shared fixpoint loop
+    (``_adaptive_fixpoint``) re-votes only those nodes once churn is
+    narrow, and the settle tail costs the churn frontier's edges, not
+    |E|. All counts and labels are integers: no quantization contract.
 
     In a curation pipeline LPA is the cheap community pass that
     groups a crawl graph into topical clusters for mixture balancing
@@ -812,224 +851,37 @@ def label_propagation(
     """
     if rounds is not None and rounds < 0:
         raise ValueError(f"rounds must be >= 0, got {rounds}")
-    und = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .unionByName(
-            edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
-            .filter(F.col("u") != F.col("v"))
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    und = _undirected(edges, src, dst)
     lab = (
         und.select(F.col("u").alias("node"))
         .distinct()
-        .withColumn("community", F.col("node"))
+        .withColumn("val", F.col("node"))
         .localCheckpoint(eager=False)
     )
-    w = Window.partitionBy("node").orderBy(
-        F.col("_cnt").desc(), F.col("community").asc()
-    )
-    n_iter = max_iter if rounds is None else rounds
-    converged = rounds is not None
-    # Label state is BASE + OVERLAY, the core_numbers discipline:
-    # ``base`` is the full pinned (node, community) table as of the
-    # last wide round, ``overlay`` only the labels changed since
-    # (None = empty); current(n) = coalesce(overlay, base). Narrow
-    # rounds (churn < 5% of nodes) never materialize a node-sized
-    # frame — their pins are delta-sized.
-    n_nodes = lab.count()
-    base = lab
-    overlay = None
-    changed = lab.select("node")
-    changed_cnt = n_nodes
-    for _rnd in range(n_iter):
-        _t0 = time.perf_counter()
-        if changed_cnt * 20 > n_nodes or n_nodes < _NARROW_MIN_NODES:
-            # wide frontier — or a graph below the narrow path's
-            # fixed-cost floor (_NARROW_MIN_NODES): plain full re-vote
-            # (fold the overlay in first so the vote join sees
-            # current labels)
-            if overlay is not None:
-                base = pin_iter(
-                    base.join(
-                        overlay.select(
-                            "node", F.col("community").alias("_ov")
-                        ),
-                        "node",
-                        "left",
-                    ).select(
-                        "node",
-                        F.coalesce("_ov", "community").alias("community"),
-                    ),
-                    _rnd,
-                    eager=False,
-                )
-                overlay = None
-            votes = (
-                und.join(base, und.v == base.node)
-                .select(und.u.alias("node"), "community")
-                .unionByName(base.select("node", "community"))
-            )
-            # the full re-vote covers every node (each casts its own
-            # self-vote), so it becomes the new base directly
-            new_base = pin_iter(
-                votes.groupBy("node", "community")
-                .agg(F.count(F.lit(1)).alias("_cnt"))
-                .withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .select("node", "community"),
-                _rnd,
-                eager=False,
-            )
-            delta = pin_iter(
-                new_base.join(
-                    base.select("node", F.col("community").alias("_old")),
-                    "node",
-                )
-                .filter(F.col("community") != F.col("_old"))
-                .select("node", "community"),
-                _rnd,
-                eager=False,
-            )
-            base = new_base
-        else:
-            # narrow frontier: re-vote only nodes whose closed
-            # neighborhood changed (a neighbor's label, or their own
-            # — the self-vote). Frontier frames are explicitly
-            # broadcast (size-capped), the core_numbers discipline:
-            # und and base are only map-scanned behind broadcast-hash
-            # joins, never shuffled in a tail round.
-            bc = (
-                F.broadcast
-                if changed_cnt <= 2_000_000
-                else (lambda df: df)
-            )
-            affected = (
-                und.join(
-                    bc(changed.select(F.col("node").alias("_chg"))),
-                    und.v == F.col("_chg"),
-                )
-                .select("u")
-                .unionByName(changed.select(F.col("node").alias("u")))
-                .distinct()
-            )
-            und_aff = und.join(bc(affected), "u")
-            # closed neighborhood as (u, v) pairs: edges + the self
-            # loop, so ONE label lookup serves both vote sources
-            closed = und_aff.unionByName(
-                affected.select("u", F.col("u").alias("v"))
-            )
-            vset = closed.select("v").distinct()
-            base_vals = base.join(
-                bc(vset), base.node == F.col("v")
-            ).select(
-                F.col("node").alias("_vn"),
-                F.col("community").alias("_lb0"),
-            )
-            both = closed.join(
-                bc(base_vals), closed.v == F.col("_vn")
-            ).select(F.col("u"), F.col("v"), F.col("_lb0"))
-            if overlay is not None:
-                votes = both.join(
-                    bc(
-                        overlay.select(
-                            F.col("node").alias("_on"),
-                            F.col("community").alias("_ovv"),
-                        )
-                    ),
-                    both.v == F.col("_on"),
-                    "left",
-                ).select(
-                    F.col("u").alias("node"),
-                    F.coalesce("_ovv", "_lb0").alias("community"),
-                )
-            else:
-                votes = both.select(
-                    F.col("u").alias("node"),
-                    F.col("_lb0").alias("community"),
-                )
-            # pinned once, the core_numbers rationale: an unpinned
-            # broadcast re-executes the restricted pipeline per use
-            revoted = pin_iter(
-                votes.groupBy("node", "community")
-                .agg(F.count(F.lit(1)).alias("_cnt"))
-                .withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .select("node", "community")
-                .coalesce(8),
-                _rnd,
-                eager=False,
-            )
-            # stream base, broadcast the (small) re-voted labels
-            cur = base.join(
-                bc(
-                    revoted.select(
-                        "node", F.col("community").alias("_new")
-                    )
-                ),
-                "node",
-            )
-            if overlay is not None:
-                cur = cur.join(
-                    bc(
-                        overlay.select(
-                            "node", F.col("community").alias("_o2")
-                        )
-                    ),
-                    "node",
-                    "left",
-                )
-                old = F.coalesce("_o2", "community")
-            else:
-                old = F.col("community")
-            delta = pin_iter(
-                cur.filter(F.col("_new") != old)
-                .select("node", F.col("_new").alias("community"))
-                .coalesce(8),
-                _rnd,
-                eager=False,
-            )
-            overlay = pin_iter(
-                (
-                    delta
-                    if overlay is None
-                    else delta.unionByName(
-                        overlay.join(
-                            delta.select("node"), "node", "left_anti"
-                        )
-                    )
-                ).coalesce(8),
-                _rnd,
-                eager=False,
-            )
-        changed = delta.select("node")
-        changed_cnt = delta.count()
-        _trace("label_propagation", _rnd, changed_cnt, _t0)
-        if changed_cnt == 0:
-            # fixpoint — in BOTH modes (see core_numbers: an empty
-            # delta under a pure synchronous update makes every
-            # remaining fixed round an identity, so skipping them is
-            # bit-identical).
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
+
+    def top_vote(votes: DataFrame) -> DataFrame:
+        w = Window.partitionBy("node").orderBy(
+            F.col("_cnt").desc(), F.col("val").asc()
+        )
+        return (
+            votes.groupBy(F.col("u").alias("node"), "val")
+            .agg(F.count(F.lit(1)).alias("_cnt"))
+            .withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1)
+            .select("node", "val")
+        )
+
+    communities = _adaptive_fixpoint(
+        "label_propagation", und, lab, top_vote, closed=True,
+        rounds=rounds, max_iter=max_iter,
+        stalled=(
             f"label_propagation did not reach a fixpoint in {max_iter} "
             "rounds; the graph may sustain a synchronous oscillation — "
             "use fixed `rounds` (deterministic at any value) or raise "
             "max_iter"
-        )
-    if overlay is not None:
-        base = base.join(
-            overlay.select("node", F.col("community").alias("_ov")),
-            "node",
-            "left",
-        ).select(
-            "node", F.coalesce("_ov", "community").alias("community")
-        )
-    return base
+        ),
+    )
+    return communities.select("node", F.col("val").alias("community"))
 
 
 def sssp(
@@ -1062,8 +914,9 @@ def sssp(
     improved-frontier's out-edges, not graph size: on a bounded walk
     total work is ~|E| once the wave passes, vs hops × |E| for the
     naive form. The early exit (empty frontier) keeps round count at
-    the true shortest-path hop diameter ≤ max_hops. Stats-free pins
-    (_util.py) keep long walks safe.
+    the true shortest-path hop diameter ≤ max_hops. Per-round
+    ``pin_iter`` pins (_util.py) keep real statistics and reset them
+    every 8th round, which keeps long walks safe.
     """
     if max_hops < 0:
         raise ValueError(f"max_hops must be >= 0, got {max_hops}")
@@ -1119,6 +972,21 @@ def sssp(
     return dist
 
 
+def _canonical_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Each undirected edge once as ``(a, b)`` with ``a < b`` —
+    self-loops and parallel or reversed duplicates dropped — pinned
+    lazily: the edge set the triangle operators enumerate over."""
+    return (
+        edges.select(
+            F.least(F.col(src), F.col(dst)).alias("a"),
+            F.greatest(F.col(src), F.col(dst)).alias("b"),
+        )
+        .filter(F.col("a") < F.col("b"))
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
+
+
 def clustering_coefficient(
     edges: DataFrame,
     src: str = "src",
@@ -1152,15 +1020,7 @@ def clustering_coefficient(
     a cost model instead of launching an unpayable join. ``None``
     disables the check.
     """
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .filter(F.col("a") < F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    e = _canonical_edges(edges, src, dst)
     deg = (
         e.select(F.col("a").alias("node"))
         .unionByName(e.select(F.col("b").alias("node")))
@@ -1336,15 +1196,7 @@ def link_prediction(
     """
     if min_common < 1:
         raise ValueError(f"min_common must be >= 1, got {min_common}")
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .filter(F.col("a") < F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    e = _canonical_edges(edges, src, dst)
     und = e.unionByName(
         e.select(F.col("b").alias("a"), F.col("a").alias("b"))
     )

@@ -542,12 +542,19 @@ class TestCoreNumbers:
     def test_max_iter_exhaustion_raises(self, spark):
         from big_data_in_agriculture_spark.operators.graph import (
             core_numbers,
+            label_propagation,
         )
 
-        # a graph that needs at least one update round to converge
+        # a graph that needs at least one update round to converge —
+        # both operators share the fixpoint loop, each keeps its own
+        # non-convergence message
         e = spark.createDataFrame([(1, 2), (2, 3)], ["src", "dst"])
         with pytest.raises(RuntimeError, match="did not converge"):
             core_numbers(e, max_iter=1)
+        with pytest.raises(
+            RuntimeError, match="did not reach a fixpoint"
+        ):
+            label_propagation(e, max_iter=1)
 
     def test_agrees_with_kcore_at_every_k(self, spark):
         from big_data_in_agriculture_spark.operators.graph import (
@@ -651,6 +658,40 @@ class TestLabelPropagation:
         a = sorted(map(tuple, label_propagation(e, rounds=3).collect()))
         b = sorted(map(tuple, label_propagation(e, rounds=3).collect()))
         assert a == b
+
+
+@pytest.mark.parametrize(
+    "op, col",
+    [("core_numbers", "core"), ("label_propagation", "community")],
+)
+def test_narrow_rounds_match_wide_rounds(spark, monkeypatch, op, col):
+    # the frontier-restricted (narrow) round only switches on at
+    # _NARROW_MIN_NODES nodes, far above any shipped graph; drop the
+    # floor to 0 so this 66-node graph takes a narrow round whenever
+    # the previous round changed at most 5% of nodes (3 of 66) —
+    # core_numbers from its second round on (the path's churn), LPA
+    # in its settle tail after wide opening rounds — and check both
+    # round shapes agree in fixpoint and fixed-rounds mode
+    from big_data_in_agriculture_spark.operators import graph
+
+    pairs = [(i, i + 1) for i in range(1, 6)]
+    for t in range(20):
+        a = 1000 + 3 * t
+        pairs += [(a, a + 1), (a + 1, a + 2), (a + 2, a)]
+    e = spark.createDataFrame(pairs, ["src", "dst"])
+    fn = getattr(graph, op)
+
+    def results():
+        return [
+            sorted((r["node"], r[col]) for r in fn(e, rounds=n).collect())
+            for n in (None, 8)
+        ]
+
+    wide = results()
+    monkeypatch.setattr(graph, "_NARROW_MIN_NODES", 0)
+    narrow = results()
+    assert len(wide[0]) == 66
+    assert wide[0] == wide[1] == narrow[0] == narrow[1]
 
 
 def test_lpa_rounds_settled_on_testdata(spark):
