@@ -91,8 +91,15 @@ def pin_stats_free(df: DataFrame, eager: bool = True) -> DataFrame:
 
     ``eager=False`` defers materialization to the first downstream
     action (which then writes the checkpoint once and reuses it) —
-    use it when a count/action follows immediately anyway, saving one
-    job per loop round; the stats reset is identical either way.
+    use it when a count/action follows immediately anyway; the stats
+    reset is identical either way. What it defers depends on AQE.
+    With ``spark.sql.adaptive.enabled=false`` it saves one job per loop
+    round. With AQE on (the default) it saves little:
+    ``localCheckpoint(eager=False)`` still runs every shuffle stage of
+    the pinned plan at call time, because building the checkpoint RDD
+    calls ``AdaptiveSparkPlanExec.execute()``, which materializes its
+    query stages; only the final stage is deferred (measured at
+    sf0.01: pagerank builds with 42 jobs under AQE, 8 without).
     """
     ck = df.localCheckpoint(eager=eager)
     jdf = ck._jdf

@@ -215,6 +215,46 @@ def _affine_params(i: int) -> tuple[int, int]:
     return a, b
 
 
+def _affine_table(num_perm: int):
+    """``(a_vec, b_vec, mers)``: the num_perm affine permutations
+    (``_affine_params``) as int64 arrays, plus the 2^61−1 modulus."""
+    import numpy as np
+
+    params = [_affine_params(i) for i in range(num_perm)]
+    a_vec = np.array([a for a, _ in params], dtype=np.int64)
+    b_vec = np.array([b for _, b in params], dtype=np.int64)
+    return a_vec, b_vec, np.int64(_MERSENNE61)
+
+
+def _affine_min(hv, table):
+    """One MinHash signature: column minima of the (|S| × num_perm)
+    affine grid ``(a_i*h + b_i) mod 2^61−1`` over the int64 shingle
+    hashes ``hv``. a, b < 2^31 and h < 2^32 keep a*h+b < 2^63, so
+    int64 numpy arithmetic is bit-identical to the Column and SQL
+    folds."""
+    a_vec, b_vec, mers = table
+    return ((hv[:, None] * a_vec[None, :] + b_vec) % mers).min(axis=0)
+
+
+def _band_buckets(sig, bands: int, rows_per_band: int) -> list[int]:
+    """Portable band keys of one signature: per band, the top 60 bits
+    of ``md5('s0|s1|…')`` — the oracle's
+    ``('0x' || substr(md5(joined), 1, 15))::BIGINT``."""
+    import hashlib
+
+    out = []
+    for i in range(bands):
+        joined = "|".join(
+            str(int(x))
+            for x in sig[i * rows_per_band : (i + 1) * rows_per_band]
+        )
+        out.append(
+            int.from_bytes(hashlib.md5(joined.encode()).digest()[:8], "big")
+            >> 4
+        )
+    return out
+
+
 def minhash_signatures(
     docs: DataFrame,
     num_perm: int = 64,
@@ -261,10 +301,7 @@ def minhash_signatures(
     from pyspark.sql.pandas.functions import pandas_udf
     from pyspark.sql.types import ArrayType, LongType
 
-    params = [_affine_params(i) for i in range(num_perm)]
-    a_vec = np.array([a for a, _ in params], dtype=np.int64)
-    b_vec = np.array([b for _, b in params], dtype=np.int64)
-    mers = np.int64(_MERSENNE61)
+    table = _affine_table(num_perm)
 
     if portable:
         # Tokenize + shingle + md5 + affine minima in ONE Arrow kernel.
@@ -285,8 +322,7 @@ def minhash_signatures(
                 hv = np.fromiter(
                     shingles, dtype=np.int64, count=len(shingles)
                 )
-                sig = ((hv[:, None] * a_vec[None, :] + b_vec) % mers).min(axis=0)
-                out.append(sig)
+                out.append(_affine_min(hv, table))
             return pd.Series(out)
 
         return _fan_out(docs).select(
@@ -315,10 +351,7 @@ def minhash_signatures(
     def _sig(hashes: pd.Series) -> pd.Series:
         out = []
         for h in hashes:
-            hv = np.asarray(h, dtype=np.int64)
-            # (|S| × num_perm) affine grid, column minima
-            sig = ((hv[:, None] * a_vec[None, :] + b_vec) % mers).min(axis=0)
-            out.append(sig)
+            out.append(_affine_min(np.asarray(h, dtype=np.int64), table))
         return pd.Series(out)
 
     return shingled.select("id", _sig(F.col("h")).alias("signature"))
@@ -347,34 +380,17 @@ def lsh_band_keys(
     form. Either way the key is uniform and skew-free.
     """
     if portable:
-        import hashlib
-
         import pandas as pd
         from pyspark.sql.pandas.functions import pandas_udf
         from pyspark.sql.types import ArrayType, LongType
 
         @pandas_udf(ArrayType(LongType()))
         def _buckets(sigs: pd.Series) -> pd.Series:
-            out = []
-            for sig in sigs:
-                if sig is None:
-                    out.append(None)
-                    continue
-                bs = []
-                for i in range(bands):
-                    joined = "|".join(
-                        str(int(x))
-                        for x in sig[i * rows_per_band : (i + 1) * rows_per_band]
-                    )
-                    # == ('0x' || substr(md5(joined),1,15))::BIGINT
-                    bs.append(
-                        int.from_bytes(
-                            hashlib.md5(joined.encode()).digest()[:8], "big"
-                        )
-                        >> 4
-                    )
-                out.append(bs)
-            return pd.Series(out)
+            return pd.Series([
+                None if sig is None
+                else _band_buckets(sig, bands, rows_per_band)
+                for sig in sigs
+            ])
 
         return signatures.select(
             "id",
@@ -453,18 +469,13 @@ def _banded_text(
     second worker pass. Same helpers, same arithmetic, bit-identical
     buckets — pinned by test_llm::test_fused_banding_matches_two_pass.
     """
-    import hashlib
-
     import numpy as np
     import pandas as pd
     from pyspark.sql.pandas.functions import pandas_udf
     from pyspark.sql.types import ArrayType, LongType
 
     rows_per_band = num_perm // bands
-    params = [_affine_params(i) for i in range(num_perm)]
-    a_vec = np.array([a for a, _ in params], dtype=np.int64)
-    b_vec = np.array([b for _, b in params], dtype=np.int64)
-    mers = np.int64(_MERSENNE61)
+    table = _affine_table(num_perm)
 
     @pandas_udf(ArrayType(LongType()))
     def _buckets_text(texts: pd.Series) -> pd.Series:
@@ -475,21 +486,9 @@ def _banded_text(
                 continue
             shingles = _md5_shingle_hashes(txt, k)
             hv = np.fromiter(shingles, dtype=np.int64, count=len(shingles))
-            sig = ((hv[:, None] * a_vec[None, :] + b_vec) % mers).min(axis=0)
-            bs = []
-            for i in range(bands):
-                joined = "|".join(
-                    str(int(x))
-                    for x in sig[i * rows_per_band : (i + 1) * rows_per_band]
-                )
-                # == ('0x' || substr(md5(joined),1,15))::BIGINT
-                bs.append(
-                    int.from_bytes(
-                        hashlib.md5(joined.encode()).digest()[:8], "big"
-                    )
-                    >> 4
-                )
-            out.append(bs)
+            out.append(
+                _band_buckets(_affine_min(hv, table), bands, rows_per_band)
+            )
         return pd.Series(out)
 
     return _fan_out(docs).select(

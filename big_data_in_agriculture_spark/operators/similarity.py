@@ -33,10 +33,13 @@ across the whole kNN family:
 
 Shared cost discipline (round 7, measured in SCALE.md): casts and L2
 norms hoist to one map-side projection per ROW (``_dnormed`` /
-``_prenorm_sim`` — float-identical to inline cosine), and every
-screen's top-C window sees THIN (id, id, score) rows — survivors'
-vectors come back by id join. Recall is asserted on planted
-near-neighbors (tests/test_contamination_anomaly.py), not on noise.
+``_prenorm_sim`` — float-identical to inline cosine). Every operator
+ends in ``_topk`` (cosine rounded by ``_cos6``, neighbor-id tie-break,
+rank ≤ k), and the four screened paths (RP, PQ, IVF-PQ, SQ) reach it
+through ``_screen_rerank``: the top-C window sees THIN (id, id, score)
+rows and survivors' vectors come back by id join for the exact
+re-rank. Recall is asserted on planted near-neighbors
+(tests/test_contamination_anomaly.py), not on noise.
 
 Vector math that feeds an ORACLE comparison is JVM-side higher-order
 functions (zip_with / aggregate / transform) over array columns, floats
@@ -127,6 +130,84 @@ def _dnormed(df: DataFrame, id_col: str, vec_col: str, prefix: str) -> DataFrame
     ).withColumn(f"{prefix}_norm", _norm(F.col(f"{prefix}_vec")))
 
 
+def _cos6(vec: str = "vec", norm: str = "norm") -> F.Column:
+    """The kNN family's pair score: ``_prenorm_sim`` of the
+    ``query_{vec}``/``neighbor_{vec}`` columns over their ``*_{norm}``
+    columns, rounded to 6 dp BEFORE any ranking so last-ulp fold-order
+    differences between engines cannot reorder neighbors."""
+    return F.round(
+        _prenorm_sim(
+            F.col(f"query_{vec}"), F.col(f"neighbor_{vec}"),
+            F.col(f"query_{norm}"), F.col(f"neighbor_{norm}"),
+        ),
+        6,
+    )
+
+
+def _topk(scored: DataFrame, k: int) -> DataFrame:
+    """The kNN output contract over (query_id, neighbor_id, cosine_sim)
+    rows: per query, ``row_number`` by cosine DESC with the neighbor id
+    as the deterministic tie-break, ranks ≤ k kept. Catalyst plants a
+    WindowGroupLimit below the exchange for the rank filter."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine_sim").desc(), F.col("neighbor_id")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "cosine_sim", "rank")
+    )
+
+
+def _screen_rerank(
+    scored: DataFrame,
+    order: F.Column,
+    n_candidates: int,
+    cv: DataFrame,
+    qv: DataFrame,
+    k: int,
+) -> DataFrame:
+    """Screen → exact re-rank → top-k, the tail of every compressed or
+    projected kNN path (``knn_rp``, ``knn_pq``, ``knn_ivfpq``,
+    ``knn_sq``).
+
+    ``scored`` holds THIN (query_id, neighbor_id, score) rows; per query
+    the top ``n_candidates`` by ``order`` (neighbor-id tie-break)
+    survive. Carrying full-dim vectors through that window was measured
+    1.6× SLOWER than brute force at Q=200 × 300k corpus: the rank-limit
+    pushdown sorts every scored pair map-side, and each wide row hauls
+    two vectors through the sort — thin rows keep the payload ~24
+    bytes. Survivors fetch their vectors back by id: ``cv``
+    (neighbor_id, neighbor_vec, neighbor_norm) is scanned against the
+    broadcast candidate ids, then ``qv`` (query_id, query_vec,
+    query_norm) joins by broadcast. Exact ``_cos6`` on the
+    ≤ Q × n_candidates survivors, then ``_topk``.
+    """
+    wc = Window.partitionBy("query_id").orderBy(order, F.col("neighbor_id"))
+    cands = (
+        scored.withColumn("_crank", F.row_number().over(wc))
+        .filter(F.col("_crank") <= n_candidates)
+        .select("query_id", "neighbor_id")
+    )
+    exact = (
+        cv.join(F.broadcast(cands), "neighbor_id")
+        .join(F.broadcast(qv), "query_id")
+        .select("query_id", "neighbor_id", _cos6().alias("cosine_sim"))
+    )
+    return _topk(exact, k)
+
+
+def _no_neighbors(corpus: DataFrame, id_col: str) -> DataFrame:
+    """The empty kNN result (``_topk``'s schema) for a model trained on
+    an empty corpus: no index cells or codebooks, so no neighbors."""
+    return corpus.select(
+        F.col(id_col).alias("query_id"),
+        F.col(id_col).alias("neighbor_id"),
+        F.lit(0.0).cast("double").alias("cosine_sim"),
+        F.lit(0).cast("int").alias("rank"),
+    ).filter(F.lit(False))
+
+
 def vec_is_valid(col) -> F.Column:
     """True iff ``col`` is a usable embedding: non-NULL, with every
     component non-NULL and finite.
@@ -199,7 +280,6 @@ def knn_bruteforce(
     k: int = 3,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    round_digits: int | None = 6,
 ) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector.
 
@@ -214,41 +294,27 @@ def knn_bruteforce(
     """
     q = _dnormed(queries, id_col, vec_col, "query")
     c = _dnormed(_fan_out(corpus), id_col, vec_col, "neighbor")
-    sim = _prenorm_sim(
-        F.col("query_vec"), F.col("neighbor_vec"),
-        F.col("query_norm"), F.col("neighbor_norm"),
-    )
-    if round_digits is not None:
-        sim = F.round(sim, round_digits)
     scored = (
         c.join(F.broadcast(q))
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id", "neighbor_id", sim.alias("cosine_sim")
-        )
+        .select("query_id", "neighbor_id", _cos6().alias("cosine_sim"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
-    )
+    return _topk(scored, k)
 
 
-def _centroid_dist_pairs(vec, cents: list[list[float]]) -> F.Column:
-    """(squared-distance, cid) structs against a centroid model.
+def _nearest(vec, cents: list[list[float]]) -> F.Column:
+    """(squared-distance, cid) structs against a centroid model, nearest
+    first — ``F.slice(_nearest(...), 1, n)`` is an n-cell probe list.
 
     The whole centroid table ships as ONE nested-array literal and the
     per-centroid math runs inside a single ``transform`` — O(1) plan
     nodes regardless of centroid count (the per-centroid expression-tree
     formulation grew the plan by k×dim nodes, capping usable k), while
     staying a pure map-side projection: no join, no shuffle, at any
-    corpus size. argmin = ``array_sort(...)[0]`` with the cid as the
+    corpus size. ``array_sort`` orders by distance with the cid as the
     deterministic tie-break.
     """
-    return F.transform(
+    return F.array_sort(F.transform(
         arr_lit([[float(x) for x in c] for c in cents]),
         lambda c, i: F.struct(
             F.aggregate(
@@ -258,7 +324,12 @@ def _centroid_dist_pairs(vec, cents: list[list[float]]) -> F.Column:
             ).alias("d"),
             i.cast("int").alias("cid"),
         ),
-    )
+    ))
+
+
+def _argmin(vec, cents: list[list[float]]) -> F.Column:
+    """The nearest centroid's id (see ``_nearest``)."""
+    return _nearest(vec, cents)[0]["cid"]
 
 
 def _hyperplane(seed: int, table: int, bit: int, dim: int) -> list[float]:
@@ -406,28 +477,11 @@ def knn_lsh(
     cand = (
         qb.join(cb, ["tbl", "bucket"])
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                _prenorm_sim(
-                    F.col("query_vec"), F.col("neighbor_vec"),
-                    F.col("query_norm"), F.col("neighbor_norm"),
-                ),
-                6,
-            ).alias("cosine_sim"),
-        )
+        .select("query_id", "neighbor_id", _cos6().alias("cosine_sim"))
         .groupBy("query_id", "neighbor_id")
         .agg(F.max("cosine_sim").alias("cosine_sim"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
-    )
+    return _topk(cand, k)
 
 
 def knn_ivf(
@@ -471,37 +525,28 @@ def knn_ivf(
         corpus, k=n_centroids, max_iter=coarse_iters, vec_col=vec_col,
         id_col=id_col, tol=0.0, quantize=coarse_quantize,
     )
-    if not cents:  # empty corpus: no index cells, no neighbors
-        return corpus.select(
-            F.col(id_col).alias("query_id"),
-            F.col(id_col).alias("neighbor_id"),
-            F.lit(0.0).cast("double").alias("cosine_sim"),
-            F.lit(0).cast("int").alias("rank"),
-        ).filter(F.lit(False))
+    if not cents:
+        return _no_neighbors(corpus, id_col)
 
-    # argmin / top-probe via ONE array_sort over (d, cid) structs from a
-    # single nested-array centroid literal (_centroid_dist_pairs): the
-    # plan stays O(1) nodes however many cells the index has, and the
-    # assignment remains a map-only projection.
-    def dist_pairs(vec) -> F.Column:
-        return _centroid_dist_pairs(vec, cents)
-
-    # cast + norm hoisted below the cell join (see _prenorm_sim) —
-    # cell members can be numerous at scale and paid per PAIR before
+    # assignment and probe lists are one array_sort over a single
+    # nested-array centroid literal (_nearest): the plan stays O(1)
+    # nodes however many cells the index has, and both remain map-only
+    # projections. cast + norm hoisted below the cell join (see
+    # _prenorm_sim) — cell members can be numerous at scale and paid
+    # per PAIR before
     assigned = _fan_out(corpus).select(
         F.col(id_col).alias("neighbor_id"),
         _dvec(F.col(vec_col)).alias("neighbor_vec"),
-        F.array_sort(dist_pairs(F.col(vec_col)))[0]["cid"].alias("cluster"),
+        _argmin(F.col(vec_col), cents).alias("cluster"),
     ).withColumn("neighbor_norm", _norm(F.col("neighbor_vec")))
 
     # queries probe their n_probe nearest clusters
-    def probe_expr(vec) -> F.Column:
-        return F.slice(F.array_sort(dist_pairs(vec)), 1, n_probe)
-
     probed = queries.select(
         F.col(id_col).alias("query_id"),
         _dvec(F.col(vec_col)).alias("query_vec"),
-        F.explode(probe_expr(F.col(vec_col))).alias("p"),
+        F.explode(
+            F.slice(_nearest(F.col(vec_col), cents), 1, n_probe)
+        ).alias("p"),
     ).select(
         "query_id", "query_vec", F.col("p.cid").alias("cluster")
     ).withColumn("query_norm", _norm(F.col("query_vec")))
@@ -513,28 +558,11 @@ def knn_ivf(
     cand = (
         assigned.join(F.broadcast(probed), "cluster")
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                _prenorm_sim(
-                    F.col("query_vec"), F.col("neighbor_vec"),
-                    F.col("query_norm"), F.col("neighbor_norm"),
-                ),
-                6,
-            ).alias("cosine_sim"),
-        )
+        .select("query_id", "neighbor_id", _cos6().alias("cosine_sim"))
         .groupBy("query_id", "neighbor_id")
         .agg(F.max("cosine_sim").alias("cosine_sim"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
-    )
+    return _topk(cand, k)
 
 
 def embedding_neardup_pairs(
@@ -783,15 +811,10 @@ def _kmeans_fit_pinned(
     if not cents:  # empty corpus: no centroids, no iterations
         return []
 
-    def dist_pairs(vec, cent_list) -> F.Column:
-        return _centroid_dist_pairs(vec, cent_list)
-
     dim = len(cents[0])
     for _ in range(max_iter):
         assigned = data.select(
-            F.array_sort(dist_pairs(F.col(vec_col), cents))[0]["cid"].alias(
-                "cluster"
-            ),
+            _argmin(F.col(vec_col), cents).alias("cluster"),
             _dvec(F.col(vec_col)).alias("v"),
         )
         # mean vector per cluster via posexplode to (cluster, dim)
@@ -851,9 +874,8 @@ def kmeans_assign(
         return embeddings.select(
             F.col(id_col), F.lit(0).cast("int").alias("cluster")
         ).filter(F.lit(False))
-    pairs = _centroid_dist_pairs(F.col(vec_col), centroids)
     return embeddings.select(
-        F.col(id_col), F.array_sort(pairs)[0]["cid"].alias("cluster")
+        F.col(id_col), _argmin(F.col(vec_col), centroids).alias("cluster")
     )
 
 
@@ -908,9 +930,7 @@ def semantic_dedup(
     # the k-centroid argmin instead of recomputing it per consumer
     with_vec = data.select(
         F.col(id_col),
-        F.array_sort(_centroid_dist_pairs(F.col(vec_col), cents))[0][
-            "cid"
-        ].alias("cluster"),
+        _argmin(F.col(vec_col), cents).alias("cluster"),
         _dvec(F.col(vec_col)).alias("_v"),
     ).withColumn("_n", _norm(F.col("_v"))).localCheckpoint(eager=False)
     assigned = with_vec.select(F.col(id_col), F.col("cluster"))
@@ -1047,7 +1067,7 @@ def random_project(
     Map-only, zero shuffles: the whole sign matrix ships as ONE nested
     array literal and the per-output-dimension dot products run inside
     a single ``transform`` — O(1) plan nodes regardless of ``out_dim``
-    (the ``_centroid_dist_pairs`` trick). Components are quantized to
+    (the ``_nearest`` trick). Components are quantized to
     ``round_digits`` BEFORE anything downstream consumes them, so an
     engine fold-order ulp can never flip a downstream comparison (the
     same contract as LSH bucket signs). Quantization is the explicit
@@ -1121,15 +1141,8 @@ def knn_rp(
 
     q = _side(queries, "query")
     c = _side(_fan_out(corpus), "neighbor")
-    # The screen emits THIN rows — (query_id, neighbor_id, proj_sim)
-    # only. Carrying the full-dim vectors through the top-C window was
-    # measured 1.6× SLOWER than brute force at Q=200 × 300k corpus:
-    # the rank-limit pushdown has to sort every scored pair map-side,
-    # and each wide row hauled two 64-dim arrays through that sort.
-    # Thin rows keep the sort payload ~24 bytes; the exact re-rank
-    # fetches vectors back by id for only the Q × n_candidates
-    # survivors (broadcast of the candidate ids, corpus scanned, then
-    # a broadcast join for the query side).
+    # the screen scores in the projected space over thin rows; the
+    # exact re-rank reads the full-dim columns of the same two sides
     scored = (
         c.select("neighbor_id", "neighbor_proj", "neighbor_pnorm")
         .join(F.broadcast(
@@ -1137,51 +1150,15 @@ def knn_rp(
         ))
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                _prenorm_sim(
-                    F.col("query_proj"), F.col("neighbor_proj"),
-                    F.col("query_pnorm"), F.col("neighbor_pnorm"),
-                ),
-                6,
-            ).alias("proj_sim"),
+            "query_id", "neighbor_id",
+            _cos6("proj", "pnorm").alias("proj_sim"),
         )
     )
-    wc = Window.partitionBy("query_id").orderBy(
-        F.col("proj_sim").desc(), F.col("neighbor_id")
-    )
-    cands = (
-        scored.withColumn("_crank", F.row_number().over(wc))
-        .filter(F.col("_crank") <= n_candidates)
-        .select("query_id", "neighbor_id")
-    )
-    exact = (
-        c.select("neighbor_id", "neighbor_vec", "neighbor_norm")
-        .join(F.broadcast(cands), "neighbor_id")
-        .join(
-            F.broadcast(q.select("query_id", "query_vec", "query_norm")),
-            "query_id",
-        )
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                _prenorm_sim(
-                    F.col("query_vec"), F.col("neighbor_vec"),
-                    F.col("query_norm"), F.col("neighbor_norm"),
-                ),
-                6,
-            ).alias("cosine_sim"),
-        )
-    )
-    wk = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(wk).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
+    return _screen_rerank(
+        scored, F.col("proj_sim").desc(), n_candidates,
+        c.select("neighbor_id", "neighbor_vec", "neighbor_norm"),
+        q.select("query_id", "query_vec", "query_norm"),
+        k,
     )
 
 
@@ -1263,11 +1240,7 @@ def _pq_train_pinned(
     ]
     for _ in range(max_iter):
         cluster_ids = F.array(*[
-            F.array_sort(
-                _centroid_dist_pairs(
-                    F.slice(F.col(vec_col), s * sub + 1, sub), books[s]
-                )
-            )[0]["cid"]
+            _argmin(F.slice(F.col(vec_col), s * sub + 1, sub), books[s])
             for s in range(n_subspaces)
         ])
         assigned = data.select(
@@ -1310,18 +1283,15 @@ def pq_encode(
     """Attach ``code_col``: per-subspace nearest-centroid ids (int
     array, length n_subspaces). Map-only — every subspace's argmin is
     one ``array_sort`` over (distance, cid) structs against a nested
-    codebook literal (the ``_centroid_dist_pairs`` trick), zero
+    codebook literal (the ``_nearest`` trick), zero
     shuffles, 64→8 bytes per vector at the default geometry. Ties
     break on cid, distances are the same left-to-right float64 folds
     the SQL twin runs, so codes are engine-deterministic."""
-    n_sub = len(codebooks)
-    sub = dim // n_sub
-    cols = []
-    for s, book in enumerate(codebooks):
-        slice_ = F.slice(F.col(vec_col), s * sub + 1, sub)
-        cols.append(
-            F.array_sort(_centroid_dist_pairs(slice_, book))[0]["cid"]
-        )
+    sub = dim // len(codebooks)
+    cols = [
+        _argmin(F.slice(F.col(vec_col), s * sub + 1, sub), book)
+        for s, book in enumerate(codebooks)
+    ]
     return df.filter(vec_is_valid(F.col(vec_col))).withColumn(
         code_col, F.array(*cols)
     )
@@ -1353,6 +1323,20 @@ def _pq_lut(vec, codebooks: list[list[list[float]]], sub: int) -> F.Column:
             )
         )
     return F.array(*luts)
+
+
+def _adc(lut, codes) -> F.Column:
+    """Asymmetric-distance score of one (query LUT, PQ code word) pair:
+    ``sum_s lut[s][codes[s]]``, folded left-to-right in float64 and
+    rounded to 6 dp before the screen ranks on it."""
+    return F.round(
+        F.aggregate(
+            F.zip_with(lut, codes, lambda l, cd: F.element_at(l, cd + 1)),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        ),
+        6,
+    )
 
 
 def knn_pq(
@@ -1395,12 +1379,7 @@ def knn_pq(
         vec_col=vec_col, id_col=id_col, quantize=quantize,
     )
     if not books or not books[0]:
-        return corpus.select(
-            F.col(id_col).alias("query_id"),
-            F.col(id_col).alias("neighbor_id"),
-            F.lit(0.0).cast("double").alias("cosine_sim"),
-            F.lit(0).cast("int").alias("rank"),
-        ).filter(F.lit(False))
+        return _no_neighbors(corpus, id_col)
     sub = dim // n_subspaces
     c = pq_encode(_fan_out(corpus), books, dim, vec_col=vec_col).select(
         F.col(id_col).alias("neighbor_id"), "pq_codes"
@@ -1409,55 +1388,19 @@ def knn_pq(
         F.col(id_col).alias("query_id"),
         _pq_lut(F.col(vec_col), books, sub).alias("lut"),
     )
-    adc = F.round(
-        F.aggregate(
-            F.zip_with(
-                F.col("lut"),
-                F.col("pq_codes"),
-                lambda l, cd: F.element_at(l, cd + 1),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        6,
-    )
     scored = (
         c.join(F.broadcast(q))
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", adc.alias("approx_d"))
-    )
-    wc = Window.partitionBy("query_id").orderBy(
-        F.col("approx_d"), F.col("neighbor_id")
-    )
-    cands = (
-        scored.withColumn("_crank", F.row_number().over(wc))
-        .filter(F.col("_crank") <= n_candidates)
-        .select("query_id", "neighbor_id")
-    )
-    cv = _dnormed(corpus, id_col, vec_col, "neighbor")
-    qv = _dnormed(queries, id_col, vec_col, "query")
-    exact = (
-        cv.join(F.broadcast(cands), "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
         .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                _prenorm_sim(
-                    F.col("query_vec"), F.col("neighbor_vec"),
-                    F.col("query_norm"), F.col("neighbor_norm"),
-                ),
-                6,
-            ).alias("cosine_sim"),
+            "query_id", "neighbor_id",
+            _adc(F.col("lut"), F.col("pq_codes")).alias("approx_d"),
         )
     )
-    wk = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(wk).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
+    return _screen_rerank(
+        scored, F.col("approx_d"), n_candidates,
+        _dnormed(corpus, id_col, vec_col, "neighbor"),
+        _dnormed(queries, id_col, vec_col, "query"),
+        k,
     )
 
 
@@ -1475,9 +1418,7 @@ def _residual_frame(
     cent_lit = arr_lit([[float(x) for x in c] for c in cents])
     return corpus_f.select(
         F.col(id_col),
-        F.array_sort(_centroid_dist_pairs(F.col(vec_col), cents))[0][
-            "cid"
-        ].alias("cluster"),
+        _argmin(F.col(vec_col), cents).alias("cluster"),
         _dvec(F.col(vec_col)).alias("_v"),
     ).select(
         id_col,
@@ -1623,18 +1564,9 @@ def knn_ivfpq(
     else:
         cents, books = centroids, codebooks
     if not cents or not books or not books[0]:
-        return corpus.select(
-            F.col(id_col).alias("query_id"),
-            F.col(id_col).alias("neighbor_id"),
-            F.lit(0.0).cast("double").alias("cosine_sim"),
-            F.lit(0).cast("int").alias("rank"),
-        ).filter(F.lit(False))
+        return _no_neighbors(corpus, id_col)
     sub = dim // n_subspaces
     cent_lit = arr_lit([[float(x) for x in c] for c in cents])
-
-    def dist_pairs(vec) -> F.Column:
-        return _centroid_dist_pairs(vec, cents)
-
     # barrier the residual frame before encoding: interpreted HOFs have
     # no CSE and CollapseProject would inline the residual expression —
     # which embeds the n_centroids-wide coarse argmin — into every one
@@ -1666,7 +1598,7 @@ def knn_ivfpq(
         "query_id",
         "_qv",
         F.explode(
-            F.slice(F.array_sort(dist_pairs(F.col("_qv"))), 1, n_probe)
+            F.slice(_nearest(F.col("_qv"), cents), 1, n_probe)
         ).alias("p"),
     ).select(
         "query_id", "_qv", F.col("p.cid").alias("cluster")
@@ -1683,18 +1615,6 @@ def knn_ivfpq(
             sub,
         ).alias("lut"),
     )
-    adc = F.round(
-        F.aggregate(
-            F.zip_with(
-                F.col("lut"),
-                F.col("pq_codes"),
-                lambda l, cd: F.element_at(l, cd + 1),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        6,
-    )
     # the QUERY side is the broadcast build side, the ENCODED CORPUS
     # the streamed side — never the reverse. Without the hint Spark
     # happily broadcasts the (small-looking) corpus codes and streams
@@ -1705,40 +1625,16 @@ def knn_ivfpq(
     scored = (
         c.join(F.broadcast(q), "cluster")
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", adc.alias("approx_d"))
-    )
-    wc = Window.partitionBy("query_id").orderBy(
-        F.col("approx_d"), F.col("neighbor_id")
-    )
-    cands = (
-        scored.withColumn("_crank", F.row_number().over(wc))
-        .filter(F.col("_crank") <= n_candidates)
-        .select("query_id", "neighbor_id")
-    )
-    cv = _dnormed(corpus, id_col, vec_col, "neighbor")
-    qv = _dnormed(queries, id_col, vec_col, "query")
-    exact = (
-        cv.join(F.broadcast(cands), "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
         .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                _prenorm_sim(
-                    F.col("query_vec"), F.col("neighbor_vec"),
-                    F.col("query_norm"), F.col("neighbor_norm"),
-                ),
-                6,
-            ).alias("cosine_sim"),
+            "query_id", "neighbor_id",
+            _adc(F.col("lut"), F.col("pq_codes")).alias("approx_d"),
         )
     )
-    wk = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(wk).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
+    return _screen_rerank(
+        scored, F.col("approx_d"), n_candidates,
+        _dnormed(corpus, id_col, vec_col, "neighbor"),
+        _dnormed(queries, id_col, vec_col, "query"),
+        k,
     )
 
 
@@ -1855,12 +1751,7 @@ def knn_sq(
     """
     b = bounds if bounds is not None else sq_train(corpus, dim, vec_col)
     if not b:
-        return corpus.select(
-            F.col(id_col).alias("query_id"),
-            F.col(id_col).alias("neighbor_id"),
-            F.lit(0.0).cast("double").alias("cosine_sim"),
-            F.lit(0).cast("int").alias("rank"),
-        ).filter(F.lit(False))
+        return _no_neighbors(corpus, id_col)
     mins, _, steps = _sq_consts(b)
     c = sq_encode(_fan_out(corpus), b, vec_col=vec_col).select(
         F.col(id_col).alias("neighbor_id"), "sq_codes"
@@ -1888,38 +1779,11 @@ def knn_sq(
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id", approx_d.alias("approx_d"))
     )
-    wc = Window.partitionBy("query_id").orderBy(
-        F.col("approx_d"), F.col("neighbor_id")
-    )
-    cands = (
-        scored.withColumn("_crank", F.row_number().over(wc))
-        .filter(F.col("_crank") <= n_candidates)
-        .select("query_id", "neighbor_id")
-    )
-    cv = _dnormed(corpus, id_col, vec_col, "neighbor")
-    qv = _dnormed(queries, id_col, vec_col, "query")
-    exact = (
-        cv.join(F.broadcast(cands), "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                _prenorm_sim(
-                    F.col("query_vec"), F.col("neighbor_vec"),
-                    F.col("query_norm"), F.col("neighbor_norm"),
-                ),
-                6,
-            ).alias("cosine_sim"),
-        )
-    )
-    wk = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(wk).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
+    return _screen_rerank(
+        scored, F.col("approx_d"), n_candidates,
+        _dnormed(corpus, id_col, vec_col, "neighbor"),
+        _dnormed(queries, id_col, vec_col, "query"),
+        k,
     )
 
 

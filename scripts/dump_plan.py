@@ -1,12 +1,36 @@
 """Dump .explain("formatted") for named queries to <outdir>/<query>_<tag>.txt.
 
 Usage: python scripts/dump_plan.py <outdir> <tag> query [query ...]
+
+Expression ids (``#123``), plan ids (``plan_id=7``, ``[id=#7]``),
+checkpointed RDD ids (``MapPartitionsRDD[90]``) and lambda variable
+suffixes (``x_41``) come from process-wide counters, so they shift
+whenever anything else is built first. They are written as ``#N``,
+``plan_id=N``, ``[id=N]``, ``RDD[N]`` and ``x_N``: dump the same queries
+with the same tag from two checkouts into two directories, and
+``diff -r`` of the directories shows only real plan changes.
 """
 
 import os
+import re
 import sys
 
 from selfcheck import session
+
+_IDS = (
+    (re.compile(r"#\d+L?\b"), "#N"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"\[id=#?\d+\]"), "[id=N]"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
+    (re.compile(r"\b([xyz])_\d+\b"), r"\1_N"),
+)
+
+
+def normalize(plan: str) -> str:
+    """``plan`` with every counter-assigned id replaced by a fixed token."""
+    for pat, rep in _IDS:
+        plan = pat.sub(rep, plan)
+    return plan
 
 
 def main() -> int:
@@ -20,7 +44,7 @@ def main() -> int:
 
     qs = entrymod.queries()
     for name in names:
-        plan = formatted_plan(qs[name](spark, sf_dir))
+        plan = normalize(formatted_plan(qs[name](spark, sf_dir)))
         path = os.path.join(outdir, f"{name}_{tag}.txt")
         with open(path, "w") as fh:
             fh.write(plan)

@@ -93,6 +93,28 @@ def test_knn_bruteforce_is_intentional_broadcast_product(spark, em):
     assert "BroadcastNestedLoopJoin" in plan
 
 
+@pytest.mark.parametrize("query", ["knn_rp", "knn_pq", "knn_ivfpq", "knn_sq"])
+def test_screened_knn_joins_back_by_broadcast(spark, em, query):
+    # the shared screen -> exact re-rank tail fetches the survivors'
+    # vectors back by id through broadcast-hinted hash joins; a
+    # shuffled join or a product there would move the whole corpus.
+    # Size-based auto-broadcast is off, so only the hints can make a
+    # BroadcastHashJoin (every input is tiny at sf0.001).
+    import re
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        plan = explain.formatted_plan(getattr(em, f"q_{query}")(spark, SF))
+    finally:
+        spark.conf.set(key, old)
+    assert "SortMergeJoin" not in plan
+    assert "CartesianProduct" not in plan
+    bhj = re.findall(r"^\(\d+\) BroadcastHashJoin", plan, re.M)
+    assert len(bhj) >= 2, plan
+
+
 def test_window_single_shuffle_reuse(spark, em):
     # running_total + row_number share one (partition, order) spec —
     # the plan must contain exactly one Window shuffle for orders

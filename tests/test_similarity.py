@@ -525,20 +525,6 @@ class TestRandomProjection:
                similarity.random_project(df, in_dim=2, out_dim=2).collect()]
         assert ids == [1]
 
-    def test_knn_rp_exact_when_candidates_cover_corpus(self, spark):
-        # with n_candidates >= corpus size the screen is a no-op and
-        # knn_rp must return exactly knn_bruteforce's answer
-        from pyspark.sql import functions as F
-
-        emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-        q = emb.filter(F.col("vec_id") < 5)
-        brute = sorted(map(tuple, similarity.knn_bruteforce(
-            emb, q, k=3).collect()))
-        rp = sorted(map(tuple, similarity.knn_rp(
-            emb, q, dim=64, k=3, out_dim=16,
-            n_candidates=10_000).collect()))
-        assert rp == brute
-
 
 class TestProductQuantization:
     def test_codes_shape_and_determinism(self, spark):
@@ -573,54 +559,6 @@ class TestProductQuantization:
                 sl = vecs[vid][s * 8:(s + 1) * 8]
                 d = ((np.array(books[s]) - sl) ** 2).sum(axis=1)
                 assert got[vid][s] == int(np.argmin(d)), (vid, s)
-
-    def test_knn_pq_exact_when_candidates_cover_corpus(self, spark):
-        from pyspark.sql import functions as F
-
-        emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-        q = emb.filter(F.col("vec_id") < 5)
-        brute = sorted(map(tuple, similarity.knn_bruteforce(
-            emb, q, k=3).collect()))
-        pq = sorted(map(tuple, similarity.knn_pq(
-            emb, q, dim=64, k=3, n_candidates=10_000).collect()))
-        assert pq == brute
-
-    def test_empty_corpus_yields_empty_result(self, spark):
-        from pyspark.sql import functions as F
-
-        emb = spark.read.parquet(
-            "/root/testdata/sf0.001/embeddings.parquet"
-        ).filter(F.lit(False))
-        out = similarity.knn_pq(emb, emb, dim=64, k=3)
-        assert out.collect() == []
-        assert out.columns == ["query_id", "neighbor_id",
-                               "cosine_sim", "rank"]
-
-
-class TestIvfPq:
-    def test_equals_brute_when_probing_everything(self, spark):
-        # probe ALL cells + candidates cover the corpus: both the IVF
-        # pruning and the ADC screen become no-ops and the exact
-        # re-rank must reproduce brute force
-        from pyspark.sql import functions as F
-
-        emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-        q = emb.filter(F.col("vec_id") < 5)
-        brute = sorted(map(tuple, similarity.knn_bruteforce(
-            emb, q, k=3).collect()))
-        got = sorted(map(tuple, similarity.knn_ivfpq(
-            emb, q, dim=64, k=3, n_centroids=8, n_probe=8,
-            n_candidates=10_000).collect()))
-        assert got == brute
-
-    def test_empty_corpus_yields_empty_result(self, spark):
-        from pyspark.sql import functions as F
-
-        emb = spark.read.parquet(
-            "/root/testdata/sf0.001/embeddings.parquet"
-        ).filter(F.lit(False))
-        out = similarity.knn_ivfpq(emb, emb, dim=64, k=3)
-        assert out.collect() == []
 
 
 class TestScalarQuantization:
@@ -681,27 +619,53 @@ class TestScalarQuantization:
                similarity.sq_encode(wild, bounds).collect()}
         assert got[3] == [0] and got[4] == [255]
 
-    def test_knn_sq_exact_when_candidates_cover_corpus(self, spark):
-        from pyspark.sql import functions as F
 
-        emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-        q = emb.filter(F.col("vec_id") < 5)
-        brute = sorted(map(tuple, similarity.knn_bruteforce(
-            emb, q, k=3).collect()))
-        sq = sorted(map(tuple, similarity.knn_sq(
-            emb, q, dim=64, k=3, n_candidates=10_000).collect()))
-        assert sq == brute
+#: The shipped sf0.001 embeddings table.
+_EMB = "/root/testdata/sf0.001/embeddings.parquet"
 
-    def test_empty_corpus_yields_empty_result(self, spark):
-        from pyspark.sql import functions as F
+#: Arguments that make each approximate kNN operator exact on the
+#: sf0.001 corpus: every cell probed and ``n_candidates`` at least the
+#: corpus size, so the IVF pruning and the screen are no-ops.
+_EXACT_KW = {
+    "knn_ivf": dict(n_centroids=8, n_probe=8),
+    "knn_rp": dict(dim=64, out_dim=16, n_candidates=10_000),
+    "knn_pq": dict(dim=64, n_candidates=10_000),
+    "knn_ivfpq": dict(dim=64, n_centroids=8, n_probe=8,
+                      n_candidates=10_000),
+    "knn_sq": dict(dim=64, n_candidates=10_000),
+}
 
-        emb = spark.read.parquet(
-            "/root/testdata/sf0.001/embeddings.parquet"
-        ).filter(F.lit(False))
-        out = similarity.knn_sq(emb, emb, dim=64, k=3)
-        assert out.collect() == []
-        assert out.columns == ["query_id", "neighbor_id",
-                               "cosine_sim", "rank"]
+
+@pytest.mark.parametrize("op", list(_EXACT_KW))
+def test_equals_brute_when_candidates_cover_corpus(spark, op):
+    # the exact re-rank over a no-op screen must return exactly
+    # knn_bruteforce's answer
+    from pyspark.sql import functions as F
+
+    emb = spark.read.parquet(_EMB)
+    q = emb.filter(F.col("vec_id") < 5)
+    brute = sorted(map(tuple, similarity.knn_bruteforce(
+        emb, q, k=3).collect()))
+    got = sorted(map(tuple, getattr(similarity, op)(
+        emb, q, k=3, **_EXACT_KW[op]).collect()))
+    assert got == brute
+
+
+@pytest.mark.parametrize("op", ["knn_ivf", "knn_pq", "knn_ivfpq", "knn_sq"])
+def test_empty_corpus_yields_empty_result(spark, op):
+    # a model trained on no vectors has no cells or codebooks: no rows,
+    # but the same columns and types as a real knn_bruteforce result
+    from pyspark.sql import functions as F
+
+    emb = spark.read.parquet(_EMB)
+    brute = similarity.knn_bruteforce(emb, emb.filter(F.col("vec_id") < 2), k=3)
+    assert brute.count() > 0
+    empty = emb.filter(F.lit(False))
+    kw = {} if op == "knn_ivf" else {"dim": 64}
+    out = getattr(similarity, op)(empty, empty, k=3, **kw)
+    assert out.collect() == []
+    assert out.columns == ["query_id", "neighbor_id", "cosine_sim", "rank"]
+    assert out.dtypes == brute.dtypes
 
 
 class TestDbscan:
