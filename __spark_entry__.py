@@ -8017,7 +8017,7 @@ ORDER BY click_id, purchase_ts
 
 # ---------------------------------------------------------------------------
 # Round-8 widening (8): distributed dense-id assignment
-# (operators/relational.py:assign_dense_ids — the `_range_ntile`
+# (operators/relational.py:assign_dense_ids — the `_range_rank`
 # decomposition with the global rank itself as the product; no
 # single-partition window at any volume).
 # ---------------------------------------------------------------------------

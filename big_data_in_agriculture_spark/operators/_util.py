@@ -109,24 +109,27 @@ def pin_stats_free(df: DataFrame, eager: bool = True) -> DataFrame:
     return DataFrame(njdf, ck.sparkSession)
 
 
-def pin_iter(df: DataFrame, rnd: int, eager: bool = True,
-             reset_every: int = 8) -> DataFrame:
+#: ``pin_iter`` pins every this-many-th round stats-free.
+_STATS_RESET_EVERY = 8
+
+
+def pin_iter(df: DataFrame, rnd: int, eager: bool = True) -> DataFrame:
     """Per-round pin for iterative loops: REAL statistics most rounds,
-    a stats reset every ``reset_every``-th.
+    a stats reset every ``_STATS_RESET_EVERY``-th (8th).
 
     Plain localCheckpoint keeps the plan's real size estimates, which
     is what lets Catalyst broadcast the node-sized label/rank tables
     inside a round — an always-stats-free loop plans sort-merge joins
     everywhere and measured ~5× slower PER ROUND on small graphs. But
     real originStats compound by SQUARING across rounds (bit-lengths
-    21→58→133→282→…, see :func:`pin_stats_free`), so every
-    ``reset_every``-th round pins stats-free instead: 8 rounds of
-    doubling from either a real (~40-bit) or post-reset (63-bit) seed
-    stays around 10-16k bits, orders of magnitude under BigInteger's
-    2^31-bit ceiling, at ANY round count. Short loops (≤ reset_every
-    rounds — the common near-dup / PageRank case) never pay a reset.
+    21→58→133→282→…, see :func:`pin_stats_free`), so every 8th round
+    pins stats-free instead: 8 rounds of doubling from either a real
+    (~40-bit) or post-reset (63-bit) seed stays around 10-16k bits,
+    orders of magnitude under BigInteger's 2^31-bit ceiling, at ANY
+    round count. Short loops (< 8 rounds — the common near-dup /
+    PageRank case) never pay a reset.
     """
-    if (rnd + 1) % reset_every == 0:
+    if (rnd + 1) % _STATS_RESET_EVERY == 0:
         return pin_stats_free(df, eager=eager)
     return df.localCheckpoint(eager=eager)
 

@@ -18,7 +18,9 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.convert import convert_units
@@ -37,6 +39,34 @@ def normalize_time_axis(df: DataFrame) -> DataFrame:
         if cand in df.columns:
             return df.withColumnRenamed(cand, "ts")
     raise ValueError("no time axis found: expected one of ts/valid_time/time")
+
+
+def _spatial_mean(
+    grid: DataFrame,
+    variables: list[str] | None,
+    cast: str | None,
+    mean: Callable[[str], Column],
+) -> DataFrame:
+    """The hourly-mart body shared by both spatial means: ``mean(v)``
+    is the per-variable aggregate over one (region, ts) group."""
+    grid = normalize_time_axis(grid)
+    wanted = variables if variables is not None else RAW_VARIABLES
+    present = [v for v in wanted if v in grid.columns]
+    if not present:
+        raise ValueError(f"none of the requested variables {wanted} present in input")
+
+    hourly = grid.groupBy("region", "ts").agg(*[mean(v).alias(v) for v in present])
+    # Conversion AFTER the mean — reference order (aggregate_hourly.py:71→91).
+    hourly = convert_units(hourly)
+    if cast:
+        for c in hourly.columns:
+            if c not in ("region", "ts"):
+                hourly = hourly.withColumn(c, F.col(c).cast(cast))
+    # Reference sorts each month file by ts (O1, aggregate_hourly.py:89).
+    # Global orderBy would force a range shuffle; within-partition sort
+    # preserves the per-file contract without one (the partitioned mart
+    # writer in sources/marts.py owns the final per-file ordering).
+    return hourly.sortWithinPartitions("region", "ts")
 
 
 def spatial_mean_hourly(
@@ -59,26 +89,7 @@ def spatial_mean_hourly(
     mart's float32 storage without intermediate precision loss. Pass
     ``cast=None`` for oracle-checked paths that compare doubles.
     """
-    grid = normalize_time_axis(grid)
-    wanted = variables if variables is not None else RAW_VARIABLES
-    present = [v for v in wanted if v in grid.columns]
-    if not present:
-        raise ValueError(f"none of the requested variables {wanted} present in input")
-
-    hourly = grid.groupBy("region", "ts").agg(
-        *[F.avg(v).alias(v) for v in present]
-    )
-    # Conversion AFTER the mean — reference order (aggregate_hourly.py:71→91).
-    hourly = convert_units(hourly)
-    if cast:
-        for c in hourly.columns:
-            if c not in ("region", "ts"):
-                hourly = hourly.withColumn(c, F.col(c).cast(cast))
-    # Reference sorts each month file by ts (O1, aggregate_hourly.py:89).
-    # Global orderBy would force a range shuffle; within-partition sort
-    # preserves the per-file contract without one (the partitioned mart
-    # writer in sources/marts.py owns the final per-file ordering).
-    return hourly.sortWithinPartitions("region", "ts")
+    return _spatial_mean(grid, variables, cast, F.avg)
 
 
 def spatial_mean_weighted(
@@ -98,24 +109,11 @@ def spatial_mean_weighted(
     variable, conversions after the mean, identical null semantics
     (a variable's NULL cells drop from BOTH numerator and denominator).
     """
-    from ..functions.convert import convert_units as _convert
-
-    grid = normalize_time_axis(grid)
-    wanted = variables if variables is not None else RAW_VARIABLES
-    present = [v for v in wanted if v in grid.columns]
-    if not present:
-        raise ValueError(f"none of the requested variables {wanted} present in input")
-
     w = F.cos(F.radians(F.col(lat_col)))
-    aggs = []
-    for v in present:
+
+    def mean(v: str) -> Column:
         num = F.sum(F.when(F.col(v).isNotNull(), w * F.col(v)))
         den = F.sum(F.when(F.col(v).isNotNull(), w))
-        aggs.append((num / den).alias(v))
-    hourly = grid.groupBy("region", "ts").agg(*aggs)
-    hourly = _convert(hourly)
-    if cast:
-        for c in hourly.columns:
-            if c not in ("region", "ts"):
-                hourly = hourly.withColumn(c, F.col(c).cast(cast))
-    return hourly.sortWithinPartitions("region", "ts")
+        return num / den
+
+    return _spatial_mean(grid, variables, cast, mean)

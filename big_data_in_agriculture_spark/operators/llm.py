@@ -2726,6 +2726,49 @@ def repetition_filter(
 # BM25 keyword search
 # ---------------------------------------------------------------------------
 
+def _bm25_terms(query: str | list[str], caller: str) -> list[str]:
+    """Query terms, deduped in order (a repeated term would
+    double-count); an empty result raises ``<caller>: empty query``."""
+    terms = query.split() if isinstance(query, str) else list(query)
+    terms = [t for t in dict.fromkeys(terms) if t]
+    if not terms:
+        raise ValueError(f"{caller}: empty query")
+    return terms
+
+
+def _bm25_score(
+    n_docs: Column, dfs: list, dl: Column, avgdl: Column, k1: float, b: float
+) -> Column:
+    """The BM25 sum as an EXPLICIT fixed-order float64 expression over
+    the terms, so DuckDB reproduces it bit-identically. Term i's
+    document frequency is ``dfs[i]`` (a Column or a Python float) and
+    its tf is the column ``_tf_{i}``."""
+    score: Column = F.lit(0.0)
+    for i, df_t in enumerate(dfs):
+        tf_t = F.col(f"_tf_{i}")
+        idf = F.log(F.lit(1.0) + (n_docs - df_t + 0.5) / (df_t + 0.5))
+        score = score + idf * (
+            tf_t * (k1 + 1.0) / (tf_t + k1 * (1.0 - b + b * dl / avgdl))
+        )
+    return score
+
+
+def _bm25_topk(
+    scored: DataFrame, score: Column, id_col: str, top_k: int
+) -> DataFrame:
+    """Positive-score top-k as (id, float32 score, rank): orderBy+limit
+    runs as TakeOrderedAndProject, then a rank over the k rows."""
+    w = Window.orderBy(F.col("_score").desc(), F.col(id_col))
+    return (
+        scored.withColumn("_score", score)
+        .filter(F.col("_score") > 0)
+        .orderBy(F.col("_score").desc(), F.col(id_col))
+        .limit(top_k)
+        .withColumn("rank", F.row_number().over(w))
+        .select(id_col, F.col("_score").cast("float").alias("score"), "rank")
+    )
+
+
 def bm25_search(
     docs: DataFrame,
     query: str | list[str],
@@ -2758,14 +2801,7 @@ def bm25_search(
     idf uses the Lucene/Robertson form ln(1 + (N - df + .5)/(df + .5)),
     which is positive even for df > N/2 terms.
     """
-    terms = query.split() if isinstance(query, str) else list(query)
-    # dedupe, preserve order (duplicated query terms would double-count)
-    seen: dict[str, None] = {}
-    for t in terms:
-        seen.setdefault(t, None)
-    terms = [t for t in seen if t]
-    if not terms:
-        raise ValueError("bm25_search: empty query")
+    terms = _bm25_terms(query, "bm25_search")
 
     toks = TX.tokens(text_col)
     dl = F.size(toks).cast("double")
@@ -2791,34 +2827,15 @@ def bm25_search(
         *[tf(t).alias(f"_tf_{i}") for i, t in enumerate(terms)],
     ).crossJoin(F.broadcast(stats))
 
-    avgdl = F.col("_total_len") / F.col("_n_docs")
-    score: Column = F.lit(0.0)
-    for i in range(len(terms)):
-        idf = F.log(
-            F.lit(1.0)
-            + (F.col("_n_docs") - F.col(f"_df_{i}") + 0.5)
-            / (F.col(f"_df_{i}") + 0.5)
-        )
-        contrib = idf * (
-            F.col(f"_tf_{i}")
-            * (k1 + 1.0)
-            / (F.col(f"_tf_{i}") + k1 * (1.0 - b + b * F.col("_dl") / avgdl))
-        )
-        score = score + contrib
-
-    w = Window.orderBy(F.col("_score").desc(), F.col(id_col))
-    return (
-        scored.withColumn("_score", score)
-        .filter(F.col("_score") > 0)
-        .orderBy(F.col("_score").desc(), F.col(id_col))
-        .limit(top_k)
-        .withColumn("rank", F.row_number().over(w))
-        .select(
-            id_col,
-            F.col("_score").cast("float").alias("score"),
-            "rank",
-        )
+    score = _bm25_score(
+        F.col("_n_docs"),
+        [F.col(f"_df_{i}") for i in range(len(terms))],
+        F.col("_dl"),
+        F.col("_total_len") / F.col("_n_docs"),
+        k1,
+        b,
     )
+    return _bm25_topk(scored, score, id_col, top_k)
 
 
 # ---------------------------------------------------------------------------
@@ -3195,13 +3212,7 @@ def bm25_search_indexed(
     docs matching ≥1 term ever enter the plan; work scales with
     posting-list sizes, not corpus size.
     """
-    terms = query.split() if isinstance(query, str) else list(query)
-    seen: dict[str, None] = {}
-    for t in terms:
-        seen.setdefault(t, None)
-    terms = [t for t in seen if t]
-    if not terms:
-        raise ValueError("bm25_search_indexed: empty query")
+    terms = _bm25_terms(query, "bm25_search_indexed")
 
     # explicit schemas: the index layout is fixed, so the reader never
     # samples footers — and an index built from an EMPTY corpus (no
@@ -3247,30 +3258,15 @@ def bm25_search_indexed(
             F.lit(0.0).cast("float").alias("score"),
             F.lit(0).cast("int").alias("rank"),
         ).filter(F.lit(False))
-    avgdl = total_len / n_docs
-
-    score: Column = F.lit(0.0)
-    for i, t in enumerate(terms):
-        df_t = df_map.get(t, 0.0)
-        idf = F.log(
-            F.lit(1.0) + (F.lit(n_docs) - df_t + 0.5) / (df_t + 0.5)
-        )
-        contrib = idf * (
-            F.col(f"_tf_{i}")
-            * (k1 + 1.0)
-            / (F.col(f"_tf_{i}") + k1 * (1.0 - b + b * F.col("dl") / F.lit(avgdl)))
-        )
-        score = score + contrib
-
-    w = Window.orderBy(F.col("_score").desc(), F.col("doc_id"))
-    return (
-        scored.withColumn("_score", score)
-        .filter(F.col("_score") > 0)
-        .orderBy(F.col("_score").desc(), F.col("doc_id"))
-        .limit(top_k)
-        .withColumn("rank", F.row_number().over(w))
-        .select("doc_id", F.col("_score").cast("float").alias("score"), "rank")
+    score = _bm25_score(
+        F.lit(n_docs),
+        [df_map.get(t, 0.0) for t in terms],
+        F.col("dl"),
+        F.lit(total_len / n_docs),
+        k1,
+        b,
     )
+    return _bm25_topk(scored, score, "doc_id", top_k)
 
 
 def epoch_shuffle(

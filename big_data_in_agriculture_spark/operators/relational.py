@@ -1972,20 +1972,20 @@ def association_rules(
     ).limit(top_k)
 
 
-def _range_ntile(
+def _range_rank(
     df: DataFrame,
     sort_exprs: list,
-    n_tiles: int,
-    alias: str,
-    id_col: str,
-    num_ranges: int | None = None,
+    num_ranges: int | None,
+    pin: bool,
+    with_total: bool = False,
 ) -> DataFrame:
-    """Exact ntile without a single global window partition.
+    """Global 1-based rank in ``sort_exprs`` order without a
+    single-partition window: ``df`` plus ``_pid``, ``_lrank`` and
+    ``_off`` (and ``_n``, the row count, when ``with_total``), where
+    the global rank is ``_lrank + _off``.
 
-    ``F.ntile(t).over(Window.orderBy(...))`` moves the ENTIRE table
-    through one task — the repo's last unbounded-frame global window
-    and a hard ceiling at billions of rows. This decomposition keeps
-    the identical bucket assignment fully distributed:
+    ``row_number().over(Window.orderBy(...))`` funnels the whole table
+    through one task. This decomposition stays distributed:
 
     1. ``repartitionByRange`` on the (total-order, tie-broken) sort
        key — Spark's range exchange samples boundaries, so partition
@@ -1994,17 +1994,22 @@ def _range_ntile(
        no global sort);
     3. prefix-sum the per-partition counts (a P-row window — bounded
        by the partition count, not the data) and broadcast-join the
-       offsets back: global rank = local rank + offset;
-    4. map rank to bucket with ntile's exact fill rule — with
-       q, rem = divmod(n, t), the first ``rem`` buckets take q+1 rows:
-       bucket(r) = ceil(r/(q+1))                    for r ≤ (q+1)·rem
-                 = rem + ceil((r - (q+1)·rem)/q)    otherwise
+       offsets back.
 
-    Every step lives in one lazy plan (the range exchange feeding
-    both the rank and the count branches is reused by Catalyst), so
-    there is no cross-action boundary-sampling consistency hazard.
-    The sort key must be a total order (tie-break on the id) — that
-    is already required for cross-engine determinism.
+    The ranked table is PINNED with localCheckpoint: the counts branch
+    and the final join must observe the SAME range-exchange boundaries,
+    and with two independent executions the range partitioner would
+    re-SAMPLE — nothing guarantees identical boundaries unless
+    ReuseExchange happens to fire (with spark.sql.exchange.reuse
+    disabled, or a plan change splitting the subtrees, the branches
+    disagree and ranks duplicate or skip). One materialization makes
+    the invariant structural.
+
+    The sort key must be a total order (tie-break on a unique column)
+    or ranks within ties are partition-placement-dependent.
+
+    ``pin=False`` skips the checkpoint — ONLY for plan inspection in
+    tests (the checkpoint hides the window behind a Scan ExistingRDD).
     """
     spark = df.sparkSession
     P = num_ranges or int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -2018,24 +2023,37 @@ def _range_ntile(
             ),
         )
     )
+    if pin:
+        ranked = ranked.localCheckpoint(eager=False)
     counts = ranked.groupBy("_pid").agg(F.count(F.lit(1)).alias("_cnt"))
     wp = Window.orderBy("_pid")
-    offsets = counts.select(
-        "_pid",
-        F.coalesce(
-            F.sum("_cnt").over(
-                wp.rowsBetween(Window.unboundedPreceding, -1)
-            ),
-            F.lit(0),
-        ).alias("_off"),
-        F.sum("_cnt")
-        .over(
-            wp.rowsBetween(
-                Window.unboundedPreceding, Window.unboundedFollowing
-            )
-        )
-        .alias("_n"),
-    )
+    before = wp.rowsBetween(Window.unboundedPreceding, -1)
+    offsets = [F.coalesce(F.sum("_cnt").over(before), F.lit(0)).alias("_off")]
+    if with_total:
+        whole = wp.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+        offsets.append(F.sum("_cnt").over(whole).alias("_n"))
+    return ranked.join(F.broadcast(counts.select("_pid", *offsets)), "_pid")
+
+
+def _range_ntile(
+    df: DataFrame,
+    sort_exprs: list,
+    n_tiles: int,
+    alias: str,
+    id_col: str,
+    num_ranges: int | None = None,
+) -> DataFrame:
+    """Exact ntile without a single global window partition.
+
+    ``F.ntile(t).over(Window.orderBy(...))`` moves the ENTIRE table
+    through one task — an unbounded-frame global window and a hard
+    ceiling at billions of rows. This ranks with the pinned
+    :func:`_range_rank` and maps rank to bucket with ntile's exact
+    fill rule — with q, rem = divmod(n, t), the first ``rem`` buckets
+    take q+1 rows:
+       bucket(r) = ceil(r/(q+1))                    for r ≤ (q+1)·rem
+                 = rem + ceil((r - (q+1)·rem)/q)    otherwise
+    """
     r = (F.col("_lrank") + F.col("_off")).cast("long")
     n = F.col("_n").cast("long")
     t = F.lit(n_tiles).cast("long")
@@ -2051,9 +2069,9 @@ def _range_ntile(
         )
         .cast("int")
     )
-    return ranked.join(F.broadcast(offsets), "_pid").select(
-        id_col, bucket.alias(alias)
-    )
+    return _range_rank(
+        df, sort_exprs, num_ranges, pin=True, with_total=True
+    ).select(id_col, bucket.alias(alias))
 
 
 def rfm_segments(
@@ -2071,8 +2089,8 @@ def rfm_segments(
     not a global ntile window, so no step funnels the customer-grain
     table through one task; the three score tables equi-join back on
     custkey (uniform key). The customer aggregate feeds four branches
-    of one lazy plan — at warehouse scale, land it (or ``.cache()``)
-    first so the fact scan runs once.
+    (the three pinned rankings and the final join) — at warehouse
+    scale, land it (or ``.cache()``) first so the fact scan runs once.
     """
     cut = F.to_timestamp(F.lit(asof))
     per_cust = orders.groupBy("o_custkey").agg(
@@ -2177,56 +2195,18 @@ def assign_dense_ids(
     ``row_number().over(Window.orderBy(...))`` funnels the whole
     table through one task; ``monotonically_increasing_id`` is
     partition-sparse and non-contiguous; ``zipWithIndex`` drops to
-    RDDs. This is the `_range_ntile` decomposition with the rank
-    itself as the product: range exchange on the (total-order,
-    tie-broken) sort key → per-partition row_number (parallel) →
-    P-row prefix sum of partition counts broadcast back as offsets —
-    global id = local rank + partition offset.
-
-    The ranked table is PINNED with localCheckpoint: the counts branch
-    and the final join must observe the SAME range-exchange boundaries,
-    and with two independent executions the range partitioner would
-    re-SAMPLE — nothing guarantees identical boundaries unless
-    ReuseExchange happens to fire (round-8 ADVICE: with
-    spark.sql.exchange.reuse disabled, or a plan change splitting the
-    subtrees, the branches could disagree and ids would duplicate or
-    skip). One materialization makes the invariant structural.
-
-    The sort key must be a total order (tie-break on a unique column)
-    or ids within ties are partition-placement-dependent.
+    RDDs. This is the :func:`_range_rank` decomposition (range
+    exchange → per-partition row_number → P-row prefix sum of
+    partition counts broadcast back) with the rank itself as the
+    product: global id = local rank + partition offset. The ranked
+    table is pinned so both branches see one set of range boundaries;
+    the sort key must be a total order.
 
     ``pin=False`` skips the checkpoint — ONLY for plan inspection in
-    tests (the checkpoint hides the window behind a Scan ExistingRDD);
-    production callers must keep the pin for the reason above.
+    tests; production callers must keep the pin.
     """
-    spark = df.sparkSession
-    P = num_ranges or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    ranked = (
-        df.repartitionByRange(P, *sort_exprs)
-        .withColumn("_pid", F.spark_partition_id())
-        .withColumn(
-            "_lrank",
-            F.row_number().over(
-                Window.partitionBy("_pid").orderBy(*sort_exprs)
-            ),
-        )
-    )
-    if pin:
-        ranked = ranked.localCheckpoint(eager=False)
-    counts = ranked.groupBy("_pid").agg(F.count(F.lit(1)).alias("_cnt"))
-    offsets = counts.select(
-        "_pid",
-        F.coalesce(
-            F.sum("_cnt").over(
-                Window.orderBy("_pid").rowsBetween(
-                    Window.unboundedPreceding, -1
-                )
-            ),
-            F.lit(0),
-        ).alias("_off"),
-    )
     return (
-        ranked.join(F.broadcast(offsets), "_pid")
+        _range_rank(df, sort_exprs, num_ranges, pin)
         .withColumn(alias, (F.col("_lrank") + F.col("_off")).cast("long"))
         .drop("_pid", "_lrank", "_off")
     )

@@ -242,56 +242,6 @@ def grouped_trend(
     )
 
 
-def asof_cogroup(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    left_ts: str,
-    right_ts: str,
-    value_col: str,
-) -> DataFrame:
-    """As-of join via ``cogroup().applyInPandas`` (pandas merge_asof).
-
-    The two-sided grouped-pandas island: both inputs shuffle ONCE on
-    the key, each key's slices arrive as a pandas pair, and
-    ``merge_asof`` does the per-key backward search in C. Semantically
-    identical to ``relational.asof_join`` (the pure-JVM union-and-carry
-    form, which stays the default); this variant exists for kernels
-    where the per-key logic genuinely needs pandas (merge_asof
-    tolerances, interpolation, model scoring per entity) — the
-    house rule is JVM first, Arrow island only when the built-ins
-    can't express the kernel.
-
-    Scale: state per task is one key-group's pair of slices — fine for
-    entity-sized keys (a user's events), wrong for one giant key; the
-    JVM form has no such per-key materialization.
-    """
-    import pandas as pd
-
-    out_schema = (
-        left.select(key, left_ts).schema.add("value", "double", True)
-    )
-
-    def merge(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        lpdf = lpdf.sort_values(left_ts)
-        if rpdf.empty:
-            lpdf["value"] = None
-            return lpdf[[key, left_ts, "value"]]
-        rpdf = rpdf.sort_values(right_ts)[[right_ts, value_col]].rename(
-            columns={value_col: "value"}
-        )
-        merged = pd.merge_asof(
-            lpdf, rpdf, left_on=left_ts, right_on=right_ts, direction="backward"
-        )
-        return merged[[key, left_ts, "value"]]
-
-    return (
-        left.groupBy(key)
-        .cogroup(right.groupBy(key))
-        .applyInPandas(merge, schema=out_schema)
-    )
-
-
 def diurnal_anomaly(
     df: DataFrame,
     key_col: str,

@@ -21,8 +21,9 @@ Spark-first shape:
   fake decoder.
 
 Scale notes: one task per file is the reference's own ceiling (D1);
-for huge single files the decoder yields row-chunks (the generator
-protocol below) so executor memory is bounded by chunk, not file.
+the decoded file leaves the island in row-chunks of ``_CHUNK_ROWS``
+(the generator protocol below), so no single Arrow batch carries a
+huge file — the decoded frame itself is still held whole per task.
 """
 
 from __future__ import annotations
@@ -49,6 +50,9 @@ DECODED_SCHEMA = T.StructType(
     ]
     + [T.StructField(v, T.DoubleType(), True) for v in RAW_VARIABLES]
 )
+
+#: Rows per Arrow batch the decode island yields for one file.
+_CHUNK_ROWS = 200_000
 
 _PATH_RE = re.compile(r"region=([^/]+)/year=(\d+)/month=(\d+)")
 
@@ -133,7 +137,6 @@ def read_raw_grid(
     variables: list[str] | None = None,
     path_glob: str = "*.{nc,zip}",
     decoder: Callable[[bytes, list[str]], pd.DataFrame] | None = None,
-    chunk_rows: int = 200_000,
 ) -> DataFrame:
     """Scan a raw ERA5 layout into long-form grid rows.
 
@@ -168,7 +171,7 @@ def read_raw_grid(
                     if col not in frame.columns:
                         frame[col] = None
                 frame = frame[out_cols]
-                for start in range(0, len(frame), chunk_rows):
-                    yield frame.iloc[start : start + chunk_rows]
+                for start in range(0, len(frame), _CHUNK_ROWS):
+                    yield frame.iloc[start : start + _CHUNK_ROWS]
 
     return files.mapInPandas(_decode, schema=DECODED_SCHEMA)

@@ -5,8 +5,10 @@ Usage: python scripts/dump_plan.py <outdir> <tag> query [query ...]
 Expression ids (``#123``), plan ids (``plan_id=7``, ``[id=#7]``),
 checkpointed RDD ids (``MapPartitionsRDD[90]``) and lambda variable
 suffixes (``x_41``) come from process-wide counters, so they shift
-whenever anything else is built first. They are written as ``#N``,
-``plan_id=N``, ``[id=N]``, ``RDD[N]`` and ``x_N``: dump the same queries
+whenever anything else is built first, and queries that stage files
+in ``tempfile.mkdtemp`` directories (``bm25idx-57uf2wsh``) get a new
+random suffix per run. They are written as ``#N``, ``plan_id=N``,
+``[id=N]``, ``RDD[N]``, ``x_N`` and ``bm25idx-TMP``: dump the same queries
 with the same tag from two checkouts into two directories, and
 ``diff -r`` of the directories shows only real plan changes.
 """
@@ -14,6 +16,7 @@ with the same tag from two checkouts into two directories, and
 import os
 import re
 import sys
+import tempfile
 
 from selfcheck import session
 
@@ -23,6 +26,8 @@ _IDS = (
     (re.compile(r"\[id=#?\d+\]"), "[id=N]"),
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
     (re.compile(r"\b([xyz])_\d+\b"), r"\1_N"),
+    (re.compile(re.escape(tempfile.gettempdir()) + r"/([\w.]+-)[a-z0-9_]{8}/"),
+     tempfile.gettempdir() + r"/\1TMP/"),
 )
 
 

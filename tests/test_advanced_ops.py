@@ -35,6 +35,28 @@ def test_asof_join_picks_latest_at_or_before(spark):
     assert out[3]["purchase_value"] is None and out[3]["purchase_ts"] is None
 
 
+def test_asof_join_key_without_earlier_right_row(spark):
+    left = spark.createDataFrame(
+        [("u1", T(5)), ("u1", T(20)), ("u2", T(3)), ("u3", T(9))],
+        ["k", "lts"],
+    )
+    right = spark.createDataFrame(
+        [("u1", T(1), 10.0), ("u1", T(15), 20.0), ("u2", T(4), 7.0)],
+        ["k", "rts", "v"],
+    )
+    out = {
+        (r["k"], r["lts"]): r["v"]
+        for r in relational.asof_join(left, right, "k", "lts", "rts", ["v"]).collect()
+    }
+    assert len(out) == 4
+    # u1@20 carries the 15-minute value; u2@3 has right rows, but only
+    # later ones; u3 has no right rows at all
+    assert out[("u1", T(5))] == 10.0
+    assert out[("u1", T(20))] == 20.0
+    assert out[("u2", T(3))] is None
+    assert out[("u3", T(9))] is None
+
+
 def test_asof_join_no_join_node_in_plan(spark):
     from big_data_in_agriculture_spark.plans import explain
 

@@ -269,32 +269,3 @@ def test_cli_reproduces_reference_pipeline_on_real_bytes(spark, tmp_path):
     # 1 bash day + 1 kras Feb day + 7 kras Jan days
     assert len(daily) == 1 + 1 + 7
     assert {"t2m_mean", "t2m_min", "t2m_max", "tp_sum"} <= set(daily.columns)
-
-
-def test_netcdf_datasource_decodes_real_bytes(spark):
-    """The Spark 4 Python DataSource (format('netcdf')) runs the pure
-    HDF5 decoder for real: source-level pruning to one (region, year,
-    month) partition → one file decoded → long-form rows."""
-    import os
-
-    from big_data_in_agriculture_spark.sources.netcdf_datasource import (
-        NetCDFDataSource,
-    )
-
-    if not os.path.exists(RAW_NC):
-        pytest.skip("reference raw bytes not present")
-    spark.dataSource.register(NetCDFDataSource)
-    df = (
-        spark.read.format("netcdf")
-        .option("path", RAW_ROOT)
-        .option("region", "bashkortostan")
-        .option("year", "2022")
-        .option("month", "2")
-        .load()
-    )
-    rows = df.count()
-    assert rows == 24 * 51 * 69
-    got = df.filter("t2m IS NOT NULL").selectExpr(
-        "min(t2m) AS lo", "max(t2m) AS hi"
-    ).collect()[0]
-    assert 220.0 < got["lo"] < got["hi"] < 300.0  # Kelvin, February

@@ -1,10 +1,11 @@
 """NetCDF ingest plumbing: ZIP sniff, path parsing, mapInPandas pipeline.
 
-The container has no HDF5 decoder (xarray/h5netcdf absent), so the
-decode step runs through a deterministic fake; everything else — the
-binaryFile scan, partition tagging, Arrow batching, schema — is real.
-The fake produces a constant grid whose spatial mean is hand-checkable
-end-to-end through spatial_mean_hourly.
+Most cases decode through a deterministic fake so the layout logic —
+the binaryFile scan, partition tagging, Arrow batching, schema — is
+checked on its own; the fake produces a constant grid whose spatial
+mean is hand-checkable end-to-end through spatial_mean_hourly. One
+case writes a real ERA5-shaped HDF5 file (tests/_hdf5_writer.py) and
+runs it through the default pure-Python decoder.
 """
 
 from __future__ import annotations
@@ -107,24 +108,10 @@ def test_default_decoder_raises_without_libs():
         netcdf.default_decoder(NC_MAGIC, ["t2m"])
 
 
-class TestNetCDFDataSource:
-    def _source(self):
-        # subclass defined here so cloudpickle ships it (and the fake
-        # decoder) by value to worker processes
-        from big_data_in_agriculture_spark.sources.netcdf_datasource import (
-            NetCDFDataSource,
-        )
-
-        fake = _make_fake_decoder()
-
-        class FakeNetCDFSource(NetCDFDataSource):
-            _decoder = staticmethod(fake)
-
-        return FakeNetCDFSource
+class TestRawLayout:
+    """read_raw_grid over a multi-region, multi-month hive layout."""
 
     def _multi_layout(self, tmp_path):
-        import zipfile as _zip
-
         for region in ("alpha", "beta"):
             for month in (1, 2):
                 d = tmp_path / "raw" / f"region={region}" / "year=2022"
@@ -132,10 +119,11 @@ class TestNetCDFDataSource:
                 (d / f"month={month:02d}.nc").write_bytes(NC_MAGIC)
         return str(tmp_path / "raw")
 
+    def _read(self, spark, root, **kw):
+        return netcdf.read_raw_grid(spark, root, decoder=_make_fake_decoder(), **kw)
+
     def test_reads_all_partitions(self, spark, tmp_path):
-        root = self._multi_layout(tmp_path)
-        spark.dataSource.register(self._source())
-        df = spark.read.format("netcdf").option("path", root).load()
+        df = self._read(spark, self._multi_layout(tmp_path))
         # 4 files x 8 grid rows
         assert df.count() == 32
         assert set(r["region"] for r in df.select("region").distinct().collect()) == {
@@ -144,45 +132,72 @@ class TestNetCDFDataSource:
         # unit conversion contract: raw Kelvin arrives undisturbed
         assert df.agg({"t2m": "max"}).first()[0] == 280.0
 
-    def test_option_pruning_plans_one_task(self, spark, tmp_path):
+    def test_subtree_root_prunes_to_one_file(self, spark, tmp_path):
         root = self._multi_layout(tmp_path)
-        src = self._source()
-        spark.dataSource.register(src)
-        reader = src(
-            {"path": root, "region": "alpha", "month": "2"}
-        ).reader(None)
-        parts = reader.partitions()
-        assert len(parts) == 1 and "region=alpha" in parts[0].path \
-            and "month=02" in parts[0].path
-        df = (
-            spark.read.format("netcdf")
-            .option("path", root)
-            .option("region", "alpha")
-            .option("month", "2")
-            .load()
+        df = self._read(
+            spark, f"{root}/region=alpha/year=2022", path_glob="month=02.*"
         )
+        assert df.rdd.getNumPartitions() == 1
         assert df.count() == 8
         assert df.select("region").distinct().first()[0] == "alpha"
 
-    def test_missing_partition_tolerance(self, spark, tmp_path):
-        root = self._multi_layout(tmp_path)
-        spark.dataSource.register(self._source())
-        df = (
-            spark.read.format("netcdf")
-            .option("path", root)
-            .option("region", "nonexistent")
-            .load()
-        )
+    def test_unmatched_glob_yields_no_rows(self, spark, tmp_path):
+        df = self._read(spark, self._multi_layout(tmp_path), path_glob="month=03.*")
         assert df.count() == 0
 
     def test_feeds_hourly_pipeline(self, spark, tmp_path):
-        from big_data_in_agriculture_spark.operators import hourly
-
-        root = self._multi_layout(tmp_path)
-        spark.dataSource.register(self._source())
-        raw = spark.read.format("netcdf").option("path", root).load()
-        mart = hourly.spatial_mean_hourly(raw)
+        mart = spatial_mean_hourly(self._read(spark, self._multi_layout(tmp_path)))
         row = mart.filter("region = 'alpha'").orderBy("ts").first()
         # constant 280K grid → mean exactly 280K → 6.85°C; wind 3-4-5
         assert abs(row["t2m"] - 6.85) < 1e-6
         assert abs(row["wind_speed_10m"] - 5.0) < 1e-6
+
+
+def test_synthetic_era5_zip_through_default_decoder(spark, tmp_path):
+    """One ERA5-shaped file (valid_time/latitude/longitude, t2m with a
+    NaN sea mask in shuffle+deflate chunks) wrapped as ``month=01.zip``
+    runs through the default decoder and the hourly mean, and matches
+    numpy's skipna mean."""
+    import numpy as np
+
+    from _hdf5_writer import write_hdf5
+
+    nt, nlat, nlon = 6, 5, 7
+    rng = np.random.default_rng(3)
+    t2m = rng.uniform(260.0, 300.0, (nt, nlat, nlon)).astype(np.float32)
+    sea = rng.random((nlat, nlon)) < 0.3
+    sea[0, 0] = False
+    t2m[:, sea] = np.nan
+    start = int(dt.datetime(2023, 1, 1, tzinfo=dt.timezone.utc).timestamp())
+    blob = write_hdf5(
+        {
+            "valid_time": start + 3600 * np.arange(nt, dtype=np.int64),
+            "latitude": 55.0 - 0.25 * np.arange(nlat),
+            "longitude": 40.0 + 0.25 * np.arange(nlon),
+            "t2m": t2m,
+        },
+        chunk_dims={"t2m": (2, 3, 4)},
+        deflate_level=4,
+        shuffle=True,
+    )
+    d = tmp_path / "raw" / "region=synth" / "year=2023"
+    d.mkdir(parents=True)
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w") as zf:
+        zf.writestr("data_0.nc", blob)
+    (d / "month=01.zip").write_bytes(buf.getvalue())
+
+    grid = netcdf.read_raw_grid(spark, str(tmp_path / "raw"), variables=["t2m"])
+    assert grid.count() == nt * nlat * nlon
+    assert grid.filter("t2m IS NULL").count() == nt * int(sea.sum())
+
+    rows = (
+        spatial_mean_hourly(grid, ["t2m"], cast=None)
+        .selectExpr("region", "unix_timestamp(ts) AS epoch", "t2m")
+        .orderBy("epoch")
+        .collect()
+    )
+    want = np.nanmean(t2m.astype(np.float64), axis=(1, 2)) - 273.15
+    assert [r["region"] for r in rows] == ["synth"] * nt
+    assert [r["epoch"] for r in rows] == [start + 3600 * h for h in range(nt)]
+    assert [r["t2m"] for r in rows] == pytest.approx(list(want), rel=1e-12)

@@ -606,24 +606,70 @@ def test_range_ntile_matches_global_ntile(spark):
             assert got == want, (n, t, P)
 
 
+def test_range_ntile_matches_global_ntile_without_exchange_reuse(spark):
+    """With exchange reuse off, the rank and count branches each run
+    their own range exchange, and each samples its own boundaries;
+    the pinned ranking keeps them on one set of boundaries."""
+    import random
+
+    from pyspark.sql import functions as F
+    from pyspark.sql.window import Window
+
+    rng = random.Random(5)
+    df = spark.createDataFrame(
+        [(i, rng.randint(0, 999)) for i in range(20_000)], ["id", "v"]
+    ).repartition(7)
+    exprs = [F.col("v").asc(), F.col("id").asc()]
+    prev = spark.conf.get("spark.sql.exchange.reuse")
+    spark.conf.set("spark.sql.exchange.reuse", "false")
+    try:
+        want = {
+            r["id"]: r["nt"]
+            for r in df.select(
+                "id", F.ntile(4).over(Window.orderBy(*exprs)).alias("nt")
+            ).collect()
+        }
+        got = {
+            r["id"]: r["nt"]
+            for r in relational._range_ntile(
+                df, exprs, 4, "nt", "id", num_ranges=8
+            ).collect()
+        }
+    finally:
+        spark.conf.set("spark.sql.exchange.reuse", prev)
+    assert got == want
+
+
 def test_rfm_has_no_global_window(spark):
     """The customer-grain table must never funnel through a
-    single-partition window: every WindowExec in the plan is
-    partitioned (the only unpartitioned window is the P-row
+    single-partition window. Each of the three rankings is pinned, so
+    rfm's own plan reads them as Scan ExistingRDD; the window check
+    runs on the same ranking unpinned: every row_number window is
+    partitioned by _pid (the only unpartitioned window is the P-row
     partition-count prefix sum, which Catalyst keeps tiny)."""
     import datetime as dt
+    import re
+
+    from pyspark.sql import functions as F
 
     orders = spark.createDataFrame(
         [(c, dt.datetime(1998, 12, 1), 10.0) for c in range(20)],
         ["o_custkey", "o_orderdate", "o_totalprice"],
     )
     plan = relational.rfm_segments(orders)._jdf.queryExecution().executedPlan().toString()
-    import re
-
-    # row_number windows over the data are all partitioned by _pid
-    for m in re.finditer(r"row_number\(\).*?windowspecdefinition\(([^)]*)\)", plan):
-        assert "_pid" in m.group(1), m.group(0)
     assert "ntile" not in plan  # the global-window form is gone
+    assert "row_number" not in plan  # rankings are behind their pins
+
+    per_cust = orders.groupBy("o_custkey").agg(F.count(F.lit(1)).alias("frequency"))
+    ranked = relational._range_rank(
+        per_cust, [F.col("frequency").desc(), F.col("o_custkey").asc()],
+        None, pin=False, with_total=True,
+    )
+    plan = ranked._jdf.queryExecution().executedPlan().toString()
+    specs = re.findall(r"row_number\(\).*?windowspecdefinition\(([^)]*)\)", plan)
+    assert specs, plan
+    for spec in specs:
+        assert "_pid" in spec, spec
 
 
 class TestAssignDenseIds:

@@ -113,46 +113,6 @@ class TestGroupedTrend:
         assert "Join" not in plan
 
 
-class TestAsofCogroup:
-    def test_matches_jvm_asof_join(self, spark):
-        import datetime as dt
-
-        from big_data_in_agriculture_spark.operators.relational import asof_join
-        from big_data_in_agriculture_spark.operators.timeseries import (
-            asof_cogroup,
-        )
-
-        t0 = dt.datetime(2024, 1, 1)
-
-        def ts(m):
-            return t0 + dt.timedelta(minutes=m)
-
-        left = spark.createDataFrame(
-            [("u1", ts(5)), ("u1", ts(20)), ("u2", ts(3)), ("u3", ts(9))],
-            ["k", "lts"],
-        )
-        right = spark.createDataFrame(
-            [("u1", ts(1), 10.0), ("u1", ts(15), 20.0), ("u2", ts(4), 7.0)],
-            ["k", "rts", "v"],
-        )
-        cg = {
-            (r["k"], r["lts"]): r["value"]
-            for r in asof_cogroup(left, right, "k", "lts", "rts", "v").collect()
-        }
-        jvm = {
-            (r["k"], r["lts"]): r["v"]
-            for r in asof_join(left, right, "k", "lts", "rts", ["v"]).collect()
-        }
-        assert set(cg) == set(jvm)
-        for kk in cg:
-            assert cg[kk] == jvm[kk], kk
-        # spot semantics: u1@20 carries the 15-minute value; u2@3 has
-        # no earlier right row; u3 has no right rows at all
-        assert cg[("u1", ts(20))] == 20.0
-        assert cg[("u2", ts(3))] is None
-        assert cg[("u3", ts(9))] is None
-
-
 class TestDiurnalAnomaly:
     def test_normals_and_anomalies(self, spark):
         import datetime as dt
