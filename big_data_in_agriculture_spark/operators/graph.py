@@ -38,6 +38,11 @@ matrix completion), so bipartite / DAG-shaped graphs don't leak rank.
 Total mass is conserved up to the deterministic div-truncation dust
 (< N units per round), which both engines lose identically.
 
+One Spark loop per iteration shape: ``_power_iteration`` (pagerank,
+personalized_pagerank), ``sssp`` (and bfs_levels, its unit-weight
+case), ``_adaptive_fixpoint`` (core_numbers, label_propagation) and
+kcore's peel. Triangles are enumerated once, in ``_triangles``.
+
 The reference has no graph stage (its 920-LoC scope is CDS NetCDF →
 parquet marts → Postgres, flows/ has no joins at all); this module is
 part of the LLM-pipeline extension surface, the same tier as the
@@ -91,6 +96,24 @@ MASS = 1_000_000_000_000
 _NARROW_MIN_NODES = 100_000
 
 
+def _rank_edges(
+    edges: DataFrame, src: str, dst: str, iterations: int, damping_pct: int
+) -> tuple[DataFrame, DataFrame]:
+    """Validate the rank parameters; return the lazily pinned
+    ``(src, dst)`` edge frame and its ``(node, od)`` out-degrees."""
+    if not 0 <= damping_pct <= 100:
+        raise ValueError(f"damping_pct must be 0..100, got {damping_pct}")
+    if iterations < 0:
+        raise ValueError(f"iterations must be >= 0, got {iterations}")
+    e = (
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        .localCheckpoint(eager=False)
+    )
+    return e, e.groupBy(F.col("src").alias("node")).agg(
+        F.count(F.lit(1)).alias("od")
+    )
+
+
 def pagerank(
     edges: DataFrame,
     src: str = "src",
@@ -127,15 +150,7 @@ def pagerank(
     changes the ranks, and stays OFF (None) in the oracle path so
     registered hashes are untouched.
     """
-    if not 0 <= damping_pct <= 100:
-        raise ValueError(f"damping_pct must be 0..100, got {damping_pct}")
-    if iterations < 0:
-        raise ValueError(f"iterations must be >= 0, got {iterations}")
-
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .localCheckpoint(eager=False)
-    )
+    e, outdeg = _rank_edges(edges, src, dst, iterations, damping_pct)
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
@@ -146,22 +161,41 @@ def pagerank(
     if n == 0:
         return nodes.withColumn("rank_e12", F.lit(0).cast("long"))
 
-    outdeg = e.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).alias("od")
-    )
-    base = MASS // n  # uniform share of total mass, LONG
-    teleport = (100 - damping_pct) * base // 100
-
-    # static per-node frame: node, outdeg (0 => dangling). The rank
-    # table CARRIES od so no per-round ranks ⋈ deg join is needed —
-    # each iteration costs exactly two node-keyed shuffles (the edge
-    # join's and the deg ⋈ inflow rebuild's).
+    # static per-node frame: node, outdeg (0 => dangling)
     deg = (
         nodes.join(outdeg, "node", "left")
         .select("node", F.coalesce("od", F.lit(0)).alias("od"))
         .localCheckpoint(eager=False)
     )
-    ranks = deg.withColumn("rank_e12", F.lit(base).cast("long"))
+    return _power_iteration(
+        e, deg, n, iterations, damping_pct, "true", residual_out
+    )
+
+
+def _power_iteration(
+    e: DataFrame,
+    deg: DataFrame,
+    n_tele: int,
+    iterations: int,
+    damping_pct: int,
+    tele: str,
+    residual_out: list | None,
+) -> DataFrame:
+    """The rounds of :func:`pagerank` and :func:`personalized_pagerank`:
+    ``(node, rank_e12)``. Ranks carry the pinned ``deg`` frame's
+    columns (``node``, ``od`` 0 => dangling, and any column ``tele``
+    reads), so a round is two node-keyed shuffles plus a 1-row
+    dangling aggregate broadcast back. ``tele`` is the SQL predicate of
+    the ``n_tele`` nodes that receive teleport and dangling mass:
+    ``"true"`` (folded away by the optimizer) or ``"is_src = 1"``.
+    """
+    base = MASS // n_tele  # share of total mass per teleport node, LONG
+    teleport = (100 - damping_pct) * base // 100
+    home = F.expr(tele)
+    ranks = deg.withColumn(
+        "rank_e12",
+        F.when(home, F.lit(base)).otherwise(F.lit(0)).cast("long"),
+    )
     for _rnd in range(iterations):
         prev = ranks
         # dangling mass: 1-row LONG aggregate, broadcast back below
@@ -178,25 +212,24 @@ def pagerank(
             .groupBy(F.col("dst").alias("node"))
             .agg(F.sum("share").alias("inflow"))
         )
-        ranks = (
+        # per-round pin with a periodic stats reset (_util.pin_iter)
+        ranks = pin_iter(
             deg.join(inflow, "node", "left")
             .crossJoin(F.broadcast(dangling))
             .select(
-                "node",
-                "od",
+                *deg.columns,
                 (
-                    F.lit(teleport)
+                    F.when(home, F.lit(teleport)).otherwise(F.lit(0))
                     + F.expr(
                         f"({damping_pct} * (coalesce(inflow, 0)"
-                        f" + (_dm div {n}))) div 100"
+                        f" + (case when {tele} then _dm div {n_tele}"
+                        " else 0 end))) div 100"
                     )
                 ).cast("long").alias("rank_e12"),
-            )
+            ),
+            _rnd,
+            eager=False,
         )
-        # per-round pin with periodic stats reset: localCheckpoint
-        # PRESERVES plan statistics, which SQUARE per round and cross
-        # BigInteger's bit ceiling near iteration ~40 (_util.py note)
-        ranks = pin_iter(ranks, _rnd, eager=False)
         if residual_out is not None:
             residual_out.append(
                 ranks.join(
@@ -228,15 +261,12 @@ def bfs_levels(
     from any source node, for every node reachable within
     ``max_depth`` hops (sources themselves at level 0).
 
-    Frontier expansion, the other classic message-passing workload
-    beside :func:`pagerank`: each round joins the CURRENT FRONTIER
-    (not the whole visited set) against the edge list, anti-joins the
-    visited table, and stamps survivors with the next level — so a
-    round's cost is proportional to the frontier's out-edges, and the
-    loop stops as soon as a frontier comes back empty (the driver
-    reads only that per-round count). Levels are exact integers; no
-    float anywhere, so the DuckDB twin (a depth-bounded recursive CTE
-    taking min(level)) replays it without any quantization contract.
+    Unit-weight :func:`sssp`: with every weight 1 the first visit IS
+    the minimum hop count and the improved-node frontier IS BFS's
+    newly-visited frontier, so a round costs the frontier's out-edges
+    and the loop stops at the first empty frontier. Levels are exact
+    integers, so the DuckDB twin (a depth-bounded recursive CTE taking
+    min(level)) replays it without any quantization contract.
 
     ``max_depth`` bounds the walk: nodes whose true distance exceeds
     it are absent from the result (the SQL twin applies the identical
@@ -245,35 +275,12 @@ def bfs_levels(
     """
     if max_depth < 0:
         raise ValueError(f"max_depth must be >= 0, got {max_depth}")
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .localCheckpoint(eager=False)
+    e = edges.select(
+        F.col(src).alias("src"), F.col(dst).alias("dst"), F.lit(1).alias("w")
     )
-    visited = (
-        sources.select(F.col(source_col).alias("node"))
-        .distinct()
-        .withColumn("level", F.lit(0).cast("long"))
-        .localCheckpoint(eager=False)
-    )
-    frontier = visited
-    for depth in range(1, max_depth + 1):
-        # per-round pins with periodic stats reset: visited joins
-        # frames derived from its own previous checkpoint every round
-        # (_util.pin_iter note)
-        nxt = pin_iter(
-            e.join(frontier, e.src == frontier.node)
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            .join(visited.select("node"), "node", "left_anti")
-            .withColumn("level", F.lit(depth).cast("long")),
-            depth,
-            eager=False,
-        )
-        if nxt.isEmpty():
-            break
-        visited = pin_iter(visited.unionByName(nxt), depth, eager=False)
-        frontier = nxt
-    return visited
+    return sssp(
+        e, sources, source_col=source_col, max_hops=max_depth
+    ).select("node", F.col("dist").alias("level"))
 
 
 def personalized_pagerank(
@@ -303,31 +310,17 @@ def personalized_pagerank(
         rank_t+1 = [(100-d)·(M div S_n) div 100  if v ∈ S else 0]
                  + d·(inflow_t(v) + [dangling_t div S_n if v ∈ S]) div 100
 
-    Scale shape identical to pagerank: per round one edge equi-join +
-    one node-keyed sum + a 1-row dangling broadcast; rank rows carry
-    (od, is_src) so no per-round membership join. Each round's ranks
-    are pinned with ``pin_iter`` (_util.py): real statistics, so the
-    planner can still broadcast inside a round, reset stats-free every
-    8th round, which keeps the iteration safe at any round count.
+    The rounds are pagerank's own (:func:`_power_iteration`), with
+    teleport and dangling mass gated on ``is_src = 1``; rank rows carry
+    (od, is_src) so no per-round membership join.
     """
-    if not 0 <= damping_pct <= 100:
-        raise ValueError(f"damping_pct must be 0..100, got {damping_pct}")
-    if iterations < 0:
-        raise ValueError(f"iterations must be >= 0, got {iterations}")
-
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .localCheckpoint(eager=False)
-    )
+    e, outdeg = _rank_edges(edges, src, dst, iterations, damping_pct)
     s = sources.select(F.col(source_col).alias("node")).distinct()
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .unionByName(s)
         .distinct()
-    )
-    outdeg = e.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).alias("od")
     )
     deg = (
         nodes.join(outdeg, "node", "left")
@@ -344,48 +337,9 @@ def personalized_pagerank(
         return deg.select("node").limit(0).withColumn(
             "rank_e12", F.lit(0).cast("long")
         )
-    base_s = MASS // s_n
-    teleport = (100 - damping_pct) * base_s // 100
-
-    ranks = deg.withColumn(
-        "rank_e12",
-        F.when(F.col("is_src") == 1, F.lit(base_s))
-        .otherwise(F.lit(0))
-        .cast("long"),
+    return _power_iteration(
+        e, deg, s_n, iterations, damping_pct, "is_src = 1", None
     )
-    for _rnd in range(iterations):
-        dangling = ranks.filter(F.col("od") == 0).agg(
-            F.coalesce(F.sum("rank_e12"), F.lit(0)).alias("_dm")
-        )
-        shares = ranks.filter(F.col("od") > 0).select(
-            "node", F.expr("rank_e12 div od").alias("share")
-        )
-        inflow = (
-            e.join(shares, e.src == shares.node)
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("share").alias("inflow"))
-        )
-        ranks = pin_iter(
-            deg.join(inflow, "node", "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                "od",
-                "is_src",
-                (
-                    F.when(F.col("is_src") == 1, F.lit(teleport))
-                    .otherwise(F.lit(0))
-                    + F.expr(
-                        f"({damping_pct} * (coalesce(inflow, 0)"
-                        f" + (case when is_src = 1 then _dm div {s_n}"
-                        " else 0 end))) div 100"
-                    )
-                ).cast("long").alias("rank_e12"),
-            ),
-            _rnd,
-            eager=False,
-        )
-    return ranks.select("node", "rank_e12")
 
 
 def _undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -899,24 +853,25 @@ def sssp(
     Distributed Bellman-Ford: each round relaxes every edge out of the
     current distance table — one edge equi-join + one node-keyed min —
     and stops early when a round improves nothing. ``max_hops`` bounds
-    the walk EXACTLY like bfs_levels' depth bound (the SQL twin
-    enumerates paths of ≤ max_hops edges and takes the min, which
-    after ≤ max_hops relaxation rounds is the identical function);
-    unreached nodes are absent. Weights are LONG (caller casts), sums
-    are LONG — no float anywhere, so no quantization contract.
+    the walk EXACTLY (the SQL twin enumerates paths of ≤ max_hops edges
+    and takes the min, which after ≤ max_hops relaxation rounds is the
+    identical function); unreached nodes are absent. Weights are LONG
+    (caller casts), sums are LONG — no float anywhere, so no
+    quantization contract. With unit weights this is BFS:
+    :func:`bfs_levels` is this loop over ``w = 1``.
 
     At 100 TB: each round relaxes ONLY edges out of nodes whose
-    distance improved last round (the ``bfs_levels`` frontier
-    discipline) — identical results to full relaxation, because a
-    non-improved node's best label was already propagated the round it
-    last improved, so re-relaxing its edges re-derives candidates the
-    min already absorbed. Per-round cost therefore tracks the
-    improved-frontier's out-edges, not graph size: on a bounded walk
-    total work is ~|E| once the wave passes, vs hops × |E| for the
-    naive form. The early exit (empty frontier) keeps round count at
-    the true shortest-path hop diameter ≤ max_hops. Per-round
-    ``pin_iter`` pins (_util.py) keep real statistics and reset them
-    every 8th round, which keeps long walks safe.
+    distance improved last round (frontier relaxation) — identical
+    results to full relaxation, because a non-improved node's best
+    label was already propagated the round it last improved, so
+    re-relaxing its edges re-derives candidates the min already
+    absorbed. Per-round cost therefore tracks the improved frontier's
+    out-edges, not graph size: on a bounded walk total work is ~|E|
+    once the wave passes, vs hops × |E| for the naive form. The early
+    exit (empty frontier) keeps round count at the true shortest-path
+    hop diameter ≤ max_hops. Per-round ``pin_iter`` pins (_util.py)
+    keep real statistics and reset them every 8th round, which keeps
+    long walks safe.
     """
     if max_hops < 0:
         raise ValueError(f"max_hops must be >= 0, got {max_hops}")
@@ -987,38 +942,31 @@ def _canonical_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
     )
 
 
-def clustering_coefficient(
+def _triangles(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_wedges: int | None = 1_000_000_000,
-) -> DataFrame:
-    """Per-node local clustering coefficient on an undirected graph:
-    ``(node, degree, n_triangles, coeff)`` with coeff = 2T/(d(d−1)).
+    src: str,
+    dst: str,
+    max_wedges: int | None,
+    op: str,
+) -> tuple[DataFrame, DataFrame]:
+    """Exact triangles of the undirected edge set: ``(deg, tcount)``,
+    with ``deg`` = ``(node, degree)`` for every node with an edge and
+    ``tcount`` = ``(node, n_triangles)`` for every node on a triangle.
 
-    The community-density companion to ``triangle_participation``
-    (Watts & Strogatz 1998): how close each node's neighborhood is to
-    a clique — on a co-purchase graph, high-coefficient nodes sit in
-    tightly bundled product families, low-coefficient high-degree
-    nodes are hubs. Exact counts; the only float op is the final
-    division, identical one-rounding IEEE on both engines (6 dp).
+    DEGREE-ORDERED compact-forward (Latapy 2008): each edge points
+    from its lower-(degree, id) endpoint to the higher, wedges pair a
+    node's out-neighbors, and a semi-join on the oriented edges closes
+    them. Id order alone leaves Σ deg(u)² wedges (a 10⁶-degree hub is
+    10¹² candidates); degree order bounds OUT-degree by O(√m), so a
+    hub's edges all point INTO it and it makes zero wedges. Each
+    triangle appears once (at its smallest corner) and credits all
+    three corners; the triangle frame is pinned, so the wedge join
+    runs once, not once per corner.
 
-    Triangle enumeration is DEGREE-ORDERED compact-forward (Latapy
-    2008): every edge is oriented from its lower-(degree, id) endpoint
-    to the higher, wedges pair the out-neighbors of each node, and a
-    semi-join against the oriented edges closes them. Ordering by id
-    alone leaves Σ deg(u)² wedges — a single 10⁶-degree hub is 10¹²
-    candidates; ordering by degree first bounds each node's OUT-degree
-    by O(√m) (arboricity), so the hub's edges all point INTO it and it
-    generates zero wedges. Each triangle is still produced exactly
-    once (by its smallest corner in the total order), so counts — and
-    the registered oracle hash — are unchanged.
-
-    ``max_wedges`` is the degenerate-geometry circuit breaker (the
-    DBSCAN ``max_cell_pts`` pattern): one 1-row aggregate computes the
-    exact post-orientation wedge count Σ C(outdeg, 2) and raises with
-    a cost model instead of launching an unpayable join. ``None``
-    disables the check.
+    ``max_wedges`` is the circuit breaker (the DBSCAN ``max_cell_pts``
+    pattern): one 1-row aggregate computes the exact oriented wedge
+    count Σ C(outdeg, 2) and raises, naming ``op``, instead of
+    launching an unpayable join. ``None`` disables the check.
     """
     e = _canonical_edges(edges, src, dst)
     deg = (
@@ -1055,7 +1003,7 @@ def clustering_coefficient(
         )
         if est > max_wedges:
             raise ValueError(
-                f"clustering_coefficient: degree-oriented wedge count is "
+                f"{op}: degree-oriented wedge count is "
                 f"{est} (> max_wedges={max_wedges}); the triangle join "
                 "would stream that many candidate rows. This graph is "
                 "pathologically dense even after orientation — raise "
@@ -1091,6 +1039,32 @@ def clustering_coefficient(
         .unionByName(tris.select(F.col("c").alias("node")))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("n_triangles"))
+    )
+    return deg, tcount
+
+
+def clustering_coefficient(
+    edges: DataFrame,
+    src: str = "src",
+    dst: str = "dst",
+    max_wedges: int | None = 1_000_000_000,
+) -> DataFrame:
+    """Per-node local clustering coefficient on an undirected graph:
+    ``(node, degree, n_triangles, coeff)`` with coeff = 2T/(d(d−1)).
+
+    The community-density companion to ``triangle_participation``
+    (Watts & Strogatz 1998): how close each node's neighborhood is to
+    a clique — on a co-purchase graph, high-coefficient nodes sit in
+    tightly bundled product families, low-coefficient high-degree
+    nodes are hubs. Exact counts; the only float op is the final
+    division, identical one-rounding IEEE on both engines (6 dp).
+
+    Triangles come from :func:`_triangles` — degree-ordered
+    compact-forward enumeration, one pinned wedge join, and the
+    ``max_wedges`` breaker (``None`` disables it).
+    """
+    deg, tcount = _triangles(
+        edges, src, dst, max_wedges, "clustering_coefficient"
     )
     t = F.coalesce("n_triangles", F.lit(0))
     d = F.col("degree")

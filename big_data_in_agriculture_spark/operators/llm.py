@@ -734,6 +734,10 @@ def minhash_neardup_pairs(
 #: 100 TB pair graph never touches the driver.
 _DRIVER_CC_MAX_EDGES = 100_000
 
+#: Round cap of neardup_components' phase-1 min-label propagation (read
+#: at call time); what it leaves unconverged goes to the star phase.
+_FAST_ROUNDS = 6
+
 
 def _components_driver(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     """Driver-local connected components: (id, component_id=min id).
@@ -784,9 +788,6 @@ def neardup_components(
     a_col: str = "id_a",
     b_col: str = "id_b",
     max_iter: int = 50,
-    strict: bool = True,
-    fast_rounds: int = 6,
-    driver_max_edges: int = _DRIVER_CC_MAX_EDGES,
 ) -> DataFrame:
     """Connected components over near-dup pairs: (id, component_id).
 
@@ -795,7 +796,7 @@ def neardup_components(
 
     **Small-graph fast path (round 12)**: once the canonical edge set
     is counted (an action the pipeline always ran), a graph at or
-    under ``driver_max_edges`` edges (and ~2× that many nodes) is
+    under ``_DRIVER_CC_MAX_EDGES`` edges (and ~2× that many nodes) is
     labelled by driver-local union-find instead of the iterative loop
     — identical labels (component minimum), none of the 20-40
     per-round scheduler trips. Above the cap, the distributed
@@ -804,7 +805,7 @@ def neardup_components(
     TWO-PHASE hybrid (round 9):
 
     **Phase 1 — min-label propagation + pointer jump**, at most
-    ``fast_rounds`` rounds: each node adopts the minimum label in its
+    ``_FAST_ROUNDS`` rounds: each node adopts the minimum label in its
     closed neighborhood, then label(label(id)). Two node-keyed
     shuffles per round — the cheap loop, and near-dup families are
     near-cliques of diameter 2-3 that CONVERGE here in 1-3 rounds
@@ -841,11 +842,9 @@ def neardup_components(
     Convergence is VERIFIED, not assumed: phase 1 by a changed-label
     count, phase 2 by an exact edge-set fixpoint test (equal distinct
     counts + empty one-sided difference); if ``max_iter`` star rounds
-    pass without a fixpoint, ``strict=True`` (default) raises rather
-    than silently returning an under-merged labelling — downstream
-    consumers (``dedup_near``, ``leakage_safe_split``) promise whole
-    families move atomically. ``strict=False`` keeps best-effort
-    behavior for exploratory use.
+    pass without a fixpoint, it raises rather than silently returning
+    an under-merged labelling — downstream consumers (``dedup_near``,
+    ``leakage_safe_split``) promise whole families move atomically.
     """
     from ._util import pin_iter
 
@@ -892,9 +891,9 @@ def neardup_components(
     # off the driver. Labels are bit-identical to the distributed
     # path's (component minimum), pinned by
     # test_llm::test_driver_components_match_distributed.
-    if n_edges <= driver_max_edges:
+    if n_edges <= _DRIVER_CC_MAX_EDGES:
         n_nodes = nodes.count()  # materializes the lazy pin
-        if n_nodes <= 2 * driver_max_edges:
+        if n_nodes <= 2 * _DRIVER_CC_MAX_EDGES:
             return _components_driver(nodes, edges)
 
     # -- PHASE 1: min-label propagation + pointer jump, a few CHEAP
@@ -907,7 +906,7 @@ def neardup_components(
     ).localCheckpoint(eager=False)
     labels = nodes.withColumn("label", F.col("id"))
     fast_converged = False
-    for _rnd in range(fast_rounds):
+    for _rnd in range(_FAST_ROUNDS):
         neighbor_min = (
             sym.join(labels, sym.u == labels.id)
             .groupBy(F.col("v").alias("id"))
@@ -1011,12 +1010,12 @@ def neardup_components(
         if n_new == n_q and new_edges.exceptAll(q_edges).isEmpty():
             converged = True
         q_edges, n_q = new_edges, n_new
-    if not converged and strict:
+    if not converged:
         raise RuntimeError(
             f"neardup_components did not converge in {max_iter} "
             "large-star/small-star rounds — the labelling is "
             "under-merged and unsafe for dedup/split consumers; raise "
-            "max_iter or pass strict=False for a best-effort result"
+            "max_iter"
         )
     # fixpoint q_edges are (member-label, root) stars; labels whose
     # quotient node has no star edge keep themselves

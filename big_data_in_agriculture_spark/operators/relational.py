@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .graph import _triangles
+
 
 def _f(col) -> F.Column:
     """Final float32 cast for order-dependent double aggregates."""
@@ -2138,47 +2140,20 @@ def triangle_participation(
     dst_col: str = "dst",
     top_k: int = 50,
 ) -> DataFrame:
-    """Per-node triangle counts on an undirected graph.
+    """Per-node triangle counts on an undirected graph: the ``top_k``
+    nodes on at least one triangle, ``(node, n_triangles)`` by count
+    descending, then node — spam-ring and community-density detection
+    on the co-purchase graph, never touching the fact data.
 
-    The classic distributed graph metric (community density, spam-ring
-    detection on the co-purchase graph). Edges arrive canonicalized
-    (src < dst, deduped); triangles enumerate as a < b < c via two
-    equi-joins on the EDGE table — never touching the original fact
-    data — so cost is bounded by edge-count × average degree, the
-    standard compact-forward bound. Each triangle credits all three
-    corners; counts are exact integers.
+    Either edge orientation; self-loops and duplicates are dropped.
+    Triangles come from ``graph._triangles``, the enumeration
+    ``clustering_coefficient`` uses (degree-ordered, pinned, with the
+    ``max_wedges`` breaker at its default: one extra 1-row job).
     """
-    # canonicalize (either input orientation), drop self-loops, dedup
-    e = (
-        edges.select(
-            F.least(F.col(src_col), F.col(dst_col)).alias("a"),
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("b"),
-        )
-        .filter(F.col("a") < F.col("b"))
-        .distinct()
+    _, tcount = _triangles(
+        edges, src_col, dst_col, 1_000_000_000, "triangle_participation"
     )
-    e2 = e.select(F.col("a").alias("b"), F.col("b").alias("c"))
-    e3 = e.select(F.col("a").alias("ta"), F.col("b").alias("tc"))
-    tris = (
-        e.join(e2, "b")
-        .join(
-            e3,
-            (F.col("a") == F.col("ta")) & (F.col("c") == F.col("tc")),
-            "left_semi",
-        )
-        .select("a", "b", "c")
-    )
-    corners = (
-        tris.select(F.col("a").alias("node"))
-        .unionByName(tris.select(F.col("b").alias("node")))
-        .unionByName(tris.select(F.col("c").alias("node")))
-    )
-    return (
-        corners.groupBy("node")
-        .agg(F.count(F.lit(1)).alias("n_triangles"))
-        .orderBy(F.col("n_triangles").desc(), "node")
-        .limit(top_k)
-    )
+    return tcount.orderBy(F.col("n_triangles").desc(), "node").limit(top_k)
 
 
 def assign_dense_ids(

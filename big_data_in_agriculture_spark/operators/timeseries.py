@@ -32,6 +32,8 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .similarity import _quantize_col
+
 
 def daily_series(
     df: DataFrame,
@@ -703,6 +705,50 @@ def holt_winters_forecast(
     )
 
 
+def _micros(c: F.Column) -> F.Column:
+    """``c`` quantized to LONG micros, half away from zero:
+    signum(c)·floor(|c|·1e6 + 0.5) — the grid every exact-sum kernel
+    below (and its DuckDB twin) accumulates on."""
+    return (
+        F.signum(c) * F.floor(F.abs(c) * F.lit(1_000_000.0) + F.lit(0.5))
+    ).cast("long")
+
+
+def _pearson_by_lag(pairs: DataFrame, out_col: str) -> DataFrame:
+    """Per-(key, lag) Pearson correlation of LONG-micro ``(_x, _y)``
+    pairs, ``(key, lag, n_pairs, <out_col>)``, under the exact-sum
+    determinism contract in :func:`autocorrelation`'s docstring."""
+    dx = F.col("_x").cast("decimal(18,0)")
+    dy = F.col("_y").cast("decimal(18,0)")
+    sums = pairs.groupBy("key", "lag").agg(
+        F.count(F.lit(1)).alias("n_pairs"),
+        F.sum("_x").alias("_sx"),
+        F.sum("_y").alias("_sy"),
+        F.sum((dx * dy).cast("decimal(36,0)")).alias("_sxy"),
+        F.sum((dx * dx).cast("decimal(36,0)")).alias("_sxx"),
+        F.sum((dy * dy).cast("decimal(36,0)")).alias("_syy"),
+    )
+    n = F.col("n_pairs").cast("double")
+    sx = F.col("_sx").cast("double")
+    sy = F.col("_sy").cast("double")
+    sxy = F.col("_sxy").cast("double")
+    sxx = F.col("_sxx").cast("double")
+    syy = F.col("_syy").cast("double")
+    varx = n * sxx - sx * sx
+    vary = n * syy - sy * sy
+    return sums.select(
+        "key",
+        "lag",
+        "n_pairs",
+        F.when(
+            (varx > 0) & (vary > 0),
+            _quantize_col(
+                (n * sxy - sx * sy) / F.sqrt(varx) / F.sqrt(vary), 6
+            ),
+        ).alias(out_col),
+    )
+
+
 def autocorrelation(
     daily: DataFrame,
     max_lag: int = 14,
@@ -751,10 +797,6 @@ def autocorrelation(
     """
     if max_lag < 1:
         raise ValueError(f"max_lag must be >= 1, got {max_lag}")
-    vmic = (
-        F.signum(F.col("value"))
-        * F.floor(F.abs(F.col("value")) * F.lit(1_000_000.0) + F.lit(0.5))
-    ).cast("long")
     # NULL observations are excluded BEFORE indexing (position indices
     # run over observed values): a NULL can neither pair nor sum, and
     # leaving it in would make n_pairs disagree with the sums — and
@@ -765,10 +807,8 @@ def autocorrelation(
         .select(
             F.col(key_col).alias("key"),
             F.col(day_col).alias("day"),
-            F.col(value_col).cast("double").alias("value"),
+            _micros(F.col(value_col).cast("double")).alias("_v"),
         )
-        .withColumn("_v", vmic)
-        .select("key", "day", "_v")
     )
     # one sort per key; all max_lag leads evaluate in that single
     # window pass. Tiebreak on _v keeps duplicate-(key, day) inputs
@@ -804,40 +844,7 @@ def autocorrelation(
             "_y",
         )
     )
-    dx = F.col("_x").cast("decimal(18,0)")
-    dy = F.col("_y").cast("decimal(18,0)")
-    sums = (
-        pairs.groupBy("key", "lag")
-        .agg(
-            F.count(F.lit(1)).alias("n_pairs"),
-            F.sum("_x").alias("_sx"),
-            F.sum("_y").alias("_sy"),
-            F.sum((dx * dy).cast("decimal(36,0)")).alias("_sxy"),
-            F.sum((dx * dx).cast("decimal(36,0)")).alias("_sxx"),
-            F.sum((dy * dy).cast("decimal(36,0)")).alias("_syy"),
-        )
-    )
-    n = F.col("n_pairs").cast("double")
-    sx = F.col("_sx").cast("double")
-    sy = F.col("_sy").cast("double")
-    sxy = F.col("_sxy").cast("double")
-    sxx = F.col("_sxx").cast("double")
-    syy = F.col("_syy").cast("double")
-    varx = n * sxx - sx * sx
-    vary = n * syy - sy * sy
-    from .similarity import _quantize_col
-
-    return sums.select(
-        "key",
-        "lag",
-        "n_pairs",
-        F.when(
-            (varx > 0) & (vary > 0),
-            _quantize_col(
-                (n * sxy - sx * sy) / F.sqrt(varx) / F.sqrt(vary), 6
-            ),
-        ).alias("acf"),
-    )
+    return _pearson_by_lag(pairs, "acf")
 
 
 def cross_correlation(
@@ -874,21 +881,13 @@ def cross_correlation(
     daily-series form); duplicates are ordered by the deterministic
     tiebreak (day, x, y).
 
-    Determinism contract: both series quantize to LONG micros
-    (half-away); all five correlation sums are EXACT integer sums
-    (DECIMAL(36,0) / HUGEINT); the Pearson formula evaluates in a
-    fixed double op sequence from exactly-representable integers;
-    result quantized 6 dp half-away. Zero-variance slices emit NULL
-    ccf. Same |value| < 1e12 micros bound as autocorrelation.
+    Determinism contract: :func:`autocorrelation`'s — both series
+    quantize to LONG micros and the Pearson tail is the same exact-sum
+    kernel; zero-variance slices emit NULL ccf.
     """
     if max_lag < 1:
         raise ValueError(f"max_lag < 1: {max_lag}")
     m = int(max_lag)
-
-    def _mic(c: F.Column) -> F.Column:
-        return (
-            F.signum(c) * F.floor(F.abs(c) * F.lit(1_000_000.0) + F.lit(0.5))
-        ).cast("long")
 
     base = (
         daily.filter(
@@ -897,8 +896,8 @@ def cross_correlation(
         .select(
             F.col(key_col).alias("key"),
             F.col(day_col).alias("day"),
-            _mic(F.col(x_col).cast("double")).alias("_x"),
-            _mic(F.col(y_col).cast("double")).alias("_y"),
+            _micros(F.col(x_col).cast("double")).alias("_x"),
+            _micros(F.col(y_col).cast("double")).alias("_y"),
         )
     )
     wlead = Window.partitionBy("key").orderBy("day", "_x", "_y")
@@ -925,37 +924,7 @@ def cross_correlation(
             F.col("_yv").alias("_y"),
         )
     )
-    dx = F.col("_x").cast("decimal(18,0)")
-    dy = F.col("_y").cast("decimal(18,0)")
-    sums = pairs.groupBy("key", "lag").agg(
-        F.count(F.lit(1)).alias("n_pairs"),
-        F.sum("_x").alias("_sx"),
-        F.sum("_y").alias("_sy"),
-        F.sum((dx * dy).cast("decimal(36,0)")).alias("_sxy"),
-        F.sum((dx * dx).cast("decimal(36,0)")).alias("_sxx"),
-        F.sum((dy * dy).cast("decimal(36,0)")).alias("_syy"),
-    )
-    n = F.col("n_pairs").cast("double")
-    sx = F.col("_sx").cast("double")
-    sy = F.col("_sy").cast("double")
-    sxy = F.col("_sxy").cast("double")
-    sxx = F.col("_sxx").cast("double")
-    syy = F.col("_syy").cast("double")
-    varx = n * sxx - sx * sx
-    vary = n * syy - sy * sy
-    from .similarity import _quantize_col
-
-    return sums.select(
-        "key",
-        "lag",
-        "n_pairs",
-        F.when(
-            (varx > 0) & (vary > 0),
-            _quantize_col(
-                (n * sxy - sx * sy) / F.sqrt(varx) / F.sqrt(vary), 6
-            ),
-        ).alias("ccf"),
-    )
+    return _pearson_by_lag(pairs, "ccf")
 
 
 def mad_outliers(
@@ -993,14 +962,8 @@ def mad_outliers(
     state is two LONGs. Skewed keys cost their row count in a sort,
     never a pair blowup.
     """
-    from .similarity import _quantize_col as _ts_quantize
-
     if k_num < 0 or k_den <= 0:
         raise ValueError(f"invalid threshold {k_num}/{k_den}")
-    vmic = (
-        F.signum(F.col("value"))
-        * F.floor(F.abs(F.col("value")) * F.lit(1_000_000.0) + F.lit(0.5))
-    ).cast("long")
     # NULL observations excluded: they carry no deviation, and a NULL
     # entering the median rank window would split the engines (Spark
     # sorts NULLs first, DuckDB last — caught live by the --nulls
@@ -1012,7 +975,7 @@ def mad_outliers(
             F.col(day_col).alias("day"),
             F.col(value_col).cast("double").alias("value"),
         )
-        .withColumn("_v", vmic)
+        .withColumn("_v", _micros(F.col("value")))
         .localCheckpoint(eager=False)
     )
 
@@ -1056,7 +1019,7 @@ def mad_outliers(
             "value",
             F.when(
                 F.col("_mad4") > 0,
-                _ts_quantize(
+                _quantize_col(
                     F.lit(2.0) * F.col("_dev2").cast("double")
                     / F.col("_mad4").cast("double"),
                     6,
@@ -1121,16 +1084,12 @@ def seasonal_decompose(
     slot = F.pmod(
         F.expr(f"cast({day_col} as long) div 86400"), F.lit(m)
     ).cast("int")
-    vmic = (
-        F.signum(F.col("value"))
-        * F.floor(F.abs(F.col("value")) * F.lit(1_000_000.0) + F.lit(0.5))
-    ).cast("long")
     base = daily.select(
         F.col(key_col).alias("key"),
         F.col(day_col).alias("day"),
         F.col(value_col).cast("double").alias("value"),
         slot.alias("_slot"),
-    ).withColumn("_vmic", vmic)
+    ).withColumn("_vmic", _micros(F.col("value")))
     with_trend = base.select(
         "key",
         "day",
@@ -1150,13 +1109,7 @@ def seasonal_decompose(
         ).alias("_trend"),
     )
     detr = F.col("value") - F.col("_trend")
-    dmic = F.when(
-        F.col("_trend").isNotNull(),
-        (
-            F.signum(detr)
-            * F.floor(F.abs(detr) * F.lit(1_000_000.0) + F.lit(0.5))
-        ).cast("long"),
-    )
+    dmic = F.when(F.col("_trend").isNotNull(), _micros(detr))
     # Pin the trended frame for its TWO consumers (slot aggregate +
     # final join) with a SERIALIZED localCheckpoint: DEFAULT checkpoint
     # blocks are MEMORY_AND_DISK *deserialized*, and when a data-sized
@@ -1204,8 +1157,6 @@ def seasonal_decompose(
     # round(): centered seasonal effects land on decimal ties (micro-
     # grid inputs), where Spark's BigDecimal round and DuckDB's binary
     # round disagree — observed live on this operator
-    from .similarity import _quantize_col
-
     seasonal = s_raw.select(
         "key",
         "_slot",

@@ -9,6 +9,7 @@ redistribution — on graphs small enough to compute by hand.
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from big_data_in_agriculture_spark.operators.graph import MASS, pagerank
 
@@ -276,6 +277,68 @@ class TestPersonalizedPagerank:
         assert personalized_pagerank(e, s, iterations=2).count() == 0
 
 
+def _random_edges(seed, n_nodes=25, n_edges=45, out_nodes=20, nulls=False):
+    # sources drawn from the first out_nodes ids only, so every id at or
+    # above it that appears is dangling (no out-edges)
+    import random
+
+    rng = random.Random(seed)
+    rows = [
+        (rng.randrange(out_nodes), rng.randrange(n_nodes))
+        for _ in range(n_edges)
+    ]
+    if nulls:
+        rows += [(None, 3), (4, None), (None, None), (rows[0][0], None)]
+    return rows
+
+
+def test_pagerank_is_ppr_with_every_node_a_source(spark):
+    # teleport home to EVERY node is uniform teleport, and dangling
+    # mass returned to every node is uniform redistribution: the two
+    # operators must agree to the last 1e-12 unit
+    from big_data_in_agriculture_spark.operators.graph import (
+        personalized_pagerank,
+    )
+
+    e = spark.createDataFrame(_random_edges(7), "src long, dst long")
+    nodes = e.select(F.col("src").alias("node")).union(
+        e.select(F.col("dst").alias("node"))
+    ).distinct()
+    assert e.filter(F.col("dst") >= 20).count() > 0  # dangling present
+    pr = _ranks(pagerank(e, iterations=4))
+    ppr = _ranks(personalized_pagerank(e, nodes, iterations=4))
+    assert len(pr) == nodes.count()
+    assert pr == ppr
+
+
+@pytest.mark.parametrize("max_depth", [0, 2, 6])
+def test_bfs_levels_is_unit_weight_sssp(spark, max_depth):
+    # with every weight 1 the first visit is the minimum hop count, so
+    # BFS levels are shortest-path distances bounded at max_depth hops
+    # — NULL endpoints included (a NULL dst is reached, never expanded)
+    from collections import Counter
+
+    from big_data_in_agriculture_spark.operators.graph import sssp
+
+    for seed, nulls in ((1, False), (2, True), (3, True)):
+        e = spark.createDataFrame(
+            _random_edges(seed, nulls=nulls), "src long, dst long"
+        )
+        s = _srcs(spark, [0, 5])
+        bfs = Counter(
+            map(tuple, bfs_levels(e, s, max_depth=max_depth).collect())
+        )
+        unit = Counter(
+            map(
+                tuple,
+                sssp(
+                    e.withColumn("w", F.lit(1)), s, max_hops=max_depth
+                ).collect(),
+            )
+        )
+        assert bfs == unit, (seed, nulls)
+
+
 class TestKcore:
     def test_triangle_survives_tail_peeled(self, spark):
         from big_data_in_agriculture_spark.operators.graph import kcore
@@ -393,10 +456,13 @@ class TestClusteringCoefficient:
         with pytest.raises(ValueError, match="max_wedges"):
             clustering_coefficient(e, max_wedges=0)
 
-    def test_final_plan_has_no_join_resident_triangle_subtree(self, spark):
-        from big_data_in_agriculture_spark.operators.graph import (
-            clustering_coefficient,
-        )
+    @pytest.mark.parametrize(
+        "op", ["clustering_coefficient", "triangle_participation"]
+    )
+    def test_final_plan_has_no_join_resident_triangle_subtree(
+        self, spark, op
+    ):
+        from big_data_in_agriculture_spark.operators import graph, relational
 
         # the triangle enumeration (two joins + a semi-join) must live
         # BEHIND the tris pin: the 3-way corner union is three
@@ -407,8 +473,8 @@ class TestClusteringCoefficient:
         e = spark.createDataFrame(
             [(1, 2), (2, 3), (3, 1), (3, 4)], ["src", "dst"]
         )
-        out = clustering_coefficient(e)
-        plan = out._jdf.queryExecution().executedPlan().toString()
+        fn = getattr(graph, op, None) or getattr(relational, op)
+        plan = fn(e)._jdf.queryExecution().executedPlan().toString()
         assert "LeftSemi" not in plan, plan
 
 

@@ -1292,7 +1292,7 @@ class TestRegexLinearity:
         assert "aaa" in out and "<b>" not in out
 
 
-def test_neardup_components_deep_chain_pointer_jump(spark):
+def test_neardup_components_deep_chain_pointer_jump(spark, monkeypatch):
     """A diameter-60 chain converges well inside max_iter=50: pointer
     jumping makes the min's reach roughly double per round (plain
     propagation would need 60 rounds and, pre-round-7, silently
@@ -1301,17 +1301,18 @@ def test_neardup_components_deep_chain_pointer_jump(spark):
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 61)], ["id_a", "id_b"]
     )
-    # driver_max_edges=0 forces the DISTRIBUTED path — the property
+    # an edge cap of 0 forces the DISTRIBUTED path — the property
     # under test is the iterative loop's convergence, which the
     # round-12 small-graph fast path would otherwise bypass here
+    monkeypatch.setattr(llm, "_DRIVER_CC_MAX_EDGES", 0)
     comps = {
         r["id"]: r["component_id"]
-        for r in llm.neardup_components(pairs, driver_max_edges=0).collect()
+        for r in llm.neardup_components(pairs).collect()
     }
     assert comps == {i: 1 for i in range(1, 62)}
 
 
-def test_driver_components_match_distributed(spark):
+def test_driver_components_match_distributed(spark, monkeypatch):
     """Round-12 small-graph fast path: driver union-find labels are
     BIT-IDENTICAL to the distributed large-star/small-star path's on
     an adversarial mix — chains (local-min stalls), a clique, isolated
@@ -1323,48 +1324,36 @@ def test_driver_components_match_distributed(spark):
         + [(7, 500), (500, 3)]                        # id gaps / zig-zag
     )
     pairs = spark.createDataFrame(edges, ["id_a", "id_b"])
-    fast = {
-        (r["id"], r["component_id"])
-        for r in llm.neardup_components(pairs).collect()
-    }
-    slow = {
-        (r["id"], r["component_id"])
-        for r in llm.neardup_components(pairs, driver_max_edges=0).collect()
-    }
-    assert fast == slow
-
     spairs = spark.createDataFrame(
         [(f"d{a:03d}", f"d{b:03d}") for a, b in edges], ["id_a", "id_b"]
     )
-    sfast = {
-        (r["id"], r["component_id"])
-        for r in llm.neardup_components(spairs).collect()
-    }
-    sslow = {
-        (r["id"], r["component_id"])
-        for r in llm.neardup_components(spairs, driver_max_edges=0).collect()
-    }
-    assert sfast == sslow
+
+    def labels(p):
+        return {
+            (r["id"], r["component_id"])
+            for r in llm.neardup_components(p).collect()
+        }
+
+    fast, sfast = labels(pairs), labels(spairs)
+    monkeypatch.setattr(llm, "_DRIVER_CC_MAX_EDGES", 0)
+    assert fast == labels(pairs)
+    assert sfast == labels(spairs)
 
 
-def test_neardup_components_nonconvergence_raises(spark):
-    """strict=True (default) raises instead of returning an
-    under-merged labelling; strict=False keeps best-effort."""
+def test_neardup_components_nonconvergence_raises(spark, monkeypatch):
+    """Non-convergence raises instead of returning an under-merged
+    labelling."""
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 30)], ["id_a", "id_b"]
     )
     # starve BOTH phases: one fast round can't finish a 29-hop chain
     # and zero star rounds leaves the quotient unmerged
-    # (driver_max_edges=0: the strictness contract belongs to the
+    # (edge cap 0: the convergence contract belongs to the
     # distributed path — the driver fast path is always exact)
+    monkeypatch.setattr(llm, "_FAST_ROUNDS", 1)
+    monkeypatch.setattr(llm, "_DRIVER_CC_MAX_EDGES", 0)
     with pytest.raises(RuntimeError, match="did not converge"):
-        llm.neardup_components(
-            pairs, max_iter=0, fast_rounds=1, driver_max_edges=0
-        )
-    out = llm.neardup_components(
-        pairs, max_iter=0, fast_rounds=1, strict=False, driver_max_edges=0
-    )
-    assert out.count() == 30  # best-effort still returns every node
+        llm.neardup_components(pairs, max_iter=0)
 
 
 def test_leakage_safe_split_deep_chain_is_atomic(spark):
