@@ -51,6 +51,37 @@ def _date_as_ts(df: DataFrame, *cols: str) -> DataFrame:
     return df
 
 
+#: path -> ((size, mtime_ns, nanosAsLong), schema) of each parquet file
+#: ``_t`` has read: a repeat read of an unchanged file skips the
+#: schema-inference job (one per read, 96-138 ms each — three of
+#: tpch_q3's three build jobs). The session belongs to the caller, so
+#: schemas are cached, never DataFrames.
+_SCHEMAS: dict[str, tuple] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, with the inferred schema of a
+    single file cached on its size, mtime and the nanosAsLong setting
+    (which changes how TIMESTAMP(NANOS) infers). A rewritten file is
+    inferred again; a directory keeps plain inference."""
+    import os
+
+    if not os.path.isfile(path):
+        return spark.read.parquet(path)
+    st = os.stat(path)
+    stamp = (
+        st.st_size,
+        st.st_mtime_ns,
+        spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false"),
+    )
+    hit = _SCHEMAS.get(path)
+    if hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[path] = (stamp, df.schema)
+    return df
+
+
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # Pin UTC so to_date/date_trunc on TimestampType match DuckDB's
     # naive-timestamp calendar math regardless of the host session TZ.
@@ -63,13 +94,13 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # exceed 2^53 so double math would round); a native timestamp just
         # gets normalized to session-TZ TimestampType (UTC-pinned above).
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
         from pyspark.sql.types import LongType
 
         if isinstance(df.schema["ts"].dataType, LongType):
             return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         return df.withColumn("ts", F.col("ts").cast("timestamp"))
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
     # Drift guard (same lesson as events.ts): if a driver generation
     # stores date-grain columns as parquet DATE instead of TIMESTAMP,
     # normalize to timestamp — Spark DateType → pandas `date` objects

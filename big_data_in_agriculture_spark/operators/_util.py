@@ -134,6 +134,41 @@ def pin_iter(df: DataFrame, rnd: int, eager: bool = True) -> DataFrame:
     return df.localCheckpoint(eager=eager)
 
 
+#: Edge-count ceiling of the driver path for the iterative graph
+#: operators (read at call time). A graph this small is "model-sized"
+#: (a few MB collected — the budget of a broadcast relation or of the
+#: kmeans/classifier model collects), and the Spark loop pays every
+#: round in scheduler trips over a few KB: pagerank_trade (1,600
+#: nodes) built with 42 jobs. Above the cap the Spark loops run
+#: unchanged, so a 100 TB graph never touches the driver.
+_DRIVER_MAX_EDGES = 100_000
+
+
+def _driver_rows(df: DataFrame, key_types=(), scale: int = 1) -> list | None:
+    """The collected rows of ``df`` if it holds at most ``scale`` ×
+    ``_DRIVER_MAX_EDGES`` rows, else None (one bounded action).
+
+    The iterative graph operators call this once on their own prepared
+    edge frame — after their casts and filters, so a driver kernel sees
+    exactly the values the Spark loop would — and take the Spark loop
+    on None. ``key_types`` are the Spark types of every node-id column
+    the kernel compares: the driver path is taken only when they are
+    all integral or all plain strings, where Python equality is Spark's
+    (float ids would split NaN and -0.0, mixed families would compare
+    across an implicit cast). A negative cap turns the path off.
+    """
+    from pyspark.sql.types import IntegralType, StringType
+
+    cap = scale * _DRIVER_MAX_EDGES
+    if cap < 0 or not (
+        all(isinstance(t, IntegralType) for t in key_types)
+        or all(t == StringType() for t in key_types)
+    ):
+        return None
+    rows = df.limit(cap + 1).collect()
+    return rows if len(rows) <= cap else None
+
+
 #: Assumed split size when the session conf is unreadable (Spark default).
 _DEFAULT_SPLIT_BYTES = 128 * 1024 * 1024
 

@@ -43,6 +43,16 @@ personalized_pagerank), ``sssp`` (and bfs_levels, its unit-weight
 case), ``_adaptive_fixpoint`` (core_numbers, label_propagation) and
 kcore's peel. Triangles are enumerated once, in ``_triangles``.
 
+Driver path for model-sized graphs: the power iteration and the
+frontier relaxation first make one bounded collect of their prepared
+edge frame (``_util._driver_rows``). At or under
+``_util._DRIVER_MAX_EDGES`` edges, with integer or string node ids, a
+numpy kernel (``_power_iteration_driver``, ``_relax_driver``) replays
+the Spark loop's integer arithmetic bit for bit on the driver and the
+result comes back through ``createDataFrame`` with the Spark path's
+own schema; a 1,600-node graph's loop is otherwise dozens of jobs over
+a few KB. Above the cap the Spark loop runs unchanged.
+
 The reference has no graph stage (its 920-LoC scope is CDS NetCDF →
 parquet marts → Postgres, flows/ has no joins at all); this module is
 part of the LLM-pipeline extension surface, the same tier as the
@@ -56,10 +66,11 @@ import sys
 import time
 from collections.abc import Callable
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ._util import pin_iter
+from ._util import _driver_rows, pin_iter
 
 
 def _trace(op: str, rnd: int, changed: int, t0: float) -> None:
@@ -138,8 +149,11 @@ def pagerank(
 
     Scale shape: iterations × (one join + one aggregate) shuffled on
     the node key; the rank table is node-sized, the join edge-sized.
-    The only driver-side values are the node count and the per-round
-    1-row dangling aggregate.
+    Above ``_util._DRIVER_MAX_EDGES`` edges the only driver-side values
+    are the node count and the per-round 1-row dangling aggregate; at
+    or under it the edges are collected once and the rounds run in
+    numpy on the driver (:func:`_power_iteration_driver`), with
+    bit-identical ranks.
 
     ``residual_out``: pass a list to receive one LONG per round —
     ``sum(abs(rank_t − rank_{t−1}))`` in 1e-12 mass units — the
@@ -155,20 +169,95 @@ def pagerank(
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint(eager=False)
     )
+    rows = _driver_rows(e, _types(e, "src", "dst"))
+    if rows is not None:
+        return _power_iteration_driver(
+            rows, None, e, _with_outdeg(nodes, outdeg), "true",
+            iterations, damping_pct, residual_out,
+        )
+    nodes = nodes.localCheckpoint(eager=False)
     n = nodes.count()
     if n == 0:
-        return nodes.withColumn("rank_e12", F.lit(0).cast("long"))
+        return _no_ranks(nodes)
 
     # static per-node frame: node, outdeg (0 => dangling)
-    deg = (
-        nodes.join(outdeg, "node", "left")
-        .select("node", F.coalesce("od", F.lit(0)).alias("od"))
-        .localCheckpoint(eager=False)
-    )
+    deg = _with_outdeg(nodes, outdeg).localCheckpoint(eager=False)
     return _power_iteration(
         e, deg, n, iterations, damping_pct, "true", residual_out
+    )
+
+
+def _types(df: DataFrame, *cols: str) -> list:
+    """Spark types of ``cols`` — the node-id keys ``_driver_rows``
+    checks before a driver kernel compares ids in Python."""
+    return [df.schema[c].dataType for c in cols]
+
+
+def _with_outdeg(nodes: DataFrame, outdeg: DataFrame) -> DataFrame:
+    """``(node, od)`` over ``nodes``; od 0 => dangling."""
+    return nodes.join(outdeg, "node", "left").select(
+        "node", F.coalesce("od", F.lit(0)).alias("od")
+    )
+
+
+def _no_ranks(nodes: DataFrame) -> DataFrame:
+    """The empty ``(node, rank_e12)`` result: no node takes teleport."""
+    return nodes.select("node").limit(0).withColumn(
+        "rank_e12", F.lit(0).cast("long")
+    )
+
+
+def _rank_start(deg: DataFrame, n_tele: int, tele: str) -> DataFrame:
+    """Round-0 ranks: ``M div n_tele`` on each teleport node, else 0."""
+    return deg.withColumn(
+        "rank_e12",
+        F.when(F.expr(tele), F.lit(MASS // n_tele))
+        .otherwise(F.lit(0))
+        .cast("long"),
+    )
+
+
+def _rank_step(
+    e: DataFrame,
+    deg: DataFrame,
+    ranks: DataFrame,
+    n_tele: int,
+    damping_pct: int,
+    tele: str,
+) -> DataFrame:
+    """One power-iteration round over ``ranks``, unpinned."""
+    # share of total mass per teleport node, LONG
+    teleport = (100 - damping_pct) * (MASS // n_tele) // 100
+    home = F.expr(tele)
+    # dangling mass: 1-row LONG aggregate, broadcast back below
+    dangling = (
+        ranks.filter(F.col("od") == 0)
+        .agg(F.coalesce(F.sum("rank_e12"), F.lit(0)).alias("_dm"))
+    )
+    shares = (
+        ranks.filter(F.col("od") > 0)
+        .select("node", F.expr("rank_e12 div od").alias("share"))
+    )
+    inflow = (
+        e.join(shares, e.src == shares.node)
+        .groupBy(F.col("dst").alias("node"))
+        .agg(F.sum("share").alias("inflow"))
+    )
+    return (
+        deg.join(inflow, "node", "left")
+        .crossJoin(F.broadcast(dangling))
+        .select(
+            *deg.columns,
+            (
+                F.when(home, F.lit(teleport)).otherwise(F.lit(0))
+                + F.expr(
+                    f"({damping_pct} * (coalesce(inflow, 0)"
+                    f" + (case when {tele} then _dm div {n_tele}"
+                    " else 0 end))) div 100"
+                )
+            ).cast("long").alias("rank_e12"),
+        )
     )
 
 
@@ -181,52 +270,21 @@ def _power_iteration(
     tele: str,
     residual_out: list | None,
 ) -> DataFrame:
-    """The rounds of :func:`pagerank` and :func:`personalized_pagerank`:
-    ``(node, rank_e12)``. Ranks carry the pinned ``deg`` frame's
-    columns (``node``, ``od`` 0 => dangling, and any column ``tele``
-    reads), so a round is two node-keyed shuffles plus a 1-row
-    dangling aggregate broadcast back. ``tele`` is the SQL predicate of
-    the ``n_tele`` nodes that receive teleport and dangling mass:
-    ``"true"`` (folded away by the optimizer) or ``"is_src = 1"``.
+    """The Spark rounds of :func:`pagerank` and
+    :func:`personalized_pagerank`: ``(node, rank_e12)``. Ranks carry the
+    pinned ``deg`` frame's columns (``node``, ``od`` 0 => dangling, and
+    any column ``tele`` reads), so a round is two node-keyed shuffles
+    plus a 1-row dangling aggregate broadcast back. ``tele`` is the SQL
+    predicate of the ``n_tele`` nodes that receive teleport and
+    dangling mass: ``"true"`` (folded away by the optimizer) or
+    ``"is_src = 1"``.
     """
-    base = MASS // n_tele  # share of total mass per teleport node, LONG
-    teleport = (100 - damping_pct) * base // 100
-    home = F.expr(tele)
-    ranks = deg.withColumn(
-        "rank_e12",
-        F.when(home, F.lit(base)).otherwise(F.lit(0)).cast("long"),
-    )
+    ranks = _rank_start(deg, n_tele, tele)
     for _rnd in range(iterations):
         prev = ranks
-        # dangling mass: 1-row LONG aggregate, broadcast back below
-        dangling = (
-            ranks.filter(F.col("od") == 0)
-            .agg(F.coalesce(F.sum("rank_e12"), F.lit(0)).alias("_dm"))
-        )
-        shares = (
-            ranks.filter(F.col("od") > 0)
-            .select("node", F.expr("rank_e12 div od").alias("share"))
-        )
-        inflow = (
-            e.join(shares, e.src == shares.node)
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("share").alias("inflow"))
-        )
         # per-round pin with a periodic stats reset (_util.pin_iter)
         ranks = pin_iter(
-            deg.join(inflow, "node", "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                *deg.columns,
-                (
-                    F.when(home, F.lit(teleport)).otherwise(F.lit(0))
-                    + F.expr(
-                        f"({damping_pct} * (coalesce(inflow, 0)"
-                        f" + (case when {tele} then _dm div {n_tele}"
-                        " else 0 end))) div 100"
-                    )
-                ).cast("long").alias("rank_e12"),
-            ),
+            _rank_step(e, deg, ranks, n_tele, damping_pct, tele),
             _rnd,
             eager=False,
         )
@@ -247,6 +305,92 @@ def _power_iteration(
                 .first()[0]
             )
     return ranks.select("node", "rank_e12")
+
+
+def _index(ids: dict, values: list) -> np.ndarray:
+    """Dense int64 index of each of ``values`` in ``ids``, numbering
+    unseen ids in order of first appearance."""
+    return np.fromiter(
+        (ids.setdefault(v, len(ids)) for v in values), np.int64, len(values)
+    )
+
+
+def _power_iteration_driver(
+    rows: list,
+    sources: list | None,
+    e: DataFrame,
+    deg: DataFrame,
+    tele: str,
+    iterations: int,
+    damping_pct: int,
+    residual_out: list | None,
+) -> DataFrame:
+    """:func:`_power_iteration` on the driver, for a model-sized graph:
+    the same LONG arithmetic over the collected ``(src, dst)`` ``rows``
+    in numpy int64, ``//`` for Spark's ``div`` (every operand is
+    non-negative) and ``np.add.at`` for the inflow sum, so the ranks
+    are bit-identical. No value can overflow: total rank mass never
+    exceeds ``MASS``, so no intermediate exceeds 100 × 2 × ``MASS``.
+
+    ``sources`` is None for pagerank (every node teleports) or the
+    personalized source ids. NULL ids replay the Spark loop's
+    equi-joins, which never match NULL: a NULL node is one node of N
+    with out-degree 0 and no inflow, an edge into NULL counts in its
+    source's out-degree and loses its share, and a NULL source is not
+    a source. The output schema is read from the Spark path's own
+    unexecuted frames (``deg`` unpinned, ``e`` the edge frame).
+    """
+    ids: dict = {}
+    src = _index(ids, [r[0] for r in rows])
+    dst = _index(ids, [r[1] for r in rows])
+    home_idx = None if sources is None else _index(ids, sources)
+    n = len(ids)
+    null = ids.get(None, -1)
+    od = np.bincount(src, minlength=n).astype(np.int64)
+    live = (src != null) & (dst != null)
+    src_l, dst_l = src[live], dst[live]
+    if null >= 0:
+        od[null] = 0
+    if home_idx is None:
+        home = np.ones(n, bool)
+    else:
+        home = np.zeros(n, bool)
+        home[home_idx] = True
+        if null >= 0:
+            home[null] = False
+    n_tele = int(home.sum())
+    spark = e.sparkSession
+    if n_tele == 0:
+        return spark.createDataFrame([], _no_ranks(deg).schema)
+    base = MASS // n_tele
+    teleport = np.where(home, (100 - damping_pct) * base // 100, 0)
+    rank = np.where(home, base, 0).astype(np.int64)
+    dangling, out = od == 0, od > 0
+    for _ in range(iterations):
+        share = np.zeros(n, np.int64)
+        share[out] = rank[out] // od[out]
+        inflow = np.zeros(n, np.int64)
+        np.add.at(inflow, dst_l, share[src_l])
+        dm = int(rank[dangling].sum())
+        nxt = teleport + damping_pct * (
+            inflow + np.where(home, dm // n_tele, 0)
+        ) // 100
+        if residual_out is not None:
+            # the Spark residual joins ranks on node: NULL drops out
+            diff = np.abs(nxt - rank)
+            if null >= 0:
+                diff[null] = 0
+            residual_out.append(int(diff.sum()))
+        rank = nxt
+    start = _rank_start(deg, n_tele, tele)
+    last = (
+        _rank_step(e, deg, start, n_tele, damping_pct, tele)
+        if iterations
+        else start
+    )
+    return spark.createDataFrame(
+        list(zip(ids, rank.tolist())), last.select("node", "rank_e12").schema
+    )
 
 
 def bfs_levels(
@@ -312,7 +456,8 @@ def personalized_pagerank(
 
     The rounds are pagerank's own (:func:`_power_iteration`), with
     teleport and dangling mass gated on ``is_src = 1``; rank rows carry
-    (od, is_src) so no per-round membership join.
+    (od, is_src) so no per-round membership join. A model-sized graph
+    runs them on the driver (:func:`_power_iteration_driver`).
     """
     e, outdeg = _rank_edges(edges, src, dst, iterations, damping_pct)
     s = sources.select(F.col(source_col).alias("node")).distinct()
@@ -330,13 +475,19 @@ def personalized_pagerank(
             F.coalesce("od", F.lit(0)).alias("od"),
             F.coalesce("_is_src", F.lit(0)).alias("is_src"),
         )
-        .localCheckpoint(eager=False)
     )
+    rows = _driver_rows(e, _types(e, "src", "dst") + _types(s, "node"))
+    if rows is not None:
+        srcs = _driver_rows(s, scale=2)
+        if srcs is not None:
+            return _power_iteration_driver(
+                rows, [r[0] for r in srcs], e, deg, "is_src = 1",
+                iterations, damping_pct, None,
+            )
+    deg = deg.localCheckpoint(eager=False)
     s_n = deg.filter(F.col("is_src") == 1).count()
     if s_n == 0:
-        return deg.select("node").limit(0).withColumn(
-            "rank_e12", F.lit(0).cast("long")
-        )
+        return _no_ranks(deg)
     return _power_iteration(
         e, deg, s_n, iterations, damping_pct, "is_src = 1", None
     )
@@ -871,52 +1022,46 @@ def sssp(
     exit (empty frontier) keeps round count at the true shortest-path
     hop diameter ≤ max_hops. Per-round ``pin_iter`` pins (_util.py)
     keep real statistics and reset them every 8th round, which keeps
-    long walks safe.
+    long walks safe. At or under ``_util._DRIVER_MAX_EDGES`` edges the
+    same rounds run in numpy on the driver (:func:`_relax_driver`).
+
+    Edges with a NULL endpoint are dropped first — they lie on no
+    path — so the result has one row per reached node. A NULL source
+    is one ``(NULL, 0)`` row.
     """
     if max_hops < 0:
         raise ValueError(f"max_hops must be >= 0, got {max_hops}")
+    # an edge with a NULL endpoint lies on no path: the equi-joins
+    # never expand a NULL src, and a NULL dst would only add one stray
+    # (NULL, dist) row per round that reaches it
     e = (
         edges.select(
             F.col(src).alias("src"),
             F.col(dst).alias("dst"),
             F.col(weight).cast("long").alias("w"),
-        ).filter(F.col("w") >= 0)
+        ).filter(
+            (F.col("w") >= 0)
+            & F.col("src").isNotNull()
+            & F.col("dst").isNotNull()
+        )
         .localCheckpoint(eager=False)
     )
     dist = (
         sources.select(F.col(source_col).alias("node"))
         .distinct()
         .withColumn("dist", F.lit(0).cast("long"))
-        .localCheckpoint(eager=False)
     )
+    rows = _driver_rows(e, _types(e, "src", "dst") + _types(dist, "node"))
+    if rows is not None:
+        srcs = _driver_rows(dist.select("node"), scale=2)
+        if srcs is not None:
+            out = _relax_driver(rows, [r[0] for r in srcs], e, dist, max_hops)
+            if out is not None:
+                return out
+    dist = dist.localCheckpoint(eager=False)
     frontier = dist  # round 0: every source just "improved" to 0
     for _rnd in range(max_hops):
-        relaxed = (
-            e.join(frontier, e.src == frontier.node)
-            .select(F.col("dst").alias("node"), (F.col("dist") + F.col("w")).alias("_cand"))
-            .groupBy("node")
-            .agg(F.min("_cand").alias("_cand"))
-        )
-        # least() skips NULLs (full join: either side may be absent).
-        # r12: the improved flag is computed IN the relaxation join —
-        # the old form re-joined nxt against dist just to recover the
-        # old distance this join already had on its left side, costing
-        # a second node-keyed join + a second pin every round. Same
-        # flag by definition: least(d, c) < d ⟺ c < d, and a node
-        # absent from dist (NULL d) is improved iff relaxed reached it.
-        step = pin_iter(
-            dist.join(relaxed, "node", "full")
-            .select(
-                "node",
-                F.least("dist", "_cand").alias("_nd"),
-                (
-                    F.col("dist").isNull()
-                    | (F.col("_cand") < F.col("dist"))
-                ).alias("_imp"),
-            )
-            .select("node", F.col("_nd").alias("dist"), "_imp"),
-            _rnd,
-        )
+        step = pin_iter(_relax_step(e, dist, frontier), _rnd)
         # frontier and the new dist are plan branches over the SAME
         # pinned frame — cheap scans, no recompute
         frontier = step.filter(F.col("_imp")).select("node", "dist")
@@ -925,6 +1070,93 @@ def sssp(
         if done:
             break
     return dist
+
+
+def _relax_step(
+    e: DataFrame, dist: DataFrame, frontier: DataFrame
+) -> DataFrame:
+    """One :func:`sssp` round, unpinned: ``(node, dist, _imp)`` over
+    ``dist`` with every edge out of ``frontier`` relaxed."""
+    relaxed = (
+        e.join(frontier, e.src == frontier.node)
+        .select(
+            F.col("dst").alias("node"),
+            (F.col("dist") + F.col("w")).alias("_cand"),
+        )
+        .groupBy("node")
+        .agg(F.min("_cand").alias("_cand"))
+    )
+    # least() skips NULLs (full join: either side may be absent).
+    # r12: the improved flag is computed IN the relaxation join —
+    # the old form re-joined nxt against dist just to recover the
+    # old distance this join already had on its left side, costing
+    # a second node-keyed join + a second pin every round. Same
+    # flag by definition: least(d, c) < d ⟺ c < d, and a node
+    # absent from dist (NULL d) is improved iff relaxed reached it.
+    return (
+        dist.join(relaxed, "node", "full")
+        .select(
+            "node",
+            F.least("dist", "_cand").alias("_nd"),
+            (
+                F.col("dist").isNull()
+                | (F.col("_cand") < F.col("dist"))
+            ).alias("_imp"),
+        )
+        .select("node", F.col("_nd").alias("dist"), "_imp")
+    )
+
+
+def _relax_driver(
+    rows: list,
+    sources: list,
+    e: DataFrame,
+    dist: DataFrame,
+    max_hops: int,
+) -> DataFrame | None:
+    """:func:`sssp`'s frontier relaxation on the driver, for a
+    model-sized graph: the same rounds over the collected ``(src, dst,
+    w)`` ``rows`` in numpy int64 (``np.minimum.at`` for the per-node
+    min), so the distances are bit-identical. Returns None when a
+    candidate distance would overflow LONG — the Spark loop then runs
+    and fails (or wraps) exactly as Spark's ``+`` does. A NULL source
+    is one ``(NULL, 0)`` row that never expands, as in the Spark loop.
+    The output schema is read from the Spark path's own unexecuted
+    frames (``dist`` the unpinned round-0 table, ``e`` the edges).
+    """
+    ids: dict = {}
+    seeds = _index(ids, sources)
+    src = _index(ids, [r[0] for r in rows])
+    dst = _index(ids, [r[1] for r in rows])
+    w = np.array([r[2] for r in rows], np.int64)
+    n = len(ids)
+    top = np.iinfo(np.int64).max
+    best = np.zeros(n, np.int64)
+    reached = np.zeros(n, bool)
+    reached[seeds] = True
+    frontier = reached.copy()
+    for _ in range(max_hops):
+        m = frontier[src]
+        if not m.any():
+            break
+        es, ed, ew = src[m], dst[m], w[m]
+        base = best[es]
+        if (ew > top - base).any():
+            return None
+        cand = np.full(n, top, np.int64)
+        np.minimum.at(cand, ed, base + ew)
+        hit = np.zeros(n, bool)
+        hit[ed] = True
+        frontier = hit & (~reached | (cand < best))
+        best[frontier] = cand[frontier]
+        reached |= frontier
+    last = _relax_step(e, dist, dist) if max_hops else dist
+    keys = list(ids)
+    at = np.flatnonzero(reached)
+    return e.sparkSession.createDataFrame(
+        [(keys[i], d) for i, d in zip(at.tolist(), best[at].tolist())],
+        last.select("node", "dist").schema,
+    )
 
 
 def _canonical_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:

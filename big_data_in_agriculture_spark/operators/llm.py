@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import text as TX
+from ._util import _driver_rows
 from ._util import fan_out as _fan_out
 from ._util import arr_lit
 from ._util import quantize_half_away
@@ -724,23 +725,16 @@ def minhash_neardup_pairs(
     return verified.select("id_a", "id_b", "jaccard")
 
 
-#: Edge-count ceiling for the driver-local component pass. A graph this
-#: small is "model-sized" (≤ a few MB collected — the same budget as a
-#: broadcast relation or the kmeans/classifier model collects), and the
-#: distributed loop pays 20-40 scheduler round-trips to label it: the
-#: sf0.1 DBSCAN cell graph (985 nodes) spent 4-5 s in per-round job
-#: overhead labelling a graph union-find finishes in <1 ms. Above the
-#: cap the distributed large-star/small-star path runs unchanged, so a
-#: 100 TB pair graph never touches the driver.
-_DRIVER_CC_MAX_EDGES = 100_000
-
 #: Round cap of neardup_components' phase-1 min-label propagation (read
 #: at call time); what it leaves unconverged goes to the star phase.
 _FAST_ROUNDS = 6
 
 
-def _components_driver(nodes: DataFrame, edges: DataFrame) -> DataFrame:
-    """Driver-local connected components: (id, component_id=min id).
+def _components_driver(
+    nodes: DataFrame, ids: list, edges: list
+) -> DataFrame:
+    """Driver-local connected components over the collected node
+    ``ids`` and ``(u, v)`` ``edges``: (id, component_id=min id).
 
     Union-find keeping the SMALLER root as the representative — the
     final root of every component is its minimum id regardless of edge
@@ -750,9 +744,6 @@ def _components_driver(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     trivially; strings because UTF-8 byte order equals code-point
     order), so the labels are identical, not just isomorphic.
     """
-    from pyspark.sql.types import StructField, StructType
-
-    ids = [r[0] for r in nodes.collect()]
     parent = {i: i for i in ids}
 
     def find(x):
@@ -763,7 +754,7 @@ def _components_driver(nodes: DataFrame, edges: DataFrame) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    for u, v in edges.collect():
+    for u, v in edges:
         ru, rv = find(u), find(v)
         if ru == rv:
             continue
@@ -771,15 +762,10 @@ def _components_driver(nodes: DataFrame, edges: DataFrame) -> DataFrame:
             ru, rv = rv, ru
         parent[rv] = ru
 
-    id_type = nodes.schema[0].dataType
-    schema = StructType(
-        [
-            StructField("id", id_type, False),
-            StructField("component_id", id_type, False),
-        ]
-    )
+    # the schema of the Spark path's own edge-free result
     return nodes.sparkSession.createDataFrame(
-        [(i, find(i)) for i in ids], schema
+        [(i, find(i)) for i in ids],
+        nodes.select("id", F.col("id").alias("component_id")).schema,
     )
 
 
@@ -794,13 +780,15 @@ def neardup_components(
     The clustering step of a dedup pipeline — pair lists from
     jaccard/minhash/simhash become groups, one survivor kept per group.
 
-    **Small-graph fast path (round 12)**: once the canonical edge set
-    is counted (an action the pipeline always ran), a graph at or
-    under ``_DRIVER_CC_MAX_EDGES`` edges (and ~2× that many nodes) is
-    labelled by driver-local union-find instead of the iterative loop
-    — identical labels (component minimum), none of the 20-40
-    per-round scheduler trips. Above the cap, the distributed
-    TWO-PHASE hybrid below runs unchanged.
+    **Small-graph fast path**: one bounded collect of the canonical
+    edge set (the graph operators' shared driver path,
+    ``_util._driver_rows``) decides whether it is model-sized. At or
+    under ``_util._DRIVER_MAX_EDGES`` edges (and 2× that many nodes),
+    with integer or string ids, the graph is labelled by driver-local
+    union-find instead of the iterative loop — identical labels
+    (component minimum), none of the 20-40 per-round scheduler trips.
+    Above the cap, the distributed TWO-PHASE hybrid below runs
+    unchanged, after at most that one extra job.
 
     TWO-PHASE hybrid (round 9):
 
@@ -875,26 +863,25 @@ def neardup_components(
         .distinct()
         .localCheckpoint(eager=False)
     )
-    n_edges = edges.count()  # materializes the lazy pin
-    if n_edges == 0:
-        return nodes.select(
-            "id", F.col("id").alias("component_id")
-        )
-
-    # Small-graph fast path (round 12, guide §1.2/§5): below the edge
-    # cap the whole CANONICAL graph is model-sized, and the iterative
-    # loop's cost is pure scheduler overhead (each round is 2-6 jobs
-    # over a few KB). Collect it like a model — the same driver budget
-    # kmeans_fit's centroids and classifier_train's gradients already
-    # use — and label with union-find; the node-count gate keeps a
-    # degenerate self-pair-heavy input (huge node set, few real edges)
-    # off the driver. Labels are bit-identical to the distributed
-    # path's (component minimum), pinned by
+    # Small-graph fast path (round 12, guide §1.2/§5): at or under
+    # _util._DRIVER_MAX_EDGES canonical edges the whole graph is
+    # model-sized, and the iterative loop's cost is pure scheduler
+    # overhead (each round is 2-6 jobs over a few KB). Collect it like
+    # a model — the same driver budget kmeans_fit's centroids and
+    # classifier_train's gradients already use — and label with
+    # union-find; the node gate (2× the cap) keeps a degenerate
+    # self-pair-heavy input (huge node set, few real edges) off the
+    # driver. Labels are bit-identical to the distributed path's
+    # (component minimum), pinned by
     # test_llm::test_driver_components_match_distributed.
-    if n_edges <= _DRIVER_CC_MAX_EDGES:
-        n_nodes = nodes.count()  # materializes the lazy pin
-        if n_nodes <= 2 * _DRIVER_CC_MAX_EDGES:
-            return _components_driver(nodes, edges)
+    key = [edges.schema["u"].dataType]
+    rows = _driver_rows(edges, key)  # materializes the lazy pin
+    if rows is not None:
+        if not rows:
+            return nodes.select("id", F.col("id").alias("component_id"))
+        ids = _driver_rows(nodes, key, scale=2)
+        if ids is not None:
+            return _components_driver(nodes, [r[0] for r in ids], rows)
 
     # -- PHASE 1: min-label propagation + pointer jump, a few CHEAP
     # rounds (2 node-keyed shuffles per round vs star contraction's

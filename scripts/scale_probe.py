@@ -3,7 +3,9 @@
 Synthetic in-memory inputs (spark.range — no files, no testdata
 mutation) sized to stress the shapes that matter at cluster scale:
 shuffle payloads, window sorts, candidate-pair generation. Prints one
-timing line per probe; SCALE.md records the narrative.
+timing line per probe, then the result rows of a probe whose output is
+at most 5 rows (its checksum aggregate); SCALE.md records the
+narrative.
 
 Usage: python scripts/scale_probe.py [probe ...]
 """
@@ -418,6 +420,18 @@ PROBES = {
 }
 
 
+def _run(df):
+    """Run a probe's frame with ONE action: ``(n_rows, rows)``. A frame
+    whose optimized plan bounds its output at 5 rows or fewer (the
+    1-row checksum aggregates) is collected, so its values can be
+    compared across commits; any other frame is counted (rows None)."""
+    bound = df._jdf.queryExecution().optimizedPlan().maxRows()
+    if bound.isDefined() and bound.get() <= 5:
+        rows = df.collect()
+        return len(rows), rows
+    return df.count(), None
+
+
 def main() -> int:
     args = sys.argv[1:]
     # --steady: run each probe twice and report the second (steady-
@@ -448,11 +462,11 @@ def main() -> int:
         if only and name not in only:
             continue
         t0 = time.perf_counter()
-        n = fn(spark).count()
+        n, rows = _run(fn(spark))
         cold = time.perf_counter() - t0
         if steady:
             t0 = time.perf_counter()
-            n = fn(spark).count()
+            n, rows = _run(fn(spark))
             warm = time.perf_counter() - t0
             print(
                 f"{name}: {warm:.1f}s steady / {cold:.1f}s cold "
@@ -461,6 +475,8 @@ def main() -> int:
             )
         else:
             print(f"{name}: {cold:.1f}s ({n} rows out)", flush=True)
+        for row in rows or ():
+            print(f"  {tuple(row)}", flush=True)
     return 0
 
 

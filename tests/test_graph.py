@@ -22,31 +22,73 @@ def _ranks(df) -> dict[int, int]:
     return {r["node"]: r["rank_e12"] for r in df.collect()}
 
 
-def test_two_node_chain_one_iteration(spark):
+@pytest.fixture()
+def both_sides(monkeypatch):
+    """Build a graph result on both sides of the driver-path cap and
+    return the driver-side frame: once at the default cap (every graph
+    here is model-sized, so the numpy kernels run) and once at cap -1,
+    where every graph, the empty one included, takes the Spark loop
+    (cap 0 would still send an empty graph to the driver). The two
+    must agree in ``df.schema`` and in their rows as a multiset."""
+    from collections import Counter
+
+    from big_data_in_agriculture_spark.operators import _util, graph
+
+    taken = []
+
+    def spy(*args, **kwargs):
+        rows = _util._driver_rows(*args, **kwargs)
+        taken.append(rows is not None)
+        return rows
+
+    monkeypatch.setattr(graph, "_driver_rows", spy)
+    cap = _util._DRIVER_MAX_EDGES
+
+    def run(build):
+        taken.clear()
+        driver = build()
+        assert taken and all(taken)
+        monkeypatch.setattr(_util, "_DRIVER_MAX_EDGES", -1)
+        taken.clear()
+        loop = build()
+        assert taken and not any(taken)
+        monkeypatch.setattr(_util, "_DRIVER_MAX_EDGES", cap)
+        assert driver.schema == loop.schema
+        assert Counter(map(tuple, driver.collect())) == Counter(
+            map(tuple, loop.collect())
+        )
+        return driver
+
+    return run
+
+
+def test_two_node_chain_one_iteration(spark, both_sides):
     # 1 -> 2. N=2, base = MASS div 2. Node 2 is dangling.
     # teleport = 15 * base div 100
     # share(1) = base div 1 = base; dangling = rank(2) = base
     # rank'(1) = teleport + 85 * (0    + base div 2) div 100
     # rank'(2) = teleport + 85 * (base + base div 2) div 100
-    out = _ranks(pagerank(_edges(spark, [(1, 2)]), iterations=1))
+    out = _ranks(both_sides(
+        lambda: pagerank(_edges(spark, [(1, 2)]), iterations=1)))
     base = MASS // 2
     tele = 15 * base // 100
     assert out[1] == tele + (85 * (0 + base // 2)) // 100
     assert out[2] == tele + (85 * (base + base // 2)) // 100
 
 
-def test_mass_conserved_within_truncation_dust(spark):
+def test_mass_conserved_within_truncation_dust(spark, both_sides):
     # every div truncates; per round the loss is < N units per div
     # site (shares, dangling split, damping) — total drift stays tiny
     pairs = [(1, 2), (2, 3), (3, 1), (1, 3), (4, 1)]
-    out = _ranks(pagerank(_edges(spark, pairs), iterations=5))
+    out = _ranks(both_sides(
+        lambda: pagerank(_edges(spark, pairs), iterations=5)))
     assert abs(sum(out.values()) - MASS) < 100 * len(out)
 
 
-def test_symmetric_cycle_is_uniform(spark):
+def test_symmetric_cycle_is_uniform(spark, both_sides):
     # 3-cycle: perfectly symmetric, every node keeps base mass exactly
-    out = _ranks(pagerank(_edges(spark, [(1, 2), (2, 3), (3, 1)]),
-                          iterations=4))
+    out = _ranks(both_sides(lambda: pagerank(
+        _edges(spark, [(1, 2), (2, 3), (3, 1)]), iterations=4)))
     base = MASS // 3
     # uniform at every round; per-round div truncation bleeds a few
     # units of dust, so the value sits just below base, never above
@@ -55,48 +97,50 @@ def test_symmetric_cycle_is_uniform(spark):
     assert base - 10 <= val <= base
 
 
-def test_dangling_only_graph_redistributes_uniformly(spark):
+def test_dangling_only_graph_redistributes_uniformly(spark, both_sides):
     # 1 -> 2, 3 -> 2: node 2 absorbs, then its mass teleports back out
     # through the dangling term — no rank leaks to zero.
-    out = _ranks(pagerank(_edges(spark, [(1, 2), (3, 2)]), iterations=3))
+    out = _ranks(both_sides(lambda: pagerank(
+        _edges(spark, [(1, 2), (3, 2)]), iterations=3)))
     assert all(v > 0 for v in out.values())
     assert out[2] > out[1] == out[3]
 
 
-def test_damping_zero_is_pure_teleport(spark):
-    out = _ranks(pagerank(_edges(spark, [(1, 2), (2, 3)]),
-                          iterations=2, damping_pct=0))
+def test_damping_zero_is_pure_teleport(spark, both_sides):
+    out = _ranks(both_sides(lambda: pagerank(
+        _edges(spark, [(1, 2), (2, 3)]), iterations=2, damping_pct=0)))
     base = MASS // 3
     assert set(out.values()) == {100 * base // 100}
 
 
-def test_damping_hundred_has_no_teleport(spark):
+def test_damping_hundred_has_no_teleport(spark, both_sides):
     # star into node 2 with damping 1.0: source nodes keep only
     # dangling-redistributed mass (no teleport floor)
-    out = _ranks(pagerank(_edges(spark, [(1, 2)]), iterations=1,
-                          damping_pct=100))
+    out = _ranks(both_sides(lambda: pagerank(
+        _edges(spark, [(1, 2)]), iterations=1, damping_pct=100)))
     base = MASS // 2
     assert out[1] == (100 * (base // 2)) // 100
     assert out[2] == (100 * (base + base // 2)) // 100
 
 
-def test_zero_iterations_is_uniform_base(spark):
-    out = _ranks(pagerank(_edges(spark, [(1, 2), (3, 4)]), iterations=0))
+def test_zero_iterations_is_uniform_base(spark, both_sides):
+    out = _ranks(both_sides(lambda: pagerank(
+        _edges(spark, [(1, 2), (3, 4)]), iterations=0)))
     assert set(out.values()) == {MASS // 4}
 
 
-def test_empty_graph_returns_empty(spark):
+def test_empty_graph_returns_empty(spark, both_sides):
     df = _edges(spark, [(1, 2)]).filter("src > 99")
-    out = pagerank(df, iterations=2)
+    out = both_sides(lambda: pagerank(df, iterations=2))
     assert out.count() == 0
     assert out.columns == ["node", "rank_e12"]
 
 
-def test_parallel_edges_carry_multiple_shares(spark):
+def test_parallel_edges_carry_multiple_shares(spark, both_sides):
     # duplicate edge 1->2 beside 1->3: outdeg(1)=3, node 2 gets two
     # shares — parallel edges are honored, not deduplicated
-    out = _ranks(pagerank(
-        _edges(spark, [(1, 2), (1, 2), (1, 3)]), iterations=1))
+    out = _ranks(both_sides(lambda: pagerank(
+        _edges(spark, [(1, 2), (1, 2), (1, 3)]), iterations=1)))
     assert out[2] > out[3]
 
 
@@ -123,47 +167,49 @@ def _levels(df) -> dict[int, int]:
     return {r["node"]: r["level"] for r in df.collect()}
 
 
-def test_bfs_chain_levels(spark):
-    out = _levels(bfs_levels(
-        _edges(spark, [(1, 2), (2, 3), (3, 4)]), _srcs(spark, [1])))
+def test_bfs_chain_levels(spark, both_sides):
+    out = _levels(both_sides(lambda: bfs_levels(
+        _edges(spark, [(1, 2), (2, 3), (3, 4)]), _srcs(spark, [1]))))
     assert out == {1: 0, 2: 1, 3: 2, 4: 3}
 
 
-def test_bfs_min_level_wins_on_multiple_paths(spark):
+def test_bfs_min_level_wins_on_multiple_paths(spark, both_sides):
     # 1->4 directly and 1->2->3->4: node 4 is level 1, not 3
-    out = _levels(bfs_levels(
+    out = _levels(both_sides(lambda: bfs_levels(
         _edges(spark, [(1, 2), (2, 3), (3, 4), (1, 4)]),
-        _srcs(spark, [1])))
+        _srcs(spark, [1]))))
     assert out[4] == 1
 
 
-def test_bfs_multi_source_takes_nearest(spark):
-    out = _levels(bfs_levels(
-        _edges(spark, [(1, 2), (2, 3), (9, 3)]), _srcs(spark, [1, 9])))
+def test_bfs_multi_source_takes_nearest(spark, both_sides):
+    out = _levels(both_sides(lambda: bfs_levels(
+        _edges(spark, [(1, 2), (2, 3), (9, 3)]), _srcs(spark, [1, 9]))))
     assert out == {1: 0, 9: 0, 2: 1, 3: 1}
 
 
-def test_bfs_cycle_terminates(spark):
-    out = _levels(bfs_levels(
-        _edges(spark, [(1, 2), (2, 3), (3, 1)]), _srcs(spark, [1])))
+def test_bfs_cycle_terminates(spark, both_sides):
+    out = _levels(both_sides(lambda: bfs_levels(
+        _edges(spark, [(1, 2), (2, 3), (3, 1)]), _srcs(spark, [1]))))
     assert out == {1: 0, 2: 1, 3: 2}
 
 
-def test_bfs_unreachable_and_depth_bound(spark):
+def test_bfs_unreachable_and_depth_bound(spark, both_sides):
     e = _edges(spark, [(1, 2), (2, 3), (3, 4), (8, 9)])
-    out = _levels(bfs_levels(e, _srcs(spark, [1]), max_depth=2))
+    out = _levels(both_sides(
+        lambda: bfs_levels(e, _srcs(spark, [1]), max_depth=2)))
     assert out == {1: 0, 2: 1, 3: 2}  # 4 beyond bound, 8/9 unreachable
 
 
-def test_bfs_direction_respected(spark):
+def test_bfs_direction_respected(spark, both_sides):
     # edge 2->1 does not make 2 reachable FROM 1
-    out = _levels(bfs_levels(_edges(spark, [(2, 1)]), _srcs(spark, [1])))
+    out = _levels(both_sides(
+        lambda: bfs_levels(_edges(spark, [(2, 1)]), _srcs(spark, [1]))))
     assert out == {1: 0}
 
 
-def test_bfs_zero_depth_is_sources_only(spark):
-    out = _levels(bfs_levels(
-        _edges(spark, [(1, 2)]), _srcs(spark, [1]), max_depth=0))
+def test_bfs_zero_depth_is_sources_only(spark, both_sides):
+    out = _levels(both_sides(lambda: bfs_levels(
+        _edges(spark, [(1, 2)]), _srcs(spark, [1]), max_depth=0)))
     assert out == {1: 0}
 
 
@@ -232,12 +278,16 @@ def test_pagerank_residual_zero_on_fixed_point(spark):
     assert res == [0, 0, 0]
 
 
-def test_pagerank_many_iterations_no_stats_overflow(spark):
+def test_pagerank_many_iterations_no_stats_overflow(spark, monkeypatch):
     # 45 iterations: the per-round plan joins frames derived from the
     # previous checkpoint, so WITHOUT the stats-free pin the preserved
     # originStats square each round and BigInteger dies near ~40
     # (the round-8 failure genus). Mass conservation still holds.
+    # Cap -1: the property belongs to the Spark loop.
+    from big_data_in_agriculture_spark.operators import _util
     from big_data_in_agriculture_spark.operators.graph import MASS, pagerank
+
+    monkeypatch.setattr(_util, "_DRIVER_MAX_EDGES", -1)
 
     e = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (3, 4)], ["src", "dst"]
@@ -248,7 +298,7 @@ def test_pagerank_many_iterations_no_stats_overflow(spark):
 
 
 class TestPersonalizedPagerank:
-    def test_mass_returns_to_sources(self, spark):
+    def test_mass_returns_to_sources(self, spark, both_sides):
         from big_data_in_agriculture_spark.operators.graph import (
             MASS, personalized_pagerank,
         )
@@ -259,7 +309,9 @@ class TestPersonalizedPagerank:
         s = spark.createDataFrame([(1,)], ["node"])
         out = {
             r["node"]: r["rank_e12"]
-            for r in personalized_pagerank(e, s, iterations=3).collect()
+            for r in both_sides(
+                lambda: personalized_pagerank(e, s, iterations=3)
+            ).collect()
         }
         # mass conserved exactly (teleport + dangling both return home)
         assert sum(out.values()) == MASS
@@ -267,14 +319,15 @@ class TestPersonalizedPagerank:
         assert out[1] == max(out.values())
         assert out[5] == 0
 
-    def test_empty_sources_returns_empty(self, spark):
+    def test_empty_sources_returns_empty(self, spark, both_sides):
         from big_data_in_agriculture_spark.operators.graph import (
             personalized_pagerank,
         )
 
         e = spark.createDataFrame([(1, 2)], ["src", "dst"])
         s = spark.createDataFrame([], "node long")
-        assert personalized_pagerank(e, s, iterations=2).count() == 0
+        out = both_sides(lambda: personalized_pagerank(e, s, iterations=2))
+        assert out.count() == 0
 
 
 def _random_edges(seed, n_nodes=25, n_edges=45, out_nodes=20, nulls=False):
@@ -292,7 +345,7 @@ def _random_edges(seed, n_nodes=25, n_edges=45, out_nodes=20, nulls=False):
     return rows
 
 
-def test_pagerank_is_ppr_with_every_node_a_source(spark):
+def test_pagerank_is_ppr_with_every_node_a_source(spark, both_sides):
     # teleport home to EVERY node is uniform teleport, and dangling
     # mass returned to every node is uniform redistribution: the two
     # operators must agree to the last 1e-12 unit
@@ -305,17 +358,18 @@ def test_pagerank_is_ppr_with_every_node_a_source(spark):
         e.select(F.col("dst").alias("node"))
     ).distinct()
     assert e.filter(F.col("dst") >= 20).count() > 0  # dangling present
-    pr = _ranks(pagerank(e, iterations=4))
-    ppr = _ranks(personalized_pagerank(e, nodes, iterations=4))
+    pr = _ranks(both_sides(lambda: pagerank(e, iterations=4)))
+    ppr = _ranks(both_sides(
+        lambda: personalized_pagerank(e, nodes, iterations=4)))
     assert len(pr) == nodes.count()
     assert pr == ppr
 
 
 @pytest.mark.parametrize("max_depth", [0, 2, 6])
-def test_bfs_levels_is_unit_weight_sssp(spark, max_depth):
+def test_bfs_levels_is_unit_weight_sssp(spark, max_depth, both_sides):
     # with every weight 1 the first visit is the minimum hop count, so
     # BFS levels are shortest-path distances bounded at max_depth hops
-    # — NULL endpoints included (a NULL dst is reached, never expanded)
+    # — NULL endpoints included (an edge with one lies on no path)
     from collections import Counter
 
     from big_data_in_agriculture_spark.operators.graph import sssp
@@ -326,17 +380,132 @@ def test_bfs_levels_is_unit_weight_sssp(spark, max_depth):
         )
         s = _srcs(spark, [0, 5])
         bfs = Counter(
-            map(tuple, bfs_levels(e, s, max_depth=max_depth).collect())
+            map(
+                tuple,
+                both_sides(
+                    lambda: bfs_levels(e, s, max_depth=max_depth)
+                ).collect(),
+            )
         )
         unit = Counter(
             map(
                 tuple,
-                sssp(
-                    e.withColumn("w", F.lit(1)), s, max_hops=max_depth
+                both_sides(
+                    lambda: sssp(
+                        e.withColumn("w", F.lit(1)), s, max_hops=max_depth
+                    )
                 ).collect(),
             )
         )
         assert bfs == unit, (seed, nulls)
+
+
+@pytest.mark.parametrize("iterations", [0, 3])
+def test_rank_driver_path_replays_nulls_and_parallel_edges(
+    spark, both_sides, iterations
+):
+    # NULL src, NULL dst, an all-NULL row, parallel edges, a NULL
+    # source and a source outside the graph: the numpy kernel replays
+    # the Spark loop's NULL-never-joins semantics exactly
+    from big_data_in_agriculture_spark.operators.graph import (
+        personalized_pagerank,
+    )
+
+    rows = _random_edges(2, nulls=True) + [(1, 2), (1, 2)]
+    e = spark.createDataFrame(rows, "src long, dst long")
+    s = spark.createDataFrame([(0,), (5,), (None,), (99,)], "node long")
+    pr = _ranks(both_sides(lambda: pagerank(e, iterations=iterations)))
+    assert None in pr and 99 not in pr
+    ppr = _ranks(both_sides(
+        lambda: personalized_pagerank(e, s, iterations=iterations)))
+    assert ppr[None] == 0 and ppr[99] > 0
+
+
+def test_rank_driver_path_residuals_match(spark, monkeypatch):
+    # residual_out on both sides, NULL rows included (the Spark
+    # residual joins on node, so the NULL node never counts)
+    from big_data_in_agriculture_spark.operators import _util
+
+    e = spark.createDataFrame(
+        _random_edges(3, nulls=True), "src long, dst long"
+    )
+    driver, loop = [], []
+    pagerank(e, iterations=3, residual_out=driver).collect()
+    monkeypatch.setattr(_util, "_DRIVER_MAX_EDGES", -1)
+    pagerank(e, iterations=3, residual_out=loop).collect()
+    assert len(driver) == 3 and driver == loop
+
+
+def test_graph_driver_path_empty_graph(spark, both_sides):
+    # no edges at all: pagerank is empty, sources outside the graph
+    # keep all PPR mass and reach only themselves in sssp / BFS
+    from big_data_in_agriculture_spark.operators.graph import (
+        personalized_pagerank,
+        sssp,
+    )
+
+    e = spark.createDataFrame([], "src long, dst long")
+    s = _srcs(spark, [7, 8])
+    assert both_sides(lambda: pagerank(e, iterations=2)).count() == 0
+    ppr = _ranks(both_sides(
+        lambda: personalized_pagerank(e, s, iterations=2)))
+    assert ppr == {7: MASS // 2, 8: MASS // 2}
+    ew = e.withColumn("w", F.lit(1))
+    assert _levels(both_sides(
+        lambda: bfs_levels(e, s, max_depth=2))) == {7: 0, 8: 0}
+    dist = {
+        r["node"]: r["dist"]
+        for r in both_sides(lambda: sssp(ew, s, max_hops=2)).collect()
+    }
+    assert dist == {7: 0, 8: 0}
+
+
+@pytest.mark.parametrize("max_hops", [0, 4])
+def test_sssp_one_row_per_node_with_null_endpoints(
+    spark, both_sides, max_hops
+):
+    # an edge into NULL used to add one (NULL, d) row per round that
+    # reached it: (0,1), (1,2), (0,NULL), (2,NULL) gave (NULL,1) and
+    # (NULL,3). Such an edge lies on no path; it is dropped.
+    from big_data_in_agriculture_spark.operators.graph import sssp
+
+    e = spark.createDataFrame(
+        [(0, 1, 1), (1, 2, 1), (0, None, 1), (2, None, 1), (None, 2, 1)],
+        "src long, dst long, w long",
+    )
+    s = _srcs(spark, [0])
+    want = {0: 0, 1: 1, 2: 2} if max_hops else {0: 0}
+    got = both_sides(lambda: sssp(e, s, max_hops=max_hops)).collect()
+    assert len(got) == len(want) and dict(map(tuple, got)) == want
+    bfs = both_sides(
+        lambda: bfs_levels(e.drop("w"), s, max_depth=max_hops)
+    ).collect()
+    assert len(bfs) == len(want) and dict(map(tuple, bfs)) == want
+
+
+def test_float_node_ids_keep_the_spark_loop(spark):
+    # Spark groups every NaN as one id and -0.0 with 0.0; Python
+    # equality does neither, so float ids never take the driver path
+    e = spark.createDataFrame(
+        [(float("nan"), 1.0), (float("nan"), 2.0), (0.0, -0.0)],
+        "src double, dst double",
+    )
+    assert pagerank(e, iterations=1).count() == 4
+
+
+def test_sssp_long_overflow_is_not_wrapped(spark):
+    # a candidate distance past LONG max: the driver kernel declines
+    # and the Spark loop's own `+` decides (ANSI: an overflow error)
+    from big_data_in_agriculture_spark.operators import graph
+
+    big = 2**62
+    rows = [(1, 2, big), (2, 3, big)]
+    e = spark.createDataFrame(rows, "src long, dst long, w long")
+    dist = _srcs(spark, [1]).withColumn("dist", F.lit(0).cast("long"))
+    assert graph._relax_driver(rows, [1], e, dist, 3) is None
+    if spark.conf.get("spark.sql.ansi.enabled") == "true":
+        with pytest.raises(Exception, match="(?i)overflow"):
+            graph.sssp(e, _srcs(spark, [1]), max_hops=3).collect()
 
 
 class TestKcore:
@@ -375,7 +544,7 @@ class TestKcore:
 
 
 class TestSssp:
-    def test_cheaper_two_hop_beats_direct(self, spark):
+    def test_cheaper_two_hop_beats_direct(self, spark, both_sides):
         from big_data_in_agriculture_spark.operators.graph import sssp
 
         e = spark.createDataFrame(
@@ -383,27 +552,36 @@ class TestSssp:
             ["src", "dst", "w"],
         )
         s = spark.createDataFrame([(1,)], ["node"])
-        out = {r["node"]: r["dist"] for r in sssp(e, s, max_hops=5).collect()}
+        out = {
+            r["node"]: r["dist"]
+            for r in both_sides(lambda: sssp(e, s, max_hops=5)).collect()
+        }
         assert out == {1: 0, 2: 5, 3: 6, 4: 8}
 
-    def test_hop_bound_truncates(self, spark):
+    def test_hop_bound_truncates(self, spark, both_sides):
         from big_data_in_agriculture_spark.operators.graph import sssp
 
         e = spark.createDataFrame(
             [(1, 2, 1), (2, 3, 1), (3, 4, 1)], ["src", "dst", "w"]
         )
         s = spark.createDataFrame([(1,)], ["node"])
-        out = {r["node"]: r["dist"] for r in sssp(e, s, max_hops=2).collect()}
+        out = {
+            r["node"]: r["dist"]
+            for r in both_sides(lambda: sssp(e, s, max_hops=2)).collect()
+        }
         assert out == {1: 0, 2: 1, 3: 2}  # node 4 is 3 hops away
 
-    def test_multi_source_takes_min(self, spark):
+    def test_multi_source_takes_min(self, spark, both_sides):
         from big_data_in_agriculture_spark.operators.graph import sssp
 
         e = spark.createDataFrame(
             [(1, 2, 10), (5, 2, 1)], ["src", "dst", "w"]
         )
         s = spark.createDataFrame([(1,), (5,)], ["node"])
-        out = {r["node"]: r["dist"] for r in sssp(e, s, max_hops=3).collect()}
+        out = {
+            r["node"]: r["dist"]
+            for r in both_sides(lambda: sssp(e, s, max_hops=3)).collect()
+        }
         assert out == {1: 0, 5: 0, 2: 1}
 
 

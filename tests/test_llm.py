@@ -5,7 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from big_data_in_agriculture_spark.operators import llm
+from big_data_in_agriculture_spark.operators import _util, llm
 
 DOCS = [
     (1, "the quick brown fox jumps over the lazy dog"),
@@ -1304,7 +1304,7 @@ def test_neardup_components_deep_chain_pointer_jump(spark, monkeypatch):
     # an edge cap of 0 forces the DISTRIBUTED path — the property
     # under test is the iterative loop's convergence, which the
     # round-12 small-graph fast path would otherwise bypass here
-    monkeypatch.setattr(llm, "_DRIVER_CC_MAX_EDGES", 0)
+    monkeypatch.setattr(_util, "_DRIVER_MAX_EDGES", 0)
     comps = {
         r["id"]: r["component_id"]
         for r in llm.neardup_components(pairs).collect()
@@ -1335,7 +1335,7 @@ def test_driver_components_match_distributed(spark, monkeypatch):
         }
 
     fast, sfast = labels(pairs), labels(spairs)
-    monkeypatch.setattr(llm, "_DRIVER_CC_MAX_EDGES", 0)
+    monkeypatch.setattr(_util, "_DRIVER_MAX_EDGES", 0)
     assert fast == labels(pairs)
     assert sfast == labels(spairs)
 
@@ -1351,7 +1351,7 @@ def test_neardup_components_nonconvergence_raises(spark, monkeypatch):
     # (edge cap 0: the convergence contract belongs to the
     # distributed path — the driver fast path is always exact)
     monkeypatch.setattr(llm, "_FAST_ROUNDS", 1)
-    monkeypatch.setattr(llm, "_DRIVER_CC_MAX_EDGES", 0)
+    monkeypatch.setattr(_util, "_DRIVER_MAX_EDGES", 0)
     with pytest.raises(RuntimeError, match="did not converge"):
         llm.neardup_components(pairs, max_iter=0)
 

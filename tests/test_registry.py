@@ -258,3 +258,41 @@ def test_registry_verify_covers_every_query():
             assert row["hash_match"], name
         else:
             assert row["bounded_pass"], name
+
+
+def test_t_schema_cache_skips_inference_and_reinfers_rewrites(
+    spark, tmp_path
+):
+    # _t caches a parquet file's inferred schema on (size, mtime_ns,
+    # nanosAsLong): a repeat read of an unchanged file runs no
+    # inference job, a rewritten file is inferred again, and the DATE
+    # drift guard still applies to a cached schema
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import TimestampType
+
+    path = tmp_path / "things.parquet"
+    day = dt.date(2024, 3, 1)
+    pq.write_table(pa.table({"k": [1, 2], "d": [day, day]}), path)
+    tracker = spark.sparkContext.statusTracker()
+
+    def read():
+        before = len(tracker.getJobIdsForGroup())
+        df = entrymod._t(spark, str(tmp_path), "things")
+        return df, len(tracker.getJobIdsForGroup()) - before
+
+    first, jobs_first = read()
+    again, jobs_again = read()
+    assert (jobs_first, jobs_again) == (1, 0)
+    assert again.schema == first.schema
+    assert isinstance(again.schema["d"].dataType, TimestampType)
+    assert sorted(r["k"] for r in again.collect()) == [1, 2]
+
+    pq.write_table(
+        pa.table({"k": [3], "d": [day], "v": ["x"]}), path
+    )
+    rewritten, jobs = read()
+    assert jobs == 1 and rewritten.columns == ["k", "d", "v"]
+    assert [tuple(r)[::2] for r in rewritten.collect()] == [(3, "x")]

@@ -443,3 +443,28 @@ def test_latest_version_fallback_ignores_partial_snapshots(spark, tmp_path):
     assert v == 2  # stepped past the orphan directory name
     assert versioned.latest_version(str(root)) == 2
     assert versioned.read_version(spark, str(root)).count() == 3
+
+
+def test_empty_final_batch_skips_the_upsert(spark, landing, tmp_path):
+    # availableNow ends with a no-data batch; upserting it would
+    # rewrite the whole sink with identical rows. One data batch must
+    # give exactly one upsert call, and the sink matches a plain run's.
+    from big_data_in_agriculture_spark.sources.upsert import upsert_parquet
+
+    calls = []
+
+    def counting(spark_, batch, path, key):
+        calls.append(batch.count())
+        return upsert_parquet(spark_, batch, path, key)
+
+    def run(name, upsert_fn=None):
+        sink = str(tmp_path / f"sink-{name}")
+        sev.start_daily_rollup_to_parquet(
+            spark, str(landing), sink, str(tmp_path / f"chk-{name}"),
+            available_now=True, upsert_fn=upsert_fn,
+        ).awaitTermination(120)
+        return sorted(map(tuple, spark.read.parquet(sink).collect()))
+
+    counted = run("counted", counting)
+    assert len(calls) == 1 and calls[0] > 0
+    assert counted == run("plain")
