@@ -3,9 +3,33 @@
 from __future__ import annotations
 
 import math
+from collections.abc import Iterator
+from contextlib import contextmanager
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+
+@contextmanager
+def session_conf(spark: SparkSession, conf: dict[str, str]) -> Iterator[None]:
+    """Set ``conf`` on ``spark`` for the ``with`` body, then put each key
+    back: its earlier value if it had been set, unset if it had not.
+
+    ``conf.get(key, None)`` reads only an explicitly set value (a key
+    left at its built-in default reads None), so unsetting restores
+    the default rather than pinning it.
+    """
+    saved = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def _all_finite(v) -> bool:

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import text as TX
+from ..operators._util import session_conf
 from ..operators.llm import pack_chunks
 
 
@@ -65,10 +66,9 @@ def export_training_shards(
     """
     sharded = assign_shards(docs, tokens_per_shard, text_col, id_col)
 
-    spark = docs.sparkSession
-    overwrite_conf = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    with session_conf(
+        docs.sparkSession, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
+    ):
         (
             sharded.repartition(F.col("shard"))
             .sortWithinPartitions("shard", id_col)
@@ -76,11 +76,6 @@ def export_training_shards(
             .partitionBy("shard")
             .parquet(f"{out_dir}/data")
         )
-    finally:
-        if overwrite_conf is not None:
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", overwrite_conf
-            )
 
     manifest = (
         sharded.groupBy("shard")

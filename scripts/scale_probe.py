@@ -1987,8 +1987,83 @@ def probe_era5_chain_50m(spark, rows=50_000_000, regions=500, hours=8760):
     )
 
 
+def probe_stream_rollup_10m(spark, rows=10_000_000, files=16):
+    """The availableNow daily rollup over 10M events in 16 landed files
+    (5 event types x 30 days = 150 groups, ~1000x the bench stream),
+    at its one state partition against a hand-built writer of the same
+    rollup at the session's shuffle width (and Spark's default trailing
+    no-data batch). Runs the pair twice in alternating order and prints
+    each variant's second time; the result is one checksum row per
+    variant, which must agree."""
+    import shutil
+    import tempfile
+
+    from big_data_in_agriculture_spark.operators._util import session_conf
+    from big_data_in_agriculture_spark.sources.upsert import upsert_parquet
+    from big_data_in_agriculture_spark.streaming import events as sev
+
+    tmp = tempfile.mkdtemp(prefix="stream-probe-")
+    day_us = 86_400_000_000
+    events = spark.range(rows).select(
+        F.col("id").alias("event_id"),
+        F.timestamp_micros(
+            F.lit(1_704_067_200_000_000) + F.col("id") * (30 * day_us // rows)
+        ).alias("ts"),
+        (F.col("id") % 100_000).alias("user_id"),
+        F.concat(F.lit("type"), (F.col("id") % 5).cast("string")).alias("event_type"),
+        ((F.col("id") % 1000) / 10.0).alias("value"),
+        F.lit("{}").alias("props"),
+    )
+    # micros, not Spark's INT96 default: the stream sniffs the footer
+    with session_conf(spark, {"spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS"}):
+        events.repartition(files).write.parquet(f"{tmp}/landing")
+
+    def hand_built(sink, chk):
+        rollup = sev.daily_event_rollup(sev.read_events_stream(spark, f"{tmp}/landing"))
+        return (
+            rollup.writeStream.outputMode("update")
+            .option("checkpointLocation", chk)
+            .foreachBatch(
+                lambda bdf, _: upsert_parquet(spark, bdf, sink, ["event_type", "day"])
+            )
+            .trigger(availableNow=True)
+            .start()
+        )
+
+    def one_partition(sink, chk):
+        return sev.start_daily_rollup_to_parquet(spark, f"{tmp}/landing", sink, chk)
+
+    width = spark.conf.get("spark.sql.shuffle.partitions")
+    variants = {f"hand-built writer, {width} state partitions": hand_built,
+                "start_daily_rollup_to_parquet, 1 state partition": one_partition}
+    times = {}
+    for rep in range(2):
+        for i, (label, start) in enumerate(variants.items()):
+            out = f"{tmp}/{i}"
+            shutil.rmtree(out, ignore_errors=True)
+            t0 = time.perf_counter()
+            q = start(f"{out}/sink", f"{out}/chk")
+            q.awaitTermination()
+            times[label] = (time.perf_counter() - t0, len(q.recentProgress))
+    for label, (t, batches) in times.items():
+        print(f"  {label}: {t:.1f}s, {batches} batch(es)", flush=True)
+    checks = [
+        spark.read.parquet(f"{tmp}/{i}/sink").agg(
+            F.lit(i).alias("variant"),
+            F.count(F.lit(1)).alias("groups"),
+            F.sum("n_events").alias("n"),
+            F.round(F.sum("value_sum"), 3).alias("value_sum"),
+        ).collect()[0]
+        for i in range(len(variants))
+    ]
+    shutil.rmtree(tmp, ignore_errors=True)
+    # the limit bounds the plan's rows, so main() prints them
+    return spark.createDataFrame(checks).limit(len(checks))
+
+
 PROBES["q10_60m"] = probe_q10_60m
 PROBES["era5_chain_50m"] = probe_era5_chain_50m
+PROBES["stream_rollup_10m"] = probe_stream_rollup_10m
 
 if __name__ == "__main__":
     sys.exit(main())

@@ -1454,6 +1454,12 @@ class TestComponentsPathologicalTopologies:
     components needed ~diameter rounds; the per-round stats squaring
     hit BigInteger's bit ceiling near round 40)."""
 
+    @pytest.fixture(autouse=True)
+    def _spark_loop(self, monkeypatch):
+        # these graphs are under the driver-path edge cap; a cap of -1
+        # keeps them on the Spark loop the suite is about
+        monkeypatch.setattr(_util, "_DRIVER_MAX_EDGES", -1)
+
     def test_long_chain_converges(self, spark):
         # a 4000-node path: hop diameter 3999. The old loop's jump
         # stalls at local-min ids, so this would exhaust max_iter;

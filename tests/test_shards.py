@@ -75,3 +75,22 @@ def test_read_shard_prunes(spark, tmp_path):
     assert one.count() == 4  # 100 tokens / 25 per doc
     plan = one._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [isnotnull(shard" in plan or "shard#" in plan
+
+
+def test_export_leaves_overwrite_mode_as_it_was(spark, tmp_path):
+    # the export sets dynamic partition overwrite only for its own write:
+    # an unset key comes back unset, a set key comes back with its value
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key, None)
+    try:
+        spark.conf.unset(key)
+        SH.export_training_shards(_docs(spark), str(tmp_path / "a"), 100)
+        assert spark.conf.get(key, None) is None
+        spark.conf.set(key, "static")
+        SH.export_training_shards(_docs(spark), str(tmp_path / "b"), 100)
+        assert spark.conf.get(key, None) == "static"
+    finally:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)

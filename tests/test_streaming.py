@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import os
 import shutil
 
 import pytest
@@ -445,10 +446,20 @@ def test_latest_version_fallback_ignores_partial_snapshots(spark, tmp_path):
     assert versioned.read_version(spark, str(root)).count() == 3
 
 
+def _land(landing, name, rows=()):
+    # a file of event dicts with the landed events' own parquet schema
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    schema = pq.read_schema(f"{SF_DIR}/events.parquet").remove_metadata()
+    pq.write_table(pa.Table.from_pylist(list(rows), schema=schema), landing / name)
+
+
 def test_empty_final_batch_skips_the_upsert(spark, landing, tmp_path):
-    # availableNow ends with a no-data batch; upserting it would
-    # rewrite the whole sink with identical rows. One data batch must
-    # give exactly one upsert call, and the sink matches a plain run's.
+    # An empty batch over an existing sink would rewrite the whole sink
+    # with identical rows. The first run's data batch gives one upsert
+    # call; a second run over a zero-row file gives none, and the sink's
+    # files are untouched.
     from big_data_in_agriculture_spark.sources.upsert import upsert_parquet
 
     calls = []
@@ -457,14 +468,153 @@ def test_empty_final_batch_skips_the_upsert(spark, landing, tmp_path):
         calls.append(batch.count())
         return upsert_parquet(spark_, batch, path, key)
 
-    def run(name, upsert_fn=None):
-        sink = str(tmp_path / f"sink-{name}")
-        sev.start_daily_rollup_to_parquet(
-            spark, str(landing), sink, str(tmp_path / f"chk-{name}"),
-            available_now=True, upsert_fn=upsert_fn,
-        ).awaitTermination(120)
-        return sorted(map(tuple, spark.read.parquet(sink).collect()))
+    sink, chk = str(tmp_path / "sink"), str(tmp_path / "chk")
 
-    counted = run("counted", counting)
+    def run():
+        q = sev.start_daily_rollup_to_parquet(
+            spark, str(landing), sink, chk, available_now=True,
+            upsert_fn=counting,
+        )
+        q.awaitTermination(120)
+        return q.recentProgress
+
+    run()
     assert len(calls) == 1 and calls[0] > 0
-    assert counted == run("plain")
+    files = sorted(os.listdir(sink))
+    rows = sorted(map(tuple, spark.read.parquet(sink).collect()))
+
+    _land(landing, "batch-001.parquet")
+    progress = run()
+    assert [p.numInputRows for p in progress] == [0]
+    assert len(calls) == 1
+    assert sorted(os.listdir(sink)) == files
+    assert sorted(map(tuple, spark.read.parquet(sink).collect())) == rows
+
+
+def test_empty_first_batch_creates_the_sink(spark, tmp_path):
+    land = tmp_path / "landing"
+    land.mkdir()
+    _land(land, "batch-000.parquet")
+    sink = str(tmp_path / "sink")
+    sev.start_daily_rollup_to_parquet(
+        spark, str(land), sink, str(tmp_path / "chk"), available_now=True
+    ).awaitTermination(120)
+    out = spark.read.parquet(sink)
+    assert out.count() == 0 and "n_events" in out.columns
+
+
+def _offset_conf(chk, batch_id):
+    # offsets/<id> is "v1", the batch metadata JSON, then source offsets
+    import json
+
+    with open(f"{chk}/offsets/{batch_id}") as f:
+        return json.loads(f.read().splitlines()[1])["conf"]
+
+
+def _state_partitions(chk):
+    # state/<operator>/<partition>, beside the operator's _metadata dir
+    return sorted(p for p in os.listdir(f"{chk}/state/0") if p.isdigit())
+
+
+_ROLLUP_CONF = (
+    "spark.sql.shuffle.partitions",
+    "spark.sql.streaming.noDataMicroBatches.enabled",
+)
+
+
+def test_rollup_runs_one_state_partition_and_one_batch(spark, landing, tmp_path):
+    chk = str(tmp_path / "chk")
+    before = {k: spark.conf.get(k, None) for k in _ROLLUP_CONF}
+    q = sev.start_daily_rollup_to_parquet(
+        spark, str(landing), str(tmp_path / "sink"), chk, available_now=True
+    )
+    # the query has its own clone of the session: ours is as it was
+    assert {k: spark.conf.get(k, None) for k in _ROLLUP_CONF} == before
+    q.awaitTermination(120)
+    assert _offset_conf(chk, 0)["spark.sql.shuffle.partitions"] == "1"
+    assert _state_partitions(chk) == ["0"]
+    # no trailing no-data batch after the data batch
+    assert len(q.recentProgress) == 1
+    assert q.recentProgress[0].numInputRows > 0
+
+
+def test_rollup_resumes_a_checkpoint_at_its_own_width(spark, landing, tmp_path):
+    # A checkpoint written at the session's width (the fixture's 4) keeps
+    # 4 state partitions when the rollup resumes it, and its state is
+    # read back: the same events landed again double every count. The
+    # watermark spans the whole file, so no second-copy row is late.
+    from big_data_in_agriculture_spark.sources.upsert import upsert_parquet
+
+    width = spark.conf.get("spark.sql.shuffle.partitions")
+    sink, chk = str(tmp_path / "sink"), str(tmp_path / "chk")
+    rollup = sev.daily_event_rollup(
+        sev.read_events_stream(spark, str(landing)), watermark="60 days"
+    )
+    (
+        rollup.writeStream.outputMode("update")
+        .option("checkpointLocation", chk)
+        .foreachBatch(
+            lambda bdf, _: upsert_parquet(spark, bdf, sink, ["event_type", "day"])
+        )
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination(120)
+    )
+    first = {
+        (r["event_type"], r["day"]): r["n_events"]
+        for r in spark.read.parquet(sink).collect()
+    }
+
+    shutil.copy(f"{SF_DIR}/events.parquet", landing / "batch-001.parquet")
+    q = sev.start_daily_rollup_to_parquet(
+        spark, str(landing), sink, chk, watermark="60 days", available_now=True
+    )
+    q.awaitTermination(120)
+    last = max(int(n) for n in os.listdir(f"{chk}/offsets") if n.isdigit())
+    assert _offset_conf(chk, last)["spark.sql.shuffle.partitions"] == width
+    assert len(_state_partitions(chk)) == int(width)
+    after = {
+        (r["event_type"], r["day"]): r["n_events"]
+        for r in spark.read.parquet(sink).collect()
+    }
+    assert after == {k: 2 * n for k, n in first.items()}
+
+
+def test_rollup_drops_late_rows_without_a_no_data_batch(spark, tmp_path):
+    # The twin of test_watermark_drops_late_rows_across_batches through
+    # the rollup itself, where no run ends in an eviction batch. Spark
+    # filters a batch's late rows at the previous batch's watermark, so
+    # the cutoff lags by one batch: run 2's row, though older than the
+    # watermark run 1 left in the commit log, is still aggregated (its
+    # day holds no state that was evicted before it), and run 3's older
+    # row is dropped.
+    import datetime as dt
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+
+    def land(name, event_id, ts, value):
+        _land(landing, name, [
+            {"event_id": event_id, "ts": ts, "user_id": 10,
+             "event_type": "click", "value": value, "props": "{}"}
+        ])
+
+    sink, chk = str(tmp_path / "sink"), str(tmp_path / "chk")
+
+    def run():
+        q = sev.start_daily_rollup_to_parquet(
+            spark, str(landing), sink, chk, watermark="1 day", available_now=True
+        )
+        q.awaitTermination(120)
+        return len(q.recentProgress)
+
+    land("b0.parquet", 1, dt.datetime(2024, 3, 1, 12), 1.0)
+    assert run() == 1
+    # both rows are older than the watermark (2024-03-01 - 1 day)
+    land("b1.parquet", 2, dt.datetime(2024, 2, 10, 12), 7.0)
+    assert run() == 1
+    land("b2.parquet", 3, dt.datetime(2024, 2, 1, 12), 99.0)
+    assert run() == 1
+    rows = {(r["day"], r["n_events"]) for r in spark.read.parquet(sink).collect()}
+    # the February 1 day never materializes
+    assert rows == {(dt.date(2024, 3, 1), 1), (dt.date(2024, 2, 10), 1)}
